@@ -37,17 +37,17 @@ class Span:
 
 
 class Tracer:
-    """In-memory span recorder. ``jobs_in_group`` (optional) returns the
-    set of Spark job ids of the current job group, so each span also
-    counts the jobs launched while it was open."""
+    """In-memory span recorder. ``jobs_in_group``, once set, returns the
+    Spark job ids of a job group, so each span also counts the jobs
+    launched in the current group while it was open."""
 
-    def __init__(self, jobs_in_group=None):
+    def __init__(self):
         self.spans: list[Span] = []
         self.enabled = False
         self.ctx = ""
         self.group = None
         self._stack: list[int] = []
-        self.jobs_in_group = jobs_in_group
+        self.jobs_in_group = None
 
     def _jobs(self) -> set:
         if self.jobs_in_group is None or self.group is None:
