@@ -37,4 +37,4 @@ def frame_digest(pdf) -> str:
 
 def load_expected() -> dict[str, str]:
     with open(EXPECTED_PATH) as fh:
-        return json.load(fh)["digests"]
+        return json.load(fh)

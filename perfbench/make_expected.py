@@ -3,10 +3,9 @@ query on the benchmark's tables.
 
 Run from the repository root: ``python3 -m perfbench.make_expected``.
 
-A query with DuckDB oracle SQL takes its digest from the oracle; the
-Spark result must match it. A rows-only query takes the digest of its
-own Spark result, which must repeat over three runs. Any disagreement
-is printed and the file is not written.
+Each query's digest is taken from its DuckDB oracle SQL; the Spark
+result must equal it in three runs. Any disagreement, or a query
+without oracle SQL, is printed and the file is not written.
 """
 
 from __future__ import annotations
@@ -29,32 +28,28 @@ def main() -> int:
     ensure_tables()
     spark, _ = set_up(CPUS)
     con = duck_connection(TABLES_DIR)
-    digests, sources, ok = {}, {}, True
+    digests, ok = {}, True
     for name in BATCH_QUERIES:
         spec = get_spec(name)
+        if spec.oracle is None:
+            print(f"{name}: no DuckDB oracle SQL", file=sys.stderr)
+            ok = False
+            continue
+        want = frame_digest(con.execute(spec.oracle).df())
         runs = set()
         for _ in range(3):
             df = spec.fn(spark, TABLES_DIR)
             runs.add(digest(df.columns, df.collect()))
-        if len(runs) != 1:
-            print(f"{name}: Spark result differs between runs", file=sys.stderr)
+        if runs != {want}:
+            print(f"{name}: Spark result differs from the DuckDB oracle", file=sys.stderr)
             ok = False
-            continue
-        got = runs.pop()
-        if spec.oracle is not None:
-            want = frame_digest(con.execute(spec.oracle).df())
-            if want != got:
-                print(f"{name}: Spark result differs from the DuckDB oracle", file=sys.stderr)
-                ok = False
-            digests[name], sources[name] = want, "duckdb-oracle"
-        else:
-            digests[name], sources[name] = got, "spark-rows-only"
-        print(f"{name}: {sources[name]} {digests[name][:12]}")
+        digests[name] = want
+        print(f"{name}: {want[:12]}")
     spark.stop()
     if not ok:
         return 1
     with open(EXPECTED_PATH, "w") as fh:
-        json.dump({"digests": digests, "source": sources}, fh, indent=1, sort_keys=True)
+        json.dump(digests, fh, indent=1, sort_keys=True)
         fh.write("\n")
     return 0
 

@@ -17,6 +17,10 @@ import math
 import time
 from datetime import datetime
 
+DELAY = "2 seconds"  # watermark delay of stateful_value_ewma
+TIMEOUT_S = 90.0  # longest wait for the warm-up or the last micro-batch
+
+
 def _epoch_ms(iso: str) -> float:
     return datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp() * 1000.0
 
@@ -89,8 +93,9 @@ def tail_percentile(n: float) -> float:
 
 
 def latency_summary(batches: list[dict], offered: float) -> dict:
-    """Event-latency median and tail over the batches, and the rate the
-    engine processed rows at (rows over busy time)."""
+    """Event-latency median and tail over the batches, the rate the
+    engine processed rows at (rows over busy time), and micro-batches
+    committed per second of busy time."""
     samples = event_latencies(batches)
     n = sum(w for _, w in samples)
     tail = tail_percentile(n)
@@ -104,6 +109,7 @@ def latency_summary(batches: list[dict], offered: float) -> dict:
         "tail_ms": weighted_quantile(samples, tail / 100.0),
         "offered_rows_per_s": offered,
         "processed_rows_per_s": sum(b["rows"] for b in batches) / busy_s if busy_s else 0.0,
+        "batches_per_s": len(batches) / busy_s if busy_s else 0.0,
     }
 
 
@@ -111,17 +117,15 @@ def latency_summary(batches: list[dict], offered: float) -> dict:
 # reads the rows created while batch 0 ran, as every later batch reads
 # those created while its predecessor ran, and takes about as long
 WARM_BATCHES = 1
+# each micro-batch takes 5-11 s on 4 cores, so a 10 s window would end
+# after one or two of them; always measuring at least two keeps runs
+# alike, and the second reads rows created while a measured batch ran
+MIN_BATCHES = 2
 
 
-def run_stream(spark, seed: int, seconds: float, rate: int, ckpt: str,
-               delay: str = "2 seconds", timeout_s: float = 60.0):
-    """Run the rate stream through ``stateful_value_ewma`` for
-    ``seconds`` after its ``WARM_BATCHES`` warm-up micro-batches have
-    committed, and until the micro-batch then running commits; then
-    stop it.
-
-    Returns the progress dicts of the batches that committed after
-    the warm-up."""
+def _start(spark, seed: int, rate: int, ckpt: str):
+    """Start the rate stream through ``stateful_value_ewma`` into a
+    ``noop`` sink; returns the running query."""
     from pyspark.sql import functions as F
 
     from hello_flink_spark.streaming.stateful import stateful_value_ewma
@@ -133,39 +137,62 @@ def run_stream(spark, seed: int, seconds: float, rate: int, ckpt: str,
         "inv", F.count(F.lit(1)).alias("n"), F.min(created).alias("lo"),
         F.max(created).alias("hi"),
     ).drop("created")
-    out = stateful_value_ewma(ev, delay=delay)
+    out = stateful_value_ewma(ev, delay=DELAY)
     # output invariants: every emitted running average lies in the value
     # range [0, 1000) and counts at least one event
     bad = (F.col("n_events") < 1) | F.col("ewma_value").isNull() | (
         F.col("ewma_value") < 0) | (F.col("ewma_value") >= 1000)
     out = out.observe("out", F.count(F.when(bad, 1)).alias("bad"))
-    q = (
+    return (
         out.writeStream.format("noop")
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .start()
     )
 
-    def last_committed() -> int:
-        return -1 if q.lastProgress is None else q.lastProgress.batchId
 
+def _wait_for_batch(q, batch_id: int) -> None:
+    deadline = time.time() + TIMEOUT_S
+    while q.lastProgress is None or q.lastProgress.batchId < batch_id:
+        if q.exception() is not None:
+            raise RuntimeError(f"stream failed: {q.exception()}")
+        if time.time() > deadline:
+            raise RuntimeError(f"micro-batch {batch_id} did not commit")
+        time.sleep(0.05)
+
+
+def run_stream(spark, seed: int, seconds: float, rate: int, ckpt: str):
+    """Run the rate stream for ``seconds`` after its ``WARM_BATCHES``
+    warm-up micro-batches have committed, and until the micro-batch then
+    running, and at least ``MIN_BATCHES`` after the warm-up, have
+    committed; then stop it.
+
+    Returns the progress dicts of the batches that committed after
+    the warm-up."""
+    q = _start(spark, seed, rate, ckpt)
     try:
-        deadline = time.time() + timeout_s
-        while last_committed() < WARM_BATCHES - 1:
-            if time.time() > deadline or q.exception() is not None:
-                raise RuntimeError(f"stream warm-up did not finish: {q.exception()}")
-            time.sleep(0.05)
+        _wait_for_batch(q, WARM_BATCHES - 1)
         time.sleep(seconds)
         # let the micro-batch in flight at the end of the window commit,
         # so every run measures whole batches up to the window's end
-        in_flight, deadline = last_committed() + 1, time.time() + timeout_s
-        while last_committed() < in_flight and q.exception() is None:
-            if time.time() > deadline:
-                raise RuntimeError("the last measured micro-batch did not commit")
-            time.sleep(0.05)
-        if q.exception() is not None:
-            raise RuntimeError(f"stream failed: {q.exception()}")
+        _wait_for_batch(
+            q, max(q.lastProgress.batchId + 1, WARM_BATCHES + MIN_BATCHES - 1)
+        )
     finally:
         progress = [json.loads(p.json) for p in q.recentProgress]
         q.stop()
     return [p for p in progress if p["batchId"] >= WARM_BATCHES]
+
+
+def startup_batch(spark, seed: int, rate: int, ckpt: str) -> dict:
+    """Start the rate stream, stop it once its first micro-batch (state
+    stores and Python workers started, no rows read yet) has committed,
+    and return that batch's progress dict."""
+    q = _start(spark, seed, rate, ckpt)
+    try:
+        _wait_for_batch(q, 0)
+    finally:
+        progress = [json.loads(p.json) for p in q.recentProgress]
+        q.stop()
+    return progress[0]
+

@@ -122,6 +122,7 @@ def test_latency_reconstruction_on_synthetic_progress():
     assert s["tail_pct"] == 99.5
     assert s["tail_ms"] == pytest.approx(3990, abs=10)
     assert s["processed_rows_per_s"] == pytest.approx(500.0)
+    assert s["batches_per_s"] == pytest.approx(0.5)
 
 
 def test_weighted_quantile_and_tail_percentile():
@@ -154,8 +155,9 @@ def test_tracer_wraps_and_nests():
     f = tr.wrap(lambda x: calls.append(x) or x + 1, "layer.f")
     assert f(1) == 2 and tr.spans == []  # disabled: no span
     tr.enabled = True
-    with tr.span("outer"):
+    with tr.span("outer") as outer:
         f(2)
+    assert outer is tr.spans[0] and outer.end >= tr.spans[1].end
     assert [s.name for s in tr.spans] == ["outer", "layer.f"]
     assert tr.spans[1].parent == 0 and tr.spans[1].end >= tr.spans[1].start
 
@@ -189,4 +191,15 @@ def test_eventlog_totals(tmp_path):
     assert t["spark.spill_bytes"] == 24
     assert t["python.bytes_to_worker"] == 10
     assert t["spark.task_skew"] == pytest.approx(4.0)
-    assert eventlog_totals(str(path))["spark.executor_run_s"] == pytest.approx(1.6)
+
+
+def test_batch_summary_takes_each_querys_fastest_run():
+    times = {"a": (1.0, 0.5), "b": (2.0,), "c": (3.0,), "d": (4.0,), "e": (5.0, 6.0)}
+    recs = [{"query": q, "wall_s": t} for q, ts in times.items() for t in ts]
+    s = engine.batch_summary(recs, [9.0, 8.0])
+    assert s["suite_s"] == pytest.approx(14.5)
+    assert s["query_max_ms"] == pytest.approx(5000.0)
+    # slowest quarter of five queries: the two slowest
+    assert s["query_top_quarter_ms"] == pytest.approx(4500.0)
+    assert s["query_geomean_s"] == pytest.approx((0.5 * 2 * 3 * 4 * 5) ** 0.2)
+    assert s["pass_wall_s"] == pytest.approx(8.5) and s["passes"] == 2

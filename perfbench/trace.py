@@ -56,21 +56,23 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str):
+        """Record a span around the block and yield it (None while
+        disabled); its ``end`` is set when the block exits."""
         if not self.enabled:
-            yield
+            yield None
             return
         parent = self._stack[-1] if self._stack else None
         idx = len(self.spans)
         before = self._jobs()
-        self.spans.append(Span(name, time.perf_counter(), 0.0, parent, self.ctx))
+        span = Span(name, time.perf_counter(), 0.0, parent, self.ctx)
+        self.spans.append(span)
         self._stack.append(idx)
         try:
-            yield
+            yield span
         finally:
             self._stack.pop()
-            s = self.spans[idx]
-            s.end = time.perf_counter()
-            s.jobs = len(self._jobs() - before)
+            span.end = time.perf_counter()
+            span.jobs = len(self._jobs() - before)
 
     def wrap(self, fn, name: str):
         @functools.wraps(fn)
@@ -80,12 +82,12 @@ class Tracer:
 
         return wrapper
 
-    def install(self, functions=LAYER_FUNCTIONS) -> None:
+    def install(self) -> None:
         """Replace each ``module.fn`` with a timing wrapper. Must run
         before the query modules are imported."""
         import importlib
 
-        for mod_name, fn_name in functions:
+        for mod_name, fn_name in LAYER_FUNCTIONS:
             mod = importlib.import_module(mod_name)
             label = mod_name.removeprefix("hello_flink_spark.") + "." + fn_name
             setattr(mod, fn_name, self.wrap(getattr(mod, fn_name), label))
@@ -137,17 +139,17 @@ def layer_totals(spans: list[Span]) -> dict[str, dict[str, float]]:
 
 
 # SQL metrics of the Python exec nodes, as named among a task's
-# accumulables in the event log: (metric, factor to its unit)
+# accumulables in the event log, and the metric each adds to
 PYTHON_ACCUMULABLES = {
-    "data sent to Python workers": ("python.bytes_to_worker", 1.0),
-    "data returned from Python workers": ("python.bytes_from_worker", 1.0),
-    "time to run Python workers": ("python.run_ms", 1.0),
+    "data sent to Python workers": "python.bytes_to_worker",
+    "data returned from Python workers": "python.bytes_from_worker",
+    "time to run Python workers": "python.run_ms",
 }
 
 
-def eventlog_totals(path: str, groups: set[str] | None = None) -> dict[str, float]:
+def eventlog_totals(path: str, groups: set[str]) -> dict[str, float]:
     """Sum task metrics from a Spark event log, restricted to jobs whose
-    job group is in ``groups`` (all jobs when None).
+    job group is in ``groups``.
 
     ``spark.task_skew`` is the median over stages (with >= 2 tasks) of
     the slowest task's run time over the median task's."""
@@ -164,7 +166,7 @@ def eventlog_totals(path: str, groups: set[str] | None = None) -> dict[str, floa
                     stage_group[sid] = group
             elif kind == "SparkListenerTaskEnd":
                 sid = ev.get("Stage ID")
-                if groups is not None and stage_group.get(sid) not in groups:
+                if stage_group.get(sid) not in groups:
                     continue
                 m = ev.get("Task Metrics") or {}
                 run_ms = m.get("Executor Run Time", 0)
@@ -183,7 +185,7 @@ def eventlog_totals(path: str, groups: set[str] | None = None) -> dict[str, floa
                 for acc in (ev.get("Task Info") or {}).get("Accumulables", ()):
                     metric = PYTHON_ACCUMULABLES.get(acc.get("Name"))
                     if metric:
-                        tot[metric[0]] += float(acc.get("Update") or 0) * metric[1]
+                        tot[metric] += float(acc.get("Update") or 0)
     skews = [
         max(runs) / max(statistics.median(runs), 1.0)
         for runs in stage_runs.values()
