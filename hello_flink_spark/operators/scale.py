@@ -54,17 +54,28 @@ HOT_BROADCAST_MAX = 100_000  # rows; ~a few MB of short strings — far
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Repartition a NARROW driving frame up to the session's default
-    parallelism when the scan produced fewer splits than cores.
+    """Repartition the frame that feeds a CPU-heavy per-row stage up
+    to the session's default parallelism when the scan produced fewer
+    splits than cores. That target is the session's core count, the
+    same number ``session.get_spark`` sets as its shuffle partitions.
 
-    The multimodal tier's dominant term is a per-row Python decode
-    stage (``mapInPandas``); a modest fixture parquet arrives as ONE
-    split, which would serialize that whole stage on one core
-    (measured 2.6 s → 1.2-1.45 s for the audio-fingerprint query at
-    sf0.1). Only apply this to the narrow id/key projection that
-    FEEDS the decode — shuffling ~8-byte rows is negligible against
-    the Python work it parallelizes. At cluster scale a 100 TB scan
-    already arrives many-split and this is a no-op."""
+    A modest fixture parquet arrives as ONE split, which would
+    serialize the whole stage on one core. Two kinds of caller:
+
+    - the multimodal decode chains (``mapInPandas``) spread only the
+      narrow id projection that feeds the decode — shuffling ~8-byte
+      rows is negligible against the Python work it parallelizes
+      (measured 2.6 s → 1.2-1.45 s for the audio-fingerprint query at
+      sf0.1);
+    - the shingle / gram / md5 map stages of the near-dup tier spread
+      the documents rows themselves, text included (e.g.
+      ``dedup_minhash_sql`` in extras.py; 3.6x at sf1): the text must
+      reach the stage anyway, so shuffling it once buys every core for
+      the dominant explode + hash work.
+
+    At cluster scale a 100 TB scan already arrives many-split and this
+    is a no-op, so the shuffle of a wide frame is paid only when the
+    input is small."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

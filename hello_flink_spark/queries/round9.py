@@ -450,11 +450,13 @@ def multimodal_dedup_phash_incremental(spark: SparkSession, sf_dir: str) -> Data
 # the in-batch dedup) and doc_id % 7 == 0 & % 3 != 0 rows duplicate
 # AGAINST the index (dropped by the anti-join). Both dedup tiers are
 # non-vacuous by construction on the duplicate-free fixture corpus.
-# Bucket count matches spark.sql.shuffle.partitions: co-partitioning
-# with the batch side's aggregation output is what lets the probe join
-# reuse the index layout with ZERO index-side exchange (a bucket count
-# that differs from the join's partitioning forces Spark to reshuffle
-# one side anyway — at scale you pick ONE fan-out and stick to it).
+# The bucket count is the persisted index's own layout, not the
+# session's shuffle partition count: incremental_merge repartitions the
+# batch side into INCR_BUCKETS by fp, so the probe join reuses the index
+# layout with ZERO index-side exchange at any core count (a batch
+# partitioning that differs from the bucket count forces Spark to
+# reshuffle one side anyway — at scale you pick ONE fan-out and stick
+# to it).
 INCR_BUCKETS = 32
 
 _INCR_ORACLE = """
@@ -538,6 +540,7 @@ def incremental_merge(index: DataFrame, batch_raw: DataFrame) -> DataFrame:
     join's fan-out it is Exchange-free on that side."""
     batch = (
         batch_raw.select(F.md5(F.col("text").cast("binary")).alias("fp"), "doc_id")
+        .repartition(INCR_BUCKETS, "fp")
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keep_doc_id"))
     )

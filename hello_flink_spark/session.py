@@ -1,10 +1,19 @@
 """SparkSession factory with the engine's physical defaults.
 
-SURVEY §4.2: AQE on, shuffle partitions sized for the local test rig
-but AQE-coalesced, Arrow enabled for the Python boundary, UTC session
-timezone so timestamp values are bit-identical to the DuckDB oracle,
-RocksDB state store for streaming state (bounded keyed state is a
-100 TB requirement).
+SURVEY §4.2: AQE on, one shuffle partition per core (AQE coalesces
+batch shuffles further), Arrow enabled for the Python boundary, UTC
+session timezone so timestamp values are bit-identical to the DuckDB
+oracle, RocksDB state store for streaming state (bounded keyed state is
+a 100 TB requirement).
+
+A stream fixes its state-partition count from
+``spark.sql.shuffle.partitions`` when it first starts, and AQE never
+coalesces state partitions, so each stateful micro-batch runs one task
+per state partition. One partition per core makes that one task wave
+per micro-batch, each paying its state-store load and commit and its
+Python-runner calls once. A stream restarted from a checkpoint keeps
+the count recorded in its offset log: checkpoints written when this
+default was 32 stay at 32.
 
 On a real cluster these configs are a starting point; the operators in
 this package are written so their *plans* scale (broadcast hints on
@@ -17,13 +26,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = "32"
-
 
 def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32;
+    the master is ``local[cpus]``. Shuffle and stream state partitions
+    equal the session's core count, read as
+    ``sparkContext.defaultParallelism`` once the context is up, so
+    ``cpus="*"`` resolves to the machine's cores.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -33,7 +44,6 @@ def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> S
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         # dims in the star schema are tiny; let Catalyst broadcast freely.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # -- determinism vs the DuckDB oracle ------------------------------
@@ -56,5 +66,6 @@ def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> S
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark

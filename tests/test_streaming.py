@@ -2099,12 +2099,16 @@ def test_stateful_ewma_equals_batch_shadow(spark, sf_dir, ooo_flush_replay_dir):
     double fold in EVENT-TIME order), n_events included — driven over
     the out-of-order-within-delay replay, which the round-8 reorder
     buffer must fold back into true time order (arrival-order folding
-    provably diverges on a recurrence)."""
-    run_to_memory(
+    provably diverges on a recurrence). The session sizes the state
+    partitions to its cores: one task wave per micro-batch."""
+    q = run_to_memory(
         stateful.stateful_value_ewma(_stream(spark, ooo_flush_replay_dir)),
         "t_ewma",
         "update",
     )
+    cores = spark.sparkContext.defaultParallelism
+    assert q.lastProgress.stateOperators[0].numShufflePartitions == cores
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
         spark.table("t_ewma")
