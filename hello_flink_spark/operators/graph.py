@@ -82,7 +82,10 @@ STAR_TEST_ROUNDS = 3  # rounds that pay the node-keyed star test: the
 # rows PER round it runs in — a net loss on high-diameter graphs that
 # take many rounds (review r18). Near-dup pair graphs converge in 1-2
 # rounds, so the test runs exactly where it wins; deeper graphs fall
-# back to the pre-r18 shuffle-free checksum + sig-equality exit.
+# back to the pre-r18 shuffle-free checksum + sig-equality exit. The
+# entry _checksum(cur), before any round, always pays the star test,
+# whatever STAR_TEST_ROUNDS is: a caller whose edges already form a
+# star forest then runs zero rounds.
 
 
 def _checksum(canon: DataFrame, star_test: bool = True) -> tuple[int, int, bool]:

@@ -15,6 +15,20 @@ Python-runner calls once. A stream restarted from a checkpoint keeps
 the count recorded in its offset log: checkpoints written when this
 default was 32 stay at 32.
 
+Python workers fork from the engine's daemon,
+:mod:`hello_flink_spark.worker_daemon` (``spark.python.daemon.module``).
+Every Python task calls ``importlib.invalidate_caches()``, and CPython
+before 3.13 answers it by re-reading the whole directory of every zip
+importer's archive: a worker has 16, over ``pyspark.zip`` (1,328
+entries) and the Spark core jar (5,359). That is ~120 ms per task on
+an idle core and 210-310 ms under a stream's load, twice per stateful
+task (data, then timeouts). The daemon's importers re-read an archive
+only when its inode, size or mtime changed, so an unchanged one costs
+a ``stat``. The package must be importable where the daemon starts:
+the local master gets that from ``spark.executorEnv.PYTHONPATH`` (the
+package's parent directory); a cluster must install the package on
+its executors, as it already must for any query UDF.
+
 On a real cluster these configs are a starting point; the operators in
 this package are written so their *plans* scale (broadcast hints on
 dims, partial aggregation, pushed filters) independent of these knobs.
@@ -25,6 +39,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> SparkSession:
@@ -55,6 +71,10 @@ def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> S
         # -- Python boundary ------------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # Python workers fork from the engine's daemon (module docstring);
+        # the package's parent dir lets it start from any driver cwd.
+        .config("spark.python.daemon.module", "hello_flink_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # -- streaming state ------------------------------------------------
         .config(
             "spark.sql.streaming.stateStore.providerClass",

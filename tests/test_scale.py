@@ -405,3 +405,64 @@ def test_spread_small_scan_widens_one_split_and_passes_wide_through(spark):
     wide = spark.range(1000).repartition(target + 4)
     out = spread_small_scan(wide)
     assert out is wide  # identical object: no plan node added
+
+
+def test_worker_daemon_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """The engine's daemon hook (worker_daemon.invalidate_if_changed)
+    makes repeated importlib.invalidate_caches() calls — one per Python
+    task — cost a stat per zip importer instead of a directory re-read,
+    while an archive rewritten on disk is still re-read."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from hello_flink_spark import worker_daemon
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("m1.py", "X = 1\n")
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda path: reads.append(path) or read_directory(path)
+    )
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", worker_daemon.invalidate_if_changed
+    )
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module("m1").X == 1
+        reads.clear()
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(archive) <= 1
+
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("m1.py", "X = 1\n")
+            zf.writestr("m2.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert importlib.import_module("m2").Y == 2
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        for name in ("m1", "m2"):
+            sys.modules.pop(name, None)
+
+
+def test_session_python_workers_run_through_engine_daemon(spark):
+    """get_spark points spark.python.daemon.module at the engine's
+    daemon, so every Python worker carries its zip-importer hook."""
+    import pandas as pd
+
+    from hello_flink_spark import worker_daemon
+
+    def hook_name(batches):
+        import zipimport
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"f": [zipimport.zipimporter.invalidate_caches.__name__]})
+
+    got = {r.f for r in spark.range(4).mapInPandas(hook_name, "f string").collect()}
+    assert got == {worker_daemon.invalidate_if_changed.__name__}
