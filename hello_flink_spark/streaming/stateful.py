@@ -31,6 +31,22 @@ list state = an array column in it, timers = setTimeoutTimestamp);
 port one processor to TWS with named states + TTL when protobuf
 exists in the deployment image.
 
+Key groups: the four recurrences that share the (ts, event_id, value)
+reorder buffer (stateful_value_ewma, stateful_autocorr,
+stateful_delta_trigger, stateful_cusum) store their per-user state the
+way Flink stores keyed state, in key groups ([F] KeyGroupRange). Users
+hash into ``KEY_GROUPS = 128`` groups, Flink's default lower bound for
+max parallelism; each group is one struct-of-arrays state row, and
+``_key_group_fold`` runs the per-user fold for every user of a group
+in one Python call. PySpark's per-call cost (Arrow to pandas per
+column, a GroupState, output frames) is then paid once per touched
+group per micro-batch, not once per user. The price: a touched group
+decodes and re-encodes all its users' scalars and held rows, about a
+µs per user, where a per-user call costs milliseconds. Which design
+wins depends on users per state partition against users touched per
+micro-batch. ``KEY_GROUPS`` is fixed, not an option: a checkpoint's
+state keys depend on it (docs/SEMANTICS.md §13).
+
 Ordering contract: each processor sorts its per-key batch by event
 time; the replay harness delivers chunks in time order, so cross-batch
 order matches event order (the same assumption Flink tutorials make
@@ -40,7 +56,7 @@ with ascending-timestamp sources).
 from __future__ import annotations
 
 from functools import partial
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -443,16 +459,20 @@ def _reorder_split(buf: list, arrivals: list, cutoff: int | None):
 
 
 def _arm_release_timer(state: GroupState, buf: list, cutoff: int | None, tz: str) -> None:
-    """Event-time timer at the earliest held row (clamped future of the
-    watermark) so the buffer drains when the watermark advances on
-    OTHER keys' data — the mechanism behind the bounded-input
-    MAX_WATERMARK flush."""
+    """Event-time timer at the earliest held row so the buffer drains
+    when the watermark advances on OTHER keys' data — the mechanism
+    behind the bounded-input MAX_WATERMARK flush. Spark fires a timer
+    in the first batch whose watermark is strictly above it, which is
+    the batch whose cutoff releases the row (ts < cutoff): the timer
+    sits on the row's own millisecond, floored at the watermark (Spark
+    refuses an earlier one) and at 1 ms before the first watermark
+    (timers must be positive)."""
     if buf:
-        wm_ms = 0 if cutoff is None else _local_ns_to_epoch_ms(cutoff, tz)
-        state.setTimeoutTimestamp(max(_local_ns_to_epoch_ms(buf[0][0], tz), wm_ms + 1))
+        floor_ms = 1 if cutoff is None else _local_ns_to_epoch_ms(cutoff, tz)
+        state.setTimeoutTimestamp(max(_local_ns_to_epoch_ms(buf[0][0], tz), floor_ms))
 
 
-_DRAIN_CAST = {"event_id": int, "event_type": str, "value": float}
+_DRAIN_CAST = {"user_id": int, "event_id": int, "event_type": str, "value": float}
 
 
 def _drain_arrivals(
@@ -473,9 +493,7 @@ def _drain_arrivals(
         pdf, ts = pdf[keep], ts[keep]
     series = [ts] + [pdf[c] for c in cols]
     casts = [int] + [_DRAIN_CAST[c] for c in cols]
-    return [
-        tuple(f(x) for f, x in zip(casts, row)) for row in zip(*series)
-    ], cutoff
+    return list(zip(*(map(f, s.tolist()) for f, s in zip(casts, series)))), cutoff
 
 
 def _markov(
@@ -675,53 +693,145 @@ def stateful_burst_detector(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stateful_value_ewma — streaming twin of queries/round7.py::events_value_ewma
+# key-group state — the four recurrences that share the (ts, event_id,
+# value) reorder buffer: stateful_value_ewma (twin of round7's
+# events_value_ewma), stateful_autocorr (events_autocorrelation),
+# stateful_delta_trigger and stateful_cusum (round9's events_delta_trigger
+# and events_cusum_alarms)
 # ---------------------------------------------------------------------------
 
+# [F] KeyGroupRangeAssignment's default lower bound for max parallelism.
+# Fixed, not an option: it decides which state row holds a user, so a
+# checkpoint is readable only under the value that wrote it. At
+# local[32] it still leaves about 4 groups per state partition.
+KEY_GROUPS = 128
 
-def _ewma(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+
+class _Recurrence(NamedTuple):
+    """A per-user recurrence run by ``_key_group_fold``.
+
+    ``fold(user, scalars or None, ready rows)`` folds one user's
+    released ``(ts_ns, event_id, value)`` rows, in order, onto its
+    scalar state and returns ``(scalars, output rows)``. ``scalars``
+    names the per-user state fields as (name, type) pairs."""
+
+    fold: Callable
+    scalars: tuple
+    output: str
+    mode: str
+
+    @property
+    def columns(self) -> list[str]:
+        return [f.split()[0] for f in self.output.split(",")]
+
+    @property
+    def state(self) -> str:
+        """One state row per key group, struct-of-arrays: the users that
+        hold scalars, one array per scalar, then the group's held rows
+        tagged with their user."""
+        scalars = "".join(f"{n} array<{t}>, " for n, t in self.scalars)
+        return (
+            f"uid array<long>, {scalars}buf_uid array<long>, "
+            "buf_ts array<long>, buf_eid array<long>, buf_val array<double>"
+        )
+
+
+def _columns(rows: list, width: int) -> list[list]:
+    return [list(c) for c in zip(*rows)] or [[] for _ in range(width)]
+
+
+def _key_group_fold(
+    tz: str,
+    op: _Recurrence,
+    key: Tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-user EWMA ValueState + watermark-delay reorder buffer
-    (VERDICT r07 #7, extended round-8 to every order-sensitive
-    stateful op): rows fold in true (ts, event_id) order once the
-    watermark passes them, so the recurrence — which is
-    order-sensitive by definition — matches the batch fold under ANY
-    within-delay out-of-orderness, not just in-order replays. State =
-    (ewma, n) + the in-flight row window."""
+    """One call per key group per micro-batch: drop below-watermark
+    arrivals, then for each user with held or arriving rows merge them
+    through ``_reorder_split`` and fold its READY rows with ``op.fold``.
+    Users with nothing ready fold and emit nothing; users with no rows
+    are carried through unchanged. Writes the group's one state row,
+    arms one timer at its earliest held row and yields one frame with
+    every user's output rows. A first-seen user whose every arrival is
+    late gets no state; a user, once in the state, stays (every fold
+    returns its scalars), so no group ever empties."""
+    if state.exists:
+        uid, *cols, buid, bts, beid, bval = state.get
+        scalars = dict(zip(uid, zip(*cols)))
+        held: dict = {}
+        for u, *row in zip(buid, bts, beid, bval):
+            held.setdefault(u, []).append(tuple(row))
+    else:
+        scalars, held = {}, {}
+    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("user_id", "event_id", "value"))
+    arriving: dict = {}
+    for t, u, e, v in arrivals:
+        arriving.setdefault(u, []).append((t, e, v))
+
+    out: list = []
+    for u in sorted(held.keys() | arriving.keys()):
+        ready, held[u] = _reorder_split(held.get(u, []), arriving.get(u, []), cutoff)
+        if ready:
+            scalars[u], rows = op.fold(u, scalars.get(u), ready)
+            out += rows
+    held = {u: b for u, b in held.items() if b}
+    if scalars or held:
+        users = sorted(scalars)
+        bufs = [(u, *r) for u in sorted(held) for r in held[u]]
+        state.update(
+            (
+                users,
+                *_columns([scalars[u] for u in users], len(op.scalars)),
+                *_columns(bufs, 4),
+            )
+        )
+        _arm_release_timer(
+            state, [min(b[0] for b in held.values())] if held else [], cutoff, tz
+        )
+    yield pd.DataFrame(out, columns=op.columns)
+
+
+def _key_grouped(events: DataFrame, delay: str):
+    """The events watermarked at ``delay`` and grouped by key group
+    (``applyInPandasWithState`` takes named grouping columns only)."""
+    return (
+        events.withWatermark("ts", delay)
+        .withColumn("kg", F.pmod(F.hash("user_id"), F.lit(KEY_GROUPS)))
+        .groupBy("kg")
+    )
+
+
+def _by_key_group(events: DataFrame, delay: str, op: _Recurrence) -> DataFrame:
+    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
+    return _key_grouped(events, delay).applyInPandasWithState(
+        partial(_key_group_fold, tz, op),
+        outputStructType=op.output,
+        stateStructType=op.state,
+        outputMode=op.mode,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _ewma(user: int, scalars, ready: list):
+    """EWMA ValueState (ewma, n): the recurrence is order-sensitive by
+    definition, so it folds the reorder buffer's releases in true
+    (ts, event_id) order. Emits the running value once per release."""
     from hello_flink_spark.queries.round7 import EWMA_ALPHA
 
-    if state.exists:
-        cur0, n, bts, beid, bval = state.get
-        cur = cur0 if n else None
-        buf = list(zip(bts, beid, bval))
-    else:
-        cur, n, buf = None, 0, []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "value"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-
+    cur, n = scalars or (None, 0)
     for _, _, v in ready:
         cur = v if cur is None else EWMA_ALPHA * v + (1 - EWMA_ALPHA) * cur
         n += 1
-    if n or buf:
-        state.update(
-            (
-                cur if n else 0.0,
-                n,
-                [t for t, _, _ in buf],
-                [e for _, e, _ in buf],
-                [v for _, _, v in buf],
-            )
-        )
-        _arm_release_timer(state, buf, cutoff, tz)
-    if ready and n:
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "ewma_value": [cur]}
-        )
-    else:
-        # nothing folded this batch: the running value is unchanged,
-        # so update mode emits nothing (ADVICE r07)
-        yield pd.DataFrame([])
+    return (cur, n), [(user, n, cur)]
+
+
+_EWMA = _Recurrence(
+    _ewma,
+    (("ewma", "double"), ("n", "long")),
+    "user_id long, n_events long, ewma_value double",
+    "update",
+)
 
 
 def stateful_value_ewma(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
@@ -730,63 +840,26 @@ def stateful_value_ewma(events: DataFrame, delay: str = "30 minutes") -> DataFra
     rows from the reorder buffer (VERDICT r07 #7, extended round-8:
     the recurrence folds in true event-time order under any
     within-delay out-of-orderness). State = two scalars + the
-    in-flight row window per key; below-watermark arrivals drop.
+    in-flight row window per user, in key-group rows; below-watermark
+    arrivals drop.
     ``delay`` is the watermark delay (= reorder-buffer horizon): the
     fixture goldens use the 30 min default; the throughput probe
     (scripts/streaming_throughput.py) shortens it so releases happen
     within the probe window — the buffer size scales with
     delay x per-key rate either way."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", delay).groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_ewma, tz),
-        outputStructType="user_id long, n_events long, ewma_value double",
-        stateStructType=(
-            "ewma double, n long, buf_ts array<long>, buf_eid array<long>, "
-            "buf_val array<double>"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _by_key_group(events, delay, _EWMA)
 
 
-# ---------------------------------------------------------------------------
-# stateful_autocorr — streaming twin of queries/round7.py::events_autocorrelation
-# ---------------------------------------------------------------------------
-
-
-def _autocorr(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user lag-1 Pearson moments as ValueState: seven scalars
-    (prev value, n, Σx, Σy, Σxy, Σx², Σy²) — the incremental form of
-    the batch LAG+corr plan, O(1) state per key. Each micro-batch
-    folds its in-order values into the moments and emits the running
-    correlation (update mode); the sample-corr denominator uses
-    n-1-normalized moments so the result equals covar_samp/(sx·sy)."""
+def _autocorr(user: int, scalars, ready: list):
+    """Lag-1 Pearson moments as ValueState: seven scalars (prev value,
+    n, Σx, Σy, Σxy, Σx², Σy²) — the incremental form of the batch
+    LAG+corr plan, O(1) state per user. Each release folds its values
+    into the moments and emits the running correlation; the
+    sample-corr denominator uses n-1-normalized moments so the result
+    equals covar_samp/(sx·sy)."""
     import math
 
-    if state.exists:
-        prev, n, sx, sy, sxy, sxx, syy = state.get[:7]
-        buf = list(zip(state.get[7], state.get[8], state.get[9]))
-    else:
-        prev, n, sx, sy, sxy, sxx, syy = None, 0, 0.0, 0.0, 0.0, 0.0, 0.0
-        buf = []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "value"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-    if not ready:
-        # nothing folded: moments unchanged, update mode emits nothing
-        # (ADVICE r07); still persist/arm the buffer if it exists
-        if buf or state.exists:
-            state.update(
-                (prev, n, sx, sy, sxy, sxx, syy,
-                 [t for t, _, _ in buf], [e for _, e, _ in buf],
-                 [v for _, _, v in buf])
-            )
-            _arm_release_timer(state, buf, cutoff, tz)
-        yield pd.DataFrame([])
-        return
+    prev, n, sx, sy, sxy, sxx, syy = scalars or (None, 0, 0.0, 0.0, 0.0, 0.0, 0.0)
     for _, _, v in ready:
         if prev is not None:
             n += 1
@@ -796,12 +869,6 @@ def _autocorr(
             sxx += v * v
             syy += prev * prev
         prev = v
-    state.update(
-        (prev, n, sx, sy, sxy, sxx, syy,
-         [t for t, _, _ in buf], [e for _, e, _ in buf],
-         [v for _, _, v in buf])
-    )
-    _arm_release_timer(state, buf, cutoff, tz)
     corr = None
     if n >= 2:
         cov = (sxy - sx * sy / n) / (n - 1)
@@ -809,9 +876,18 @@ def _autocorr(
         vy = (syy - sy * sy / n) / (n - 1)
         denom = math.sqrt(vx) * math.sqrt(vy)
         corr = cov / denom if denom > 0 else None
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_pairs": [n], "lag1_autocorr": [corr]}
-    )
+    return (prev, n, sx, sy, sxy, sxx, syy), [(user, n, corr)]
+
+
+_AUTOCORR = _Recurrence(
+    _autocorr,
+    (
+        ("prev", "double"), ("n", "long"), ("sx", "double"), ("sy", "double"),
+        ("sxy", "double"), ("sxx", "double"), ("syy", "double"),
+    ),
+    "user_id long, n_pairs long, lag1_autocorr double",
+    "update",
+)
 
 
 def stateful_autocorr(events: DataFrame) -> DataFrame:
@@ -820,20 +896,98 @@ def stateful_autocorr(events: DataFrame) -> DataFrame:
     rows fold in event-time order via the watermark-delay reorder
     buffer (round-8 extension of VERDICT r07 #7), zero-variance
     series yield NULL exactly like the batch try_divide form."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", "30 minutes").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_autocorr, tz),
-        outputStructType="user_id long, n_pairs long, lag1_autocorr double",
-        stateStructType=(
-            "prev double, n long, sx double, sy double, sxy double, "
-            "sxx double, syy double, buf_ts array<long>, "
-            "buf_eid array<long>, buf_val array<double>"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _by_key_group(events, "30 minutes", _AUTOCORR)
+
+
+def _delta_trigger(user: int, scalars, ready: list):
+    """DeltaTrigger state machine: the trigger is a recurrence (the
+    baseline updates only at fires), so fold order matters. State =
+    four scalars (baseline, n, total, fires); each fire emits an
+    immutable snapshot row (append mode)."""
+    from hello_flink_spark.queries.round9 import DELTA_TRIGGER_THRESH
+
+    baseline, n, total, fires = scalars or (None, 0, 0.0, 0)
+    rows = []
+    for _, _, v in ready:
+        v = float(v)
+        n += 1
+        total += v
+        if baseline is None:
+            baseline = v
+        elif abs(v - baseline) > DELTA_TRIGGER_THRESH:
+            fires += 1
+            baseline = v
+            rows.append((user, fires, n, round(total, 2), v))
+    return (baseline, n, total, fires), rows
+
+
+_DELTA_TRIGGER = _Recurrence(
+    _delta_trigger,
+    (("baseline", "double"), ("n", "long"), ("total", "double"), ("fires", "long")),
+    "user_id long, fire_seq long, n_events long, total_value double, "
+    "trigger_value double",
+    "append",
+)
+
+
+def stateful_delta_trigger(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
+    """[F] ``GlobalWindows`` + ``DeltaTrigger.of(200, |v − v_last|)``
+    — the last unmapped trigger strategy, as a keyed state machine
+    (docs/SEMANTICS.md §3; count + processing-time triggers were
+    mapped in round 3): the first element seeds the delta baseline
+    without firing; each later element fires iff it deviates from the
+    baseline by more than the threshold, emitting the global window's
+    running (count, sum) snapshot and re-seeding the baseline — the
+    emit-on-meaningful-change shape. Fires are immutable → append
+    mode. State is FOUR scalars + the reorder-buffer window per user
+    (the trigger never buffers the window contents — running
+    aggregates carry them), and the reorder buffer gives the
+    recurrence true event-time fold order under any within-delay
+    out-of-orderness, golden-matched to the batch shadow
+    ``events_delta_trigger``."""
+    return _by_key_group(events, delay, _DELTA_TRIGGER)
+
+
+def _cusum(user: int, scalars, ready: list):
+    """CUSUM (Page's test): s ← max(0, s + v − μ − k) with alarm +
+    restart at the h crossing — a recurrence whose restart couples
+    every step to the alarm history, so fold order matters exactly
+    like the delta trigger. State = three scalars (s, n, alarms)."""
+    from hello_flink_spark.queries.round9 import CUSUM_H, CUSUM_K, CUSUM_MU
+
+    s, n, alarms = scalars or (0.0, 0, 0)
+    rows = []
+    for _, _, v in ready:
+        n += 1
+        # pre-associated d-form: identical IEEE op sequence to the
+        # batch lockstep scan / reference fold / recursive-CTE oracle
+        s = max(0.0, s + (float(v) - CUSUM_MU - CUSUM_K))
+        if s > CUSUM_H:
+            alarms += 1
+            rows.append((user, alarms, n, round(s, 6), float(v)))
+            s = 0.0
+    return (s, n, alarms), rows
+
+
+_CUSUM = _Recurrence(
+    _cusum,
+    (("s", "double"), ("n", "long"), ("alarms", "long")),
+    "user_id long, alarm_seq long, n_events long, cusum_stat double, "
+    "trigger_value double",
+    "append",
+)
+
+
+def stateful_cusum(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
+    """Streaming CUSUM drift alarms (append mode): each h-crossing
+    emits an immutable (user, alarm_seq, n_events, statistic, value)
+    row and restarts the statistic — the online form of the batch
+    detector ``events_cusum_alarms``, golden-matched row-for-row over
+    the out-of-order replay. State is THREE scalars + the reorder
+    buffer per user; the buffer gives the restart-coupled recurrence
+    true event-time fold order under any within-delay
+    out-of-orderness."""
+    return _by_key_group(events, delay, _CUSUM)
 
 
 # ---------------------------------------------------------------------------
@@ -946,198 +1100,6 @@ def stateful_session_funnel(events: DataFrame) -> DataFrame:
         stateStructType=(
             "start long, last long, fv long, fc long, fp long, "
             "buf_ts array<long>, buf_eid array<long>, buf_et array<string>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful_delta_trigger — [F] GlobalWindows + DeltaTrigger.of(thresh, delta)
-# (streaming twin of queries/round9.py::events_delta_trigger)
-# ---------------------------------------------------------------------------
-
-
-def _delta_trigger(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user DeltaTrigger state machine + the watermark-delay
-    reorder buffer: the trigger is a recurrence (the baseline updates
-    only at fires), so fold order matters — rows fold in true
-    (ts, event_id) order once the watermark passes them, exactly like
-    the other order-sensitive stateful ops. State = four scalars
-    (baseline, n, total, fires) + the in-flight row window; each fire
-    emits an immutable snapshot row (append mode)."""
-    from hello_flink_spark.queries.round9 import DELTA_TRIGGER_THRESH
-
-    if state.exists:
-        baseline0, has_base, n, total, fires, bts, beid, bval = state.get
-        baseline = baseline0 if has_base else None
-        buf = list(zip(bts, beid, bval))
-    else:
-        baseline, n, total, fires, buf = None, 0, 0.0, 0, []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "value"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-
-    out: list[dict] = []
-    for _, _, v in ready:
-        v = float(v)
-        n += 1
-        total += v
-        if baseline is None:
-            baseline = v
-        elif abs(v - baseline) > DELTA_TRIGGER_THRESH:
-            fires += 1
-            baseline = v
-            out.append(
-                {
-                    "user_id": key[0],
-                    "fire_seq": fires,
-                    "n_events": n,
-                    "total_value": round(total, 2),
-                    "trigger_value": v,
-                }
-            )
-    if baseline is None and not buf and not state.exists:
-        # first-seen key whose every arrival fell below the watermark
-        # (the _markov/_burst guard, ADVICE r08): no state entry
-        yield pd.DataFrame([])
-        return
-    state.update(
-        (
-            baseline if baseline is not None else 0.0,
-            1 if baseline is not None else 0,
-            n,
-            total,
-            fires,
-            [t for t, _, _ in buf],
-            [e for _, e, _ in buf],
-            [v for _, _, v in buf],
-        )
-    )
-    _arm_release_timer(state, buf, cutoff, tz)
-    yield pd.DataFrame(
-        out, columns=["user_id", "fire_seq", "n_events", "total_value", "trigger_value"]
-    )
-
-
-def stateful_delta_trigger(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
-    """[F] ``GlobalWindows`` + ``DeltaTrigger.of(200, |v − v_last|)``
-    — the last unmapped trigger strategy, as a keyed state machine
-    (docs/SEMANTICS.md §3; count + processing-time triggers were
-    mapped in round 3): the first element seeds the delta baseline
-    without firing; each later element fires iff it deviates from the
-    baseline by more than the threshold, emitting the global window's
-    running (count, sum) snapshot and re-seeding the baseline — the
-    emit-on-meaningful-change shape. Fires are immutable → append
-    mode. State is FOUR scalars + the reorder-buffer window per key
-    (the trigger never buffers the window contents — running
-    aggregates carry them), and the reorder buffer gives the
-    recurrence true event-time fold order under any within-delay
-    out-of-orderness, golden-matched to the batch shadow
-    ``events_delta_trigger``."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", delay).groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_delta_trigger, tz),
-        outputStructType=(
-            "user_id long, fire_seq long, n_events long, "
-            "total_value double, trigger_value double"
-        ),
-        stateStructType=(
-            "baseline double, has_base long, n long, total double, fires long, "
-            "buf_ts array<long>, buf_eid array<long>, buf_val array<double>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful_cusum — streaming CUSUM drift detector
-# (streaming twin of queries/round9.py::events_cusum_alarms)
-# ---------------------------------------------------------------------------
-
-
-def _cusum(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user CUSUM (Page's test) + the watermark-delay reorder
-    buffer: s ← max(0, s + v − μ − k) with alarm + restart at the h
-    crossing — a recurrence whose restart couples every step to the
-    alarm history, so fold order matters exactly like the delta
-    trigger. State = three scalars + the in-flight row window."""
-    from hello_flink_spark.queries.round9 import CUSUM_H, CUSUM_K, CUSUM_MU
-
-    if state.exists:
-        s, n, alarms, bts, beid, bval = state.get
-        buf = list(zip(bts, beid, bval))
-    else:
-        s, n, alarms, buf = 0.0, 0, 0, []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "value"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-
-    out: list[dict] = []
-    for _, _, v in ready:
-        n += 1
-        # pre-associated d-form: identical IEEE op sequence to the
-        # batch lockstep scan / reference fold / recursive-CTE oracle
-        s = max(0.0, s + (float(v) - CUSUM_MU - CUSUM_K))
-        if s > CUSUM_H:
-            alarms += 1
-            out.append(
-                {
-                    "user_id": key[0],
-                    "alarm_seq": alarms,
-                    "n_events": n,
-                    "cusum_stat": round(s, 6),
-                    "trigger_value": float(v),
-                }
-            )
-            s = 0.0
-    if not ready and not buf and not state.exists:
-        # first-seen key whose every arrival fell below the watermark
-        # (the _markov/_burst guard, ADVICE r08): no state entry
-        yield pd.DataFrame([])
-        return
-    state.update(
-        (
-            s,
-            n,
-            alarms,
-            [t for t, _, _ in buf],
-            [e for _, e, _ in buf],
-            [v for _, _, v in buf],
-        )
-    )
-    _arm_release_timer(state, buf, cutoff, tz)
-    yield pd.DataFrame(
-        out, columns=["user_id", "alarm_seq", "n_events", "cusum_stat", "trigger_value"]
-    )
-
-
-def stateful_cusum(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
-    """Streaming CUSUM drift alarms (append mode): each h-crossing
-    emits an immutable (user, alarm_seq, n_events, statistic, value)
-    row and restarts the statistic — the online form of the batch
-    detector ``events_cusum_alarms``, golden-matched row-for-row over
-    the out-of-order replay. State is THREE scalars + the reorder
-    buffer per key; the buffer gives the restart-coupled recurrence
-    true event-time fold order under any within-delay
-    out-of-orderness."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", delay).groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_cusum, tz),
-        outputStructType=(
-            "user_id long, alarm_seq long, n_events long, "
-            "cusum_stat double, trigger_value double"
-        ),
-        stateStructType=(
-            "s double, n long, alarms long, "
-            "buf_ts array<long>, buf_eid array<long>, buf_val array<double>"
         ),
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,

@@ -20,7 +20,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -2957,6 +2957,145 @@ def test_reorder_split_folds_in_event_time_order_any_batching(events, cuts, dela
     folded.extend(ready)
     assert not buf
     assert folded == sorted(kept), "fold order diverged from event-time order"
+
+
+class _TimerGroupState:
+    """The slice of Spark's GroupState ``_key_group_fold`` touches,
+    with Spark's timer rules: a call starts with no timer, and a timer
+    below the watermark (or not positive) is refused."""
+
+    def __init__(self, value, wm_ms: int, timed_out: bool = False):
+        self.value, self.wm_ms, self.hasTimedOut = value, wm_ms, timed_out
+        self.timer = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return tuple(self.value)
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def setTimeoutTimestamp(self, ms):
+        assert 0 < ms and ms >= self.wm_ms, f"timer {ms} below watermark {self.wm_ms}"
+        self.timer = ms
+
+
+def _rows(frame):
+    """Output rows as Arrow hands them to Spark: NaN is null."""
+    import math
+
+    return [
+        tuple(None if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in zip(*(frame[c].tolist() for c in frame.columns))
+    ]
+
+
+@given(
+    events=st.lists(
+        st.tuples(
+            st.integers(0, 30),  # event time, ms past the base
+            st.sampled_from([0, 1, 999_999]),  # ns inside that ms
+            st.integers(0, 7),  # user
+            st.integers(0, 1000),  # value
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    cuts=st.lists(st.integers(0, 39), max_size=8),
+    delay=st.integers(1, 4),
+    groups=st.integers(1, 4),
+)
+# a row exactly at the watermark is held, and must be released by a
+# timeout in the batch whose watermark is 1 ms past it
+@example(
+    events=[(10, 0, 0, 500), (9, 0, 0, 100), (11, 0, 1, 300)], cuts=[1], delay=1, groups=1
+)
+@settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, delay, groups):
+    """``_key_group_fold``, under Spark's call rules (one data call per
+    group with arrivals, then one timeout call per other group whose
+    timer is below the watermark), emits per micro-batch exactly the
+    rows of a per-user reference that runs every user through
+    ``_reorder_split`` and the fold each batch, and ends in the same
+    per-user state — for each of the four folds, with several users
+    per group, rows below the watermark and timeout-only calls."""
+    import pandas as pd
+
+    from hello_flink_spark.streaming import stateful
+    from hello_flink_spark.streaming.stateful import _reorder_split
+
+    base_ms = 1_700_000_000_000
+    rows = [
+        ((base_ms + t) * 1_000_000 + ns, u, i, float(v))
+        for i, (t, ns, u, v) in enumerate(events)
+    ]
+    bounds = sorted({c for c in cuts if c < len(rows)} | {0, len(rows)})
+    batches = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
+    # the watermark each batch runs under; as in Spark, a watermark
+    # advance runs a no-data batch (timeouts only), and a last one
+    # flushes every held row (the bounded-input MAX_WATERMARK)
+    runs, wm, seen = [], 0, 0
+    for batch in batches:
+        runs.append((batch, wm))
+        seen = max([seen] + [r[0] // 1_000_000 for r in batch])
+        if seen - delay > wm:
+            wm = seen - delay
+            runs.append(([], wm))
+    runs.append(([], seen + delay + 100))
+
+    for op in (stateful._EWMA, stateful._AUTOCORR, stateful._DELTA_TRIGGER, stateful._CUSUM):
+        group_state, timers, ref_state, ref_held = {}, {}, {}, {}
+        for batch, wm in runs:
+            cutoff = wm * 1_000_000 if wm else None
+            got = []
+
+            def call(g, frames, timed_out):
+                st_ = _TimerGroupState(group_state.get(g), wm, timed_out)
+                for out in stateful._key_group_fold("UTC", op, (g,), iter(frames), st_):
+                    got.extend(_rows(out))
+                if st_.exists:
+                    group_state[g], timers[g] = st_.value, st_.timer
+
+            by_group: dict = {}
+            for r in batch:
+                by_group.setdefault(r[1] % groups, []).append(r)
+            for g, rs in by_group.items():
+                frame = pd.DataFrame(rs, columns=["ts", "user_id", "event_id", "value"])
+                frame["ts"] = pd.to_datetime(frame["ts"])
+                call(g, [frame], False)
+            for g in [g for g in group_state if g not in by_group]:
+                if timers[g] is not None and timers[g] < wm:
+                    call(g, [], True)
+
+            want = []
+            arriving: dict = {}
+            for t, u, e, v in batch:
+                if cutoff is None or t >= cutoff:
+                    arriving.setdefault(u, []).append((t, e, v))
+            for u in sorted(ref_held.keys() | arriving.keys()):
+                ready, ref_held[u] = _reorder_split(
+                    ref_held.get(u, []), arriving.get(u, []), cutoff
+                )
+                if ready:
+                    ref_state[u], out = op.fold(u, ref_state.get(u), ready)
+                    want += out
+            ref_held = {u: b for u, b in ref_held.items() if b}
+            assert sorted(got, key=lambda r: r[:2]) == sorted(want, key=lambda r: r[:2])
+
+        assert not ref_held
+        final_state = {}
+        for uid, *cols, buid, _, _, _ in group_state.values():
+            assert uid, "a group state row without users"
+            assert not buid, "rows held past the flushing watermark"
+            final_state.update(zip(uid, zip(*cols)))
+        assert final_state == ref_state
 
 
 # ---------------------------------------------------------------------------
