@@ -9,37 +9,23 @@ state store (RocksDB via session factory), Arrow-batched per-group
 Python, event-time timeouts driven by the query watermark. State is a
 flat tuple per key — bounded, evictable, 100 TB-safe (SURVEY §4.2).
 
-API note: Spark 4.x also ships ``transformWithStateInPandas``
-(StatefulProcessor + named ValueState/ListState/MapState + timers —
-the closest 1:1 of Flink's keyed-state API). Probed twice in this
-environment: round 2 (2026-08-13 a.m.) found ``google.protobuf``
-present but broken ("cannot import name 'descriptor'"); the round-3
-re-probe (2026-08-13 p.m.), the round-5 re-probe (2026-08-13), the
-round-6 re-probe, the round-8 re-probe (both 2026-08-14), and the
-round-12, round-13 and round-14 re-probes (2026-08-15/16, all
-unchanged: ``import google`` → ModuleNotFoundError) found NO protobuf
-runtime on the machine
-at all (``import google`` → ModuleNotFoundError;
-``pyspark.sql.streaming.proto.StateMessage_pb2`` fails on it; a
-filesystem sweep found only typeshed stubs, no descriptor_pb2.py
-anywhere, no cached wheel), so the driver↔worker state protocol
-cannot start and vendoring is not possible without a package install,
-which is out of scope for this container. The processors below
-therefore use the stable ``applyInPandasWithState`` API, which
-expresses the same state machines (value state = the state tuple,
-list state = an array column in it, timers = setTimeoutTimestamp);
-port one processor to TWS with named states + TTL when protobuf
-exists in the deployment image.
+API note: Spark 4.x also ships ``transformWithStateInPandas``, the
+closest 1:1 of Flink's keyed-state API, but it cannot start without a
+protobuf runtime, which this deployment lacks (ROADMAP.md, "Dead
+ends"); the processors below use ``applyInPandasWithState``, which
+expresses the same state machines (value state = the state tuple, list
+state = an array column in it, timers = setTimeoutTimestamp).
 
-Key groups: the four recurrences that share the (ts, event_id, value)
-reorder buffer (stateful_value_ewma, stateful_autocorr,
-stateful_delta_trigger, stateful_cusum) store their per-user state the
-way Flink stores keyed state, in key groups ([F] KeyGroupRange). Users
-hash into ``KEY_GROUPS = 128`` groups, Flink's default lower bound for
-max parallelism; each group is one struct-of-arrays state row, and
-``_key_group_fold`` runs the per-user fold for every user of a group
-in one Python call. PySpark's per-call cost (Arrow to pandas per
-column, a GroupState, output frames) is then paid once per touched
+Key groups: the seven operators that share the watermark-delay reorder
+buffer (stateful_markov_transitions, stateful_burst_detector,
+stateful_value_ewma, stateful_autocorr, stateful_delta_trigger,
+stateful_cusum, stateful_session_funnel) store their per-user state
+the way Flink stores keyed state, in key groups ([F] KeyGroupRange).
+Users hash into ``KEY_GROUPS = 128`` groups, Flink's default lower
+bound for max parallelism; each group is one struct-of-arrays state
+row, and ``_key_group_fold`` runs the per-user fold for every user of
+a group in one Python call. PySpark's per-call cost (Arrow to pandas
+per column, a GroupState, output frames) is then paid once per touched
 group per micro-batch, not once per user. The price: a touched group
 decodes and re-encodes all its users' scalars and held rows, about a
 µs per user, where a per-user call costs milliseconds. Which design
@@ -55,6 +41,7 @@ with ascending-timestamp sources).
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from functools import partial
 from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
@@ -403,18 +390,15 @@ def count_window_evictor_stream(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stateful_markov_transitions — [F] KeyedProcessFunction + ValueState
-# (streaming twin of queries/round5.py::events_markov_transitions)
+# the watermark-delay reorder buffer and key-group state — shared by the
+# seven reorder-buffered operators below
 # ---------------------------------------------------------------------------
 
 
 def _wm_cutoff_ns(state: GroupState, tz: str) -> int | None:
     """Watermark cutoff as SESSION-LOCAL naive nanoseconds (the frame
     Arrow delivers ``ts`` in), or None before the first watermark."""
-    try:
-        wm_ms = state.getCurrentWatermarkMs()
-    except Exception:  # noqa: BLE001 — test double without a watermark
-        wm_ms = 0
+    wm_ms = state.getCurrentWatermarkMs()
     if not wm_ms:
         return None
     return (
@@ -458,26 +442,27 @@ def _reorder_split(buf: list, arrivals: list, cutoff: int | None):
     return buf[:k], buf[k:]
 
 
-def _arm_release_timer(state: GroupState, buf: list, cutoff: int | None, tz: str) -> None:
-    """Event-time timer at the earliest held row so the buffer drains
-    when the watermark advances on OTHER keys' data — the mechanism
-    behind the bounded-input MAX_WATERMARK flush. Spark fires a timer
-    in the first batch whose watermark is strictly above it, which is
-    the batch whose cutoff releases the row (ts < cutoff): the timer
-    sits on the row's own millisecond, floored at the watermark (Spark
-    refuses an earlier one) and at 1 ms before the first watermark
-    (timers must be positive)."""
-    if buf:
+def _arm_release_timer(
+    state: GroupState, first_ns: int | None, cutoff: int | None, tz: str
+) -> None:
+    """Event-time timer at the earliest held row or deadline
+    (``first_ns``) so the buffer drains when the watermark advances on
+    OTHER keys' data — the mechanism behind the bounded-input
+    MAX_WATERMARK flush. Spark fires a timer in the first batch whose
+    watermark is strictly above it, which is the batch whose cutoff
+    releases the row (ts < cutoff): the timer sits on the row's own
+    millisecond, floored at the watermark (Spark refuses an earlier
+    one) and at 1 ms before the first watermark (timers must be
+    positive)."""
+    if first_ns is not None:
         floor_ms = 1 if cutoff is None else _local_ns_to_epoch_ms(cutoff, tz)
-        state.setTimeoutTimestamp(max(_local_ns_to_epoch_ms(buf[0][0], tz), floor_ms))
+        state.setTimeoutTimestamp(max(_local_ns_to_epoch_ms(first_ns, tz), floor_ms))
 
 
 _DRAIN_CAST = {"user_id": int, "event_id": int, "event_type": str, "value": float}
 
 
-def _drain_arrivals(
-    tz: str, pdfs: Iterator[pd.DataFrame], state: GroupState, cols: tuple = ()
-):
+def _drain_arrivals(tz: str, pdfs: Iterator[pd.DataFrame], state: GroupState, cols: tuple):
     """Shared arrival intake for the reorder-buffered processors:
     returns (arrival tuples ``(ts_ns, *cols)``, watermark cutoff).
     Below-watermark arrivals (ts < cutoff — Spark's own lateness
@@ -496,210 +481,6 @@ def _drain_arrivals(
     return list(zip(*(map(f, s.tolist()) for f, s in zip(casts, series)))), cutoff
 
 
-def _markov(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user Markov ValueState + WATERMARK-DELAY REORDER BUFFER
-    (VERDICT r07 #7): rows are HELD in state until the watermark
-    passes their event time, then folded onto the carried ``prev``
-    chain in (ts, event_id) order — so an out-of-order event WITHIN
-    the watermark delay that crosses a micro-batch boundary still
-    counts in true event-time order (the r06/r07 arrival-order
-    residual is gone). Each release emits transition-pair count
-    DELTAS (append mode); the sink aggregates them into the matrix.
-    State = one string + the in-flight window of rows — bounded by
-    the watermark delay × per-key rate, the same bound Flink's
-    reorder/timer pattern carries. An event-time timer (earliest
-    buffered row) drains the buffer when the watermark advances on
-    other keys' data — Flink's MAX_WATERMARK end-of-stream flush is
-    the same mechanism at +inf."""
-    if state.exists:
-        prev0, bts, beid, bet = state.get
-        prev = prev0 if prev0 else None
-        buf = list(zip(bts, beid, bet))
-    else:
-        prev, buf = None, []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "event_type"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-
-    pairs: dict = {}
-    for _, _, nxt in ready:
-        if prev is not None:
-            pairs[(prev, nxt)] = pairs.get((prev, nxt), 0) + 1
-        prev = nxt
-    if prev is None and not buf and not state.exists:
-        # a first-seen key whose every arrival fell below the watermark:
-        # writing state here would create a permanent ('', [], [], [])
-        # entry with no timer and no removal path (ADVICE r08) — mirror
-        # _burst's early return instead
-        yield pd.DataFrame([])
-        return
-    state.update(
-        (
-            prev or "",
-            [t for t, _, _ in buf],
-            [e for _, e, _ in buf],
-            [et for _, _, et in buf],
-        )
-    )
-    _arm_release_timer(state, buf, cutoff, tz)
-    if pairs:
-        yield pd.DataFrame(
-            [
-                {"user_id": key[0], "prev_type": a, "next_type": b, "cnt": c}
-                for (a, b), c in sorted(pairs.items())
-            ]
-        )
-    else:
-        yield pd.DataFrame([])
-
-
-def stateful_markov_transitions(events: DataFrame) -> DataFrame:
-    """Streaming first-order Markov transition counting: the batch
-    shadow is queries/round5.py::events_markov_transitions; the golden
-    test sums the emitted per-batch deltas and compares against it.
-
-    Late-data contract (VERDICT r07 #7 — the arrival-order residual is
-    gone): a watermark-delay REORDER BUFFER holds each row in state
-    until the watermark passes its event time, then folds in strict
-    (ts, event_id) order — so ANY out-of-orderness within the
-    watermark delay, micro-batch boundaries included, counts in true
-    event-time order; rows the watermark already passed are dropped
-    (standard late_drop). Streaming deltas sum to the batch shadow
-    over the non-late rows exactly; rows still inside the delay when
-    the stream pauses stay buffered until the watermark moves — the
-    end-of-stream flush is a watermark advance (Flink's MAX_WATERMARK
-    on bounded input; the goldens advance it with a sentinel-key
-    chunk). State = one string + ≤ delay×rate in-flight rows per
-    key."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", "30 minutes").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_markov, tz),
-        outputStructType="user_id long, prev_type string, next_type string, cnt long",
-        stateStructType=(
-            "prev string, buf_ts array<long>, buf_eid array<long>, "
-            "buf_et array<string>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful_burst_detector — streaming twin of round6.events_bot_burst
-# ---------------------------------------------------------------------------
-
-BURST_WINDOW_S = 86400
-
-
-def _burst(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user rolling-24 h burst maximum. State = per-second event
-    counts inside the trailing window (pruned each batch — bounded by
-    window span × rate) + the running max. The batch shadow's RANGE
-    frame is value-based over floored epoch seconds, so the windowed
-    sum here also groups by second and sums seconds in
-    [s − 86399, s] — same arithmetic, incremental state.
-
-    Late-data contract (VERDICT r07 #7, like
-    stateful_markov_transitions): a watermark-delay REORDER BUFFER
-    holds row timestamps in state until the watermark passes them,
-    then folds them in event-time order — a within-delay out-of-order
-    row can never land behind the pruned horizon, because the horizon
-    only advances past seconds the watermark has already passed;
-    below-watermark arrivals are dropped (standard late_drop). The
-    streamed running max equals the batch RANGE frame over the
-    non-late rows, golden-tested on the in-order, out-of-order and
-    late-tail replays (sentinel-key flush chunk = the bounded-input
-    MAX_WATERMARK)."""
-    secs: list[int] = []
-    cnts: list[int] = []
-    max_burst = 0
-    buf: list[int] = []
-    if state.exists:
-        secs, cnts, max_burst = list(state.get[0]), list(state.get[1]), state.get[2]
-        buf = [(int(t),) for t in state.get[3]]
-    counts = dict(zip(secs, cnts))
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state)
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
-
-    if not ready and not buf and not state.exists:
-        # every row for a first-seen key was late: no state, no output
-        yield pd.DataFrame([])
-        return
-    released = bool(ready)
-    for (t,) in ready:
-        s = t // 1_000_000_000
-        counts[s] = counts.get(s, 0) + 1
-
-    if counts and released:
-        ordered = sorted(counts)
-        # windowed sum per present second (two-pointer over sorted secs)
-        lo = 0
-        run = 0
-        vals = [counts[s] for s in ordered]
-        for hi, s in enumerate(ordered):
-            run += vals[hi]
-            while ordered[lo] < s - (BURST_WINDOW_S - 1):
-                run -= vals[lo]
-                lo += 1
-            if run > max_burst:
-                max_burst = run
-        horizon = ordered[-1] - (BURST_WINDOW_S - 1)
-        counts = {s: c for s, c in counts.items() if s >= horizon}
-
-    state.update(
-        (
-            sorted(counts),
-            [counts[s] for s in sorted(counts)],
-            max_burst,
-            [t for (t,) in buf],
-        )
-    )
-    _arm_release_timer(state, buf, cutoff, tz)
-    if released:
-        yield pd.DataFrame({"user_id": [key[0]], "max_burst_24h": [max_burst]})
-    else:
-        # nothing left the buffer this batch: state unchanged except
-        # the buffer itself, so update mode emits nothing (ADVICE r07)
-        yield pd.DataFrame([])
-
-
-def stateful_burst_detector(events: DataFrame) -> DataFrame:
-    """Streaming bot/burst detection: update-mode running maximum of
-    each user's rolling-24 h event count (batch shadow:
-    queries/round6.py::events_bot_burst). The per-user state is one
-    (second → count) map covering a single window span plus the
-    ≤ delay×rate reorder buffer — bounded regardless of stream length,
-    the keyed-state analog of the batch RANGE frame. Below-watermark
-    rows are dropped; within-delay rows fold in event-time order via
-    the reorder buffer (VERDICT r07 #7)."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", "30 minutes").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_burst, tz),
-        outputStructType="user_id long, max_burst_24h long",
-        stateStructType=(
-            "secs array<long>, cnts array<long>, max_burst long, "
-            "buf_ts array<long>"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# key-group state — the four recurrences that share the (ts, event_id,
-# value) reorder buffer: stateful_value_ewma (twin of round7's
-# events_value_ewma), stateful_autocorr (events_autocorrelation),
-# stateful_delta_trigger and stateful_cusum (round9's events_delta_trigger
-# and events_cusum_alarms)
-# ---------------------------------------------------------------------------
-
 # [F] KeyGroupRangeAssignment's default lower bound for max parallelism.
 # Fixed, not an option: it decides which state row holds a user, so a
 # checkpoint is readable only under the value that wrote it. At
@@ -708,21 +489,33 @@ KEY_GROUPS = 128
 
 
 class _Recurrence(NamedTuple):
-    """A per-user recurrence run by ``_key_group_fold``.
+    """A per-user operator run by ``_key_group_fold``.
 
-    ``fold(user, scalars or None, ready rows)`` folds one user's
-    released ``(ts_ns, event_id, value)`` rows, in order, onto its
-    scalar state and returns ``(scalars, output rows)``. ``scalars``
-    names the per-user state fields as (name, type) pairs."""
+    ``fold(user, scalars or None, ready rows, cutoff)`` folds one
+    user's released ``(ts_ns, event_id[, payload])`` rows, in order,
+    onto its scalar state and returns ``(scalars, output rows)``;
+    None scalars drop the user from the group. ``scalars`` names the
+    per-user state fields as (name, type) pairs, ``payload`` the
+    (column, type) each held row carries besides its time and id, if
+    any. ``deadline(scalars)``, if given, is an event time (session-
+    local ns) past which the user is folded even with no rows ready:
+    like a held row, it is due once ``deadline < cutoff``."""
 
     fold: Callable
     scalars: tuple
     output: str
     mode: str
+    payload: tuple | None
+    deadline: Callable | None = None
 
     @property
     def columns(self) -> list[str]:
         return [f.split()[0] for f in self.output.split(",")]
+
+    @property
+    def arrival(self) -> tuple:
+        """The columns drained with each arrival's ``ts``."""
+        return ("user_id", "event_id") + (self.payload[:1] if self.payload else ())
 
     @property
     def state(self) -> str:
@@ -730,9 +523,10 @@ class _Recurrence(NamedTuple):
         hold scalars, one array per scalar, then the group's held rows
         tagged with their user."""
         scalars = "".join(f"{n} array<{t}>, " for n, t in self.scalars)
+        payload = f", buf_val array<{self.payload[1]}>" if self.payload else ""
         return (
             f"uid array<long>, {scalars}buf_uid array<long>, "
-            "buf_ts array<long>, buf_eid array<long>, buf_val array<double>"
+            f"buf_ts array<long>, buf_eid array<long>{payload}"
         )
 
 
@@ -749,31 +543,40 @@ def _key_group_fold(
 ) -> Iterator[pd.DataFrame]:
     """One call per key group per micro-batch: drop below-watermark
     arrivals, then for each user with held or arriving rows merge them
-    through ``_reorder_split`` and fold its READY rows with ``op.fold``.
-    Users with nothing ready fold and emit nothing; users with no rows
-    are carried through unchanged. Writes the group's one state row,
-    arms one timer at its earliest held row and yields one frame with
-    every user's output rows. A first-seen user whose every arrival is
-    late gets no state; a user, once in the state, stays (every fold
-    returns its scalars), so no group ever empties."""
+    through ``_reorder_split`` and fold its READY rows with ``op.fold``;
+    a user whose deadline is due folds too, with or without rows.
+    Users with nothing to fold emit nothing and are carried through
+    unchanged. Writes the group's one state row, arms one timer at its
+    earliest held row or deadline and yields one frame with every
+    user's output rows. A first-seen user whose every arrival is late
+    gets no state; a user whose fold returns None scalars leaves it,
+    and a group left with no users and no held rows is removed."""
+    n = 1 + len(op.scalars)
     if state.exists:
-        uid, *cols, buid, bts, beid, bval = state.get
-        scalars = dict(zip(uid, zip(*cols)))
+        row = state.get
+        scalars = dict(zip(row[0], zip(*row[1:n])))
         held: dict = {}
-        for u, *row in zip(buid, bts, beid, bval):
-            held.setdefault(u, []).append(tuple(row))
+        for u, *r in zip(*row[n:]):
+            held.setdefault(u, []).append(tuple(r))
     else:
         scalars, held = {}, {}
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("user_id", "event_id", "value"))
+    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, op.arrival)
     arriving: dict = {}
-    for t, u, e, v in arrivals:
-        arriving.setdefault(u, []).append((t, e, v))
+    for t, u, *r in arrivals:
+        arriving.setdefault(u, []).append((t, *r))
+    due = set()
+    if op.deadline and cutoff is not None:
+        due = {u for u, s in scalars.items() if op.deadline(s) < cutoff}
 
     out: list = []
-    for u in sorted(held.keys() | arriving.keys()):
+    for u in sorted(held.keys() | arriving.keys() | due):
         ready, held[u] = _reorder_split(held.get(u, []), arriving.get(u, []), cutoff)
-        if ready:
-            scalars[u], rows = op.fold(u, scalars.get(u), ready)
+        if ready or u in due:
+            s, rows = op.fold(u, scalars.get(u), ready, cutoff)
+            if s is None:
+                scalars.pop(u, None)
+            else:
+                scalars[u] = s
             out += rows
     held = {u: b for u, b in held.items() if b}
     if scalars or held:
@@ -783,12 +586,15 @@ def _key_group_fold(
             (
                 users,
                 *_columns([scalars[u] for u in users], len(op.scalars)),
-                *_columns(bufs, 4),
+                *_columns(bufs, 1 + len(op.arrival)),
             )
         )
-        _arm_release_timer(
-            state, [min(b[0] for b in held.values())] if held else [], cutoff, tz
-        )
+        first = [b[0][0] for b in held.values()]
+        if op.deadline:
+            first += map(op.deadline, scalars.values())
+        _arm_release_timer(state, min(first, default=None), cutoff, tz)
+    elif state.exists:
+        state.remove()
     yield pd.DataFrame(out, columns=op.columns)
 
 
@@ -813,7 +619,129 @@ def _by_key_group(events: DataFrame, delay: str, op: _Recurrence) -> DataFrame:
     )
 
 
-def _ewma(user: int, scalars, ready: list):
+# ---------------------------------------------------------------------------
+# stateful_markov_transitions — [F] KeyedProcessFunction + ValueState
+# (streaming twin of queries/round5.py::events_markov_transitions)
+# ---------------------------------------------------------------------------
+
+
+def _markov(user: int, scalars, ready: list, cutoff):
+    """Per-user Markov ValueState (the previous event type): folds the
+    reorder buffer's releases onto the carried ``prev`` chain in
+    (ts, event_id) order — so an out-of-order event WITHIN the
+    watermark delay that crosses a micro-batch boundary still counts
+    in true event-time order (the r06/r07 arrival-order residual is
+    gone, VERDICT r07 #7). Each release emits transition-pair count
+    DELTAS (append mode); the sink aggregates them into the matrix."""
+    prev = scalars[0] if scalars else None
+    pairs: dict = {}
+    for _, _, nxt in ready:
+        if prev is not None:
+            pairs[(prev, nxt)] = pairs.get((prev, nxt), 0) + 1
+        prev = nxt
+    return (prev,), [(user, a, b, c) for (a, b), c in sorted(pairs.items())]
+
+
+_MARKOV = _Recurrence(
+    _markov,
+    (("prev", "string"),),
+    "user_id long, prev_type string, next_type string, cnt long",
+    "append",
+    ("event_type", "string"),
+)
+
+
+def stateful_markov_transitions(events: DataFrame) -> DataFrame:
+    """Streaming first-order Markov transition counting: the batch
+    shadow is queries/round5.py::events_markov_transitions; the golden
+    test sums the emitted per-batch deltas and compares against it.
+
+    Late-data contract (VERDICT r07 #7 — the arrival-order residual is
+    gone): a watermark-delay REORDER BUFFER holds each row in state
+    until the watermark passes its event time, then folds in strict
+    (ts, event_id) order — so ANY out-of-orderness within the
+    watermark delay, micro-batch boundaries included, counts in true
+    event-time order; rows the watermark already passed are dropped
+    (standard late_drop). Streaming deltas sum to the batch shadow
+    over the non-late rows exactly; rows still inside the delay when
+    the stream pauses stay buffered until the watermark moves — the
+    end-of-stream flush is a watermark advance (Flink's MAX_WATERMARK
+    on bounded input; the goldens advance it with a sentinel-key
+    chunk). State = one string + ≤ delay×rate in-flight rows per
+    user, in key-group rows."""
+    return _by_key_group(events, "30 minutes", _MARKOV)
+
+
+# ---------------------------------------------------------------------------
+# stateful_burst_detector — streaming twin of round6.events_bot_burst
+# ---------------------------------------------------------------------------
+
+BURST_WINDOW_S = 86400
+
+
+def _burst(user: int, scalars, ready: list, cutoff):
+    """Per-user rolling-24 h burst maximum. State = per-second event
+    counts inside the trailing window (``secs``/``cnts``, pruned each
+    release — bounded by window span × rate) + the running max. The
+    batch shadow's RANGE frame is value-based over floored epoch
+    seconds, so the windowed sum here also groups by second and sums
+    seconds in [s − 86399, s] — same arithmetic, incremental state.
+    Rows fold in event-time order, so a within-delay out-of-order row
+    can never land behind the pruned horizon: the horizon only
+    advances past seconds the watermark has already passed."""
+    secs, cnts, max_burst = scalars or ([], [], 0)
+    counts = dict(zip(secs, cnts))
+    for t, _ in ready:
+        s = t // 1_000_000_000
+        counts[s] = counts.get(s, 0) + 1
+    ordered = sorted(counts)
+    vals = [counts[s] for s in ordered]
+    # windowed sum per present second (two-pointer over sorted secs)
+    lo = run = 0
+    for hi, s in enumerate(ordered):
+        run += vals[hi]
+        while ordered[lo] < s - (BURST_WINDOW_S - 1):
+            run -= vals[lo]
+            lo += 1
+        max_burst = max(max_burst, run)
+    cut = bisect_left(ordered, ordered[-1] - (BURST_WINDOW_S - 1))
+    return (ordered[cut:], vals[cut:], max_burst), [(user, max_burst)]
+
+
+_BURST = _Recurrence(
+    _burst,
+    (("secs", "array<long>"), ("cnts", "array<long>"), ("max_burst", "long")),
+    "user_id long, max_burst_24h long",
+    "update",
+    None,
+)
+
+
+def stateful_burst_detector(events: DataFrame) -> DataFrame:
+    """Streaming bot/burst detection: update-mode running maximum of
+    each user's rolling-24 h event count (batch shadow:
+    queries/round6.py::events_bot_burst). The per-user state is one
+    (second → count) map covering a single window span plus the
+    ≤ delay×rate reorder buffer — bounded regardless of stream length,
+    the keyed-state analog of the batch RANGE frame. Below-watermark
+    rows are dropped; within-delay rows fold in event-time order via
+    the reorder buffer (VERDICT r07 #7), and a user emits its running
+    max whenever the watermark releases some of its rows. The streamed
+    running max equals the batch RANGE frame over the non-late rows,
+    golden-tested on the in-order, out-of-order and late-tail replays
+    (sentinel-key flush chunk = the bounded-input MAX_WATERMARK)."""
+    return _by_key_group(events, "30 minutes", _BURST)
+
+
+# ---------------------------------------------------------------------------
+# the four value recurrences: stateful_value_ewma (twin of round7's
+# events_value_ewma), stateful_autocorr (events_autocorrelation),
+# stateful_delta_trigger and stateful_cusum (round9's events_delta_trigger
+# and events_cusum_alarms)
+# ---------------------------------------------------------------------------
+
+
+def _ewma(user: int, scalars, ready: list, cutoff):
     """EWMA ValueState (ewma, n): the recurrence is order-sensitive by
     definition, so it folds the reorder buffer's releases in true
     (ts, event_id) order. Emits the running value once per release."""
@@ -831,6 +759,7 @@ _EWMA = _Recurrence(
     (("ewma", "double"), ("n", "long")),
     "user_id long, n_events long, ewma_value double",
     "update",
+    ("value", "double"),
 )
 
 
@@ -850,7 +779,7 @@ def stateful_value_ewma(events: DataFrame, delay: str = "30 minutes") -> DataFra
     return _by_key_group(events, delay, _EWMA)
 
 
-def _autocorr(user: int, scalars, ready: list):
+def _autocorr(user: int, scalars, ready: list, cutoff):
     """Lag-1 Pearson moments as ValueState: seven scalars (prev value,
     n, Σx, Σy, Σxy, Σx², Σy²) — the incremental form of the batch
     LAG+corr plan, O(1) state per user. Each release folds its values
@@ -887,6 +816,7 @@ _AUTOCORR = _Recurrence(
     ),
     "user_id long, n_pairs long, lag1_autocorr double",
     "update",
+    ("value", "double"),
 )
 
 
@@ -899,7 +829,7 @@ def stateful_autocorr(events: DataFrame) -> DataFrame:
     return _by_key_group(events, "30 minutes", _AUTOCORR)
 
 
-def _delta_trigger(user: int, scalars, ready: list):
+def _delta_trigger(user: int, scalars, ready: list, cutoff):
     """DeltaTrigger state machine: the trigger is a recurrence (the
     baseline updates only at fires), so fold order matters. State =
     four scalars (baseline, n, total, fires); each fire emits an
@@ -927,6 +857,7 @@ _DELTA_TRIGGER = _Recurrence(
     "user_id long, fire_seq long, n_events long, total_value double, "
     "trigger_value double",
     "append",
+    ("value", "double"),
 )
 
 
@@ -948,7 +879,7 @@ def stateful_delta_trigger(events: DataFrame, delay: str = "30 minutes") -> Data
     return _by_key_group(events, delay, _DELTA_TRIGGER)
 
 
-def _cusum(user: int, scalars, ready: list):
+def _cusum(user: int, scalars, ready: list, cutoff):
     """CUSUM (Page's test): s ← max(0, s + v − μ − k) with alarm +
     restart at the h crossing — a recurrence whose restart couples
     every step to the alarm history, so fold order matters exactly
@@ -975,6 +906,7 @@ _CUSUM = _Recurrence(
     "user_id long, alarm_seq long, n_events long, cusum_stat double, "
     "trigger_value double",
     "append",
+    ("value", "double"),
 )
 
 
@@ -997,40 +929,30 @@ def stateful_cusum(events: DataFrame, delay: str = "30 minutes") -> DataFrame:
 FUNNEL_GAP_US = 30 * 60 * 1_000_000
 
 
-def _session_funnel(
-    tz: str, key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user session funnel: one active session (start, last, and
-    the three funnel markers fv/fc/fp as µs, -1 = unreached) plus the
-    reorder buffer. Rows fold in event-time order once the watermark
-    releases them; a session CLOSES — emitting (session_start,
-    reached_stage 0-3) — whenever the watermark passes its gap
-    horizon (last + 30 min), in whichever invocation first observes
-    that (new data for the key, or the event-time timer armed at the
-    earliest of next-buffer-release and gap-horizon). The in-order
-    marker scan (first view; first click strictly after it; first
-    purchase strictly after that) computes exactly the batch query's
-    chained conditional MINs."""
-    if state.exists:
-        start, last, fv, fc, fp = state.get[:5]
-        buf = list(zip(state.get[5], state.get[6], state.get[7]))
-        sess = None if start < 0 else [start, last, fv, fc, fp]
-    else:
-        sess, buf = None, []
-    arrivals, cutoff = _drain_arrivals(tz, pdfs, state, ("event_id", "event_type"))
-    ready, buf = _reorder_split(buf, arrivals, cutoff)
+def _funnel_deadline(sess) -> int:
+    """The session's gap horizon (last + 30 min) in ns: once the
+    watermark passes it, no admissible row can extend the session."""
+    return (sess[1] + FUNNEL_GAP_US) * 1000
 
-    out: list[dict] = []
+
+def _session_funnel(user: int, scalars, ready: list, cutoff):
+    """Per-user session funnel: one active session (start, last, and
+    the three funnel markers fv/fc/fp as µs, -1 = unreached). Rows
+    fold in event-time order once the watermark releases them; a
+    session CLOSES — emitting (session_start, reached_stage 0-3) and
+    dropping the user's scalars — once the watermark passes its gap
+    horizon, in the first call that observes it (new rows for the
+    key group, or the group's timer, which the driver arms at the
+    earliest held row or deadline). The in-order marker scan (first
+    view; first click strictly after it; first purchase strictly
+    after that) computes exactly the batch query's chained
+    conditional MINs."""
+    sess = list(scalars) if scalars else None
+    rows: list = []
 
     def close(s) -> None:
         stage = 3 if s[4] >= 0 else 2 if s[3] >= 0 else 1 if s[2] >= 0 else 0
-        out.append(
-            {
-                "user_id": key[0],
-                "session_start": pd.Timestamp(int(s[0]), unit="us"),
-                "reached_stage": stage,
-            }
-        )
+        rows.append((user, pd.Timestamp(int(s[0]), unit="us"), stage))
 
     for ts_ns, _eid, et in ready:
         us = ts_ns // 1000
@@ -1047,41 +969,22 @@ def _session_funnel(
         elif et == "purchase" and sess[4] < 0 and 0 <= sess[3] < us:
             sess[4] = us
 
-    # close on the watermark passing the gap horizon: any buffered row
-    # is strictly above the cutoff, so it can only start a NEW session
-    if sess is not None and cutoff is not None and cutoff // 1000 > sess[1] + FUNNEL_GAP_US:
+    # any held row is at or above the cutoff, past the horizon, so it
+    # can only start a NEW session
+    if sess is not None and cutoff is not None and _funnel_deadline(sess) < cutoff:
         close(sess)
         sess = None
+    return (tuple(sess) if sess else None), rows
 
-    if sess is None and not buf:
-        if state.exists:
-            state.remove()
-    else:
-        s = sess or [-1, -1, -1, -1, -1]
-        state.update(
-            (
-                s[0],
-                s[1],
-                s[2],
-                s[3],
-                s[4],
-                [t for t, _, _ in buf],
-                [e for _, e, _ in buf],
-                [et for _, _, et in buf],
-            )
-        )
-        wm_ms = 0 if cutoff is None else _local_ns_to_epoch_ms(cutoff, tz)
-        deadlines = []
-        if buf:
-            deadlines.append(_local_ns_to_epoch_ms(buf[0][0], tz))
-        if sess is not None:
-            deadlines.append(
-                _local_ns_to_epoch_ms((sess[1] + FUNNEL_GAP_US + 1) * 1000, tz)
-            )
-        state.setTimeoutTimestamp(max(min(deadlines), wm_ms + 1))
-    yield pd.DataFrame(
-        out, columns=["user_id", "session_start", "reached_stage"]
-    )
+
+_SESSION_FUNNEL = _Recurrence(
+    _session_funnel,
+    (("start", "long"), ("last", "long"), ("fv", "long"), ("fc", "long"), ("fp", "long")),
+    "user_id long, session_start timestamp, reached_stage int",
+    "append",
+    ("event_type", "string"),
+    _funnel_deadline,
+)
 
 
 def stateful_session_funnel(events: DataFrame) -> DataFrame:
@@ -1089,18 +992,7 @@ def stateful_session_funnel(events: DataFrame) -> DataFrame:
     (user, session_start, reached_stage) row per CLOSED 30-min-gap
     session — the keyed-state twin of events_session_funnel's batch
     windows, golden-tested so that the emitted rows aggregate to the
-    batch query's four counters exactly. State per key = five µs
-    scalars + the reorder buffer."""
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    return events.withWatermark("ts", "30 minutes").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        partial(_session_funnel, tz),
-        outputStructType="user_id long, session_start timestamp, reached_stage int",
-        stateStructType=(
-            "start long, last long, fv long, fc long, fp long, "
-            "buf_ts array<long>, buf_eid array<long>, buf_et array<string>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    batch query's four counters exactly. State per user = five µs
+    scalars while a session is open + the reorder buffer, in
+    key-group rows."""
+    return _by_key_group(events, "30 minutes", _SESSION_FUNNEL)

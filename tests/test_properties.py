@@ -2982,6 +2982,9 @@ class _TimerGroupState:
     def update(self, value):
         self.value = tuple(value)
 
+    def remove(self):
+        self.value = None
+
     def setTimeoutTimestamp(self, ms):
         assert 0 < ms and ms >= self.wm_ms, f"timer {ms} below watermark {self.wm_ms}"
         self.timer = ms
@@ -3004,43 +3007,70 @@ def _rows(frame):
             st.sampled_from([0, 1, 999_999]),  # ns inside that ms
             st.integers(0, 7),  # user
             st.integers(0, 1000),  # value
+            st.sampled_from(["view", "click", "purchase"]),  # event type
         ),
         min_size=1,
         max_size=40,
     ),
     cuts=st.lists(st.integers(0, 39), max_size=8),
+    # from each of these rows on, event time is one more session gap
+    # (30 min) later, so funnel sessions close mid-stream
+    jumps=st.lists(st.integers(1, 39), max_size=2),
     delay=st.integers(1, 4),
     groups=st.integers(1, 4),
 )
 # a row exactly at the watermark is held, and must be released by a
 # timeout in the batch whose watermark is 1 ms past it
 @example(
-    events=[(10, 0, 0, 500), (9, 0, 0, 100), (11, 0, 1, 300)], cuts=[1], delay=1, groups=1
+    events=[(10, 0, 0, 500, "view"), (9, 0, 0, 100, "click"), (11, 0, 1, 300, "view")],
+    cuts=[1],
+    jumps=[],
+    delay=1,
+    groups=1,
+)
+# a funnel session whose gap horizon sits exactly at the watermark
+# stays open, and must close by a timeout in the batch whose watermark
+# is 1 ms past it
+@example(
+    events=[(5, 0, 0, 1, "view"), (6, 0, 1, 2, "view"), (7, 0, 1, 3, "click")],
+    cuts=[1, 2],
+    jumps=[1],
+    delay=1,
+    groups=2,
 )
 @settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, delay, groups):
+def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, delay, groups):
     """``_key_group_fold``, under Spark's call rules (one data call per
     group with arrivals, then one timeout call per other group whose
     timer is below the watermark), emits per micro-batch exactly the
     rows of a per-user reference that runs every user through
-    ``_reorder_split`` and the fold each batch, and ends in the same
-    per-user state — for each of the four folds, with several users
-    per group, rows below the watermark and timeout-only calls."""
+    ``_reorder_split`` and the fold each batch — folding a user whose
+    deadline is due even with no rows ready, and dropping a user whose
+    fold returns None — and ends in the same per-user state, for each
+    of the seven folds, with several users per group, rows below the
+    watermark and timeout-only calls. No group state row is ever
+    empty, and a watermark past every session gap leaves no funnel
+    user and no group row."""
     import pandas as pd
 
     from hello_flink_spark.streaming import stateful
     from hello_flink_spark.streaming.stateful import _reorder_split
 
     base_ms = 1_700_000_000_000
+    gap_ms = stateful.FUNNEL_GAP_US // 1000
     rows = [
-        ((base_ms + t) * 1_000_000 + ns, u, i, float(v))
-        for i, (t, ns, u, v) in enumerate(events)
+        (
+            (base_ms + t + gap_ms * sum(j <= i for j in jumps)) * 1_000_000 + ns,
+            u, i, float(v), et,
+        )
+        for i, (t, ns, u, v, et) in enumerate(events)
     ]
     bounds = sorted({c for c in cuts if c < len(rows)} | {0, len(rows)})
     batches = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     # the watermark each batch runs under; as in Spark, a watermark
     # advance runs a no-data batch (timeouts only), and a last one
-    # flushes every held row (the bounded-input MAX_WATERMARK)
+    # flushes every held row and closes every session (the
+    # bounded-input MAX_WATERMARK)
     runs, wm, seen = [], 0, 0
     for batch in batches:
         runs.append((batch, wm))
@@ -3048,9 +3078,14 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, delay, gro
         if seen - delay > wm:
             wm = seen - delay
             runs.append(([], wm))
-    runs.append(([], seen + delay + 100))
+    runs.append(([], seen + delay + gap_ms + 100))
 
-    for op in (stateful._EWMA, stateful._AUTOCORR, stateful._DELTA_TRIGGER, stateful._CUSUM):
+    ops = (
+        stateful._MARKOV, stateful._BURST, stateful._EWMA, stateful._AUTOCORR,
+        stateful._DELTA_TRIGGER, stateful._CUSUM, stateful._SESSION_FUNNEL,
+    )
+    for op in ops:
+        n = 1 + len(op.scalars)  # the group row's uid and scalar columns
         group_state, timers, ref_state, ref_held = {}, {}, {}, {}
         for batch, wm in runs:
             cutoff = wm * 1_000_000 if wm else None
@@ -3061,13 +3096,18 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, delay, gro
                 for out in stateful._key_group_fold("UTC", op, (g,), iter(frames), st_):
                     got.extend(_rows(out))
                 if st_.exists:
+                    assert st_.value[0] or st_.value[n], "an empty group state row"
                     group_state[g], timers[g] = st_.value, st_.timer
+                else:
+                    group_state.pop(g, None)
 
             by_group: dict = {}
             for r in batch:
                 by_group.setdefault(r[1] % groups, []).append(r)
             for g, rs in by_group.items():
-                frame = pd.DataFrame(rs, columns=["ts", "user_id", "event_id", "value"])
+                frame = pd.DataFrame(
+                    rs, columns=["ts", "user_id", "event_id", "value", "event_type"]
+                )
                 frame["ts"] = pd.to_datetime(frame["ts"])
                 call(g, [frame], False)
             for g in [g for g in group_state if g not in by_group]:
@@ -3076,26 +3116,37 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, delay, gro
 
             want = []
             arriving: dict = {}
-            for t, u, e, v in batch:
+            for t, u, e, v, et in batch:
                 if cutoff is None or t >= cutoff:
-                    arriving.setdefault(u, []).append((t, e, v))
-            for u in sorted(ref_held.keys() | arriving.keys()):
+                    payload = {"value": v, "event_type": et}
+                    arriving.setdefault(u, []).append(
+                        (t, e, *(payload[c] for c in op.arrival[2:]))
+                    )
+            due = set()
+            if op.deadline and cutoff is not None:
+                due = {u for u, s in ref_state.items() if op.deadline(s) < cutoff}
+            for u in sorted(ref_held.keys() | arriving.keys() | due):
                 ready, ref_held[u] = _reorder_split(
                     ref_held.get(u, []), arriving.get(u, []), cutoff
                 )
-                if ready:
-                    ref_state[u], out = op.fold(u, ref_state.get(u), ready)
+                if ready or u in due:
+                    s, out = op.fold(u, ref_state.get(u), ready, cutoff)
+                    if s is None:
+                        ref_state.pop(u, None)
+                    else:
+                        ref_state[u] = s
                     want += out
             ref_held = {u: b for u, b in ref_held.items() if b}
             assert sorted(got, key=lambda r: r[:2]) == sorted(want, key=lambda r: r[:2])
 
         assert not ref_held
         final_state = {}
-        for uid, *cols, buid, _, _, _ in group_state.values():
-            assert uid, "a group state row without users"
-            assert not buid, "rows held past the flushing watermark"
-            final_state.update(zip(uid, zip(*cols)))
+        for row in group_state.values():
+            assert not row[n], "rows held past the flushing watermark"
+            final_state.update(zip(row[0], zip(*row[1:n])))
         assert final_state == ref_state
+        if op.deadline:
+            assert not group_state, "a closed session kept its group row"
 
 
 # ---------------------------------------------------------------------------

@@ -2203,16 +2203,19 @@ def test_stateful_autocorr_equals_batch_shadow(spark, sf_dir, ooo_flush_replay_d
             assert abs(gc - c) <= 1e-6, f"user {u}: {gc} vs {c}"
 
 
-def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
-    """stateful_value_ewma keeps its per-user state in at most
-    KEY_GROUPS state rows, however many users it holds (a per-user
-    store would hold 301 rows here), and each user's final running
-    EWMA is still the left-to-right fold of its rows in (ts, event_id)
-    order. 300 users over three parquet chunks, odd events 10 minutes
-    early (inside the delay), and a sentinel chunk a day later whose
-    watermark releases every held row."""
-    from hello_flink_spark.queries.round7 import EWMA_ALPHA
-
+def _run_key_group_stream(spark, tmp_path, op):
+    """Run one reorder-buffered operator over 300 users in three
+    parquet chunks, odd events 10 minutes early (inside the delay),
+    and a sentinel chunk a day later whose watermark releases every
+    held row and closes every funnel session. Asserts the state store
+    never held more than KEY_GROUPS rows (a per-user store holds about
+    300 here). Returns the query, its memory table and the events."""
+    fn, mode = {
+        "ewma": (stateful.stateful_value_ewma, "update"),
+        "markov": (stateful.stateful_markov_transitions, "append"),
+        "burst": (stateful.stateful_burst_detector, "update"),
+        "funnel": (stateful.stateful_session_funnel, "append"),
+    }[op]
     users, n = 300, 1200
     src = str(tmp_path / "replay")
     events = spark.range(n).select(
@@ -2223,6 +2226,8 @@ def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
             "timestamp'2026-01-01 00:00:00' + "
             "make_interval(0,0,0,0,0,cast(id - 10 * (id % 2) as int),0)"
         ).alias("ts"),
+        F.expr("element_at(array('view', 'click', 'purchase'), cast(id % 3 + 1 as int))")
+        .alias("event_type"),
     )
     for k in range(3):
         events.filter(
@@ -2233,17 +2238,32 @@ def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
         F.lit(n).cast("long").alias("event_id"),
         F.lit(0.0).alias("value"),
         F.expr("timestamp'2026-01-03 00:00:00'").alias("ts"),
+        F.lit("view").alias("event_type"),
     ).write.parquet(os.path.join(src, "chunk_003"))
     stream = (
-        spark.readStream.schema("user_id long, event_id long, value double, ts timestamp")
+        spark.readStream.schema(
+            "user_id long, event_id long, value double, ts timestamp, event_type string"
+        )
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "chunk_*"))
     )
-    q = run_to_memory(stateful.stateful_value_ewma(stream), "t_ewma_kg", "update")
-    assert q.lastProgress.stateOperators[0].numRowsTotal <= stateful.KEY_GROUPS
+    table = f"t_{op}_kg"
+    q = run_to_memory(fn(stream), table, mode)
+    rows = [p.stateOperators[0].numRowsTotal for p in q.recentProgress]
+    assert max(rows) <= stateful.KEY_GROUPS, rows
+    return q, table, events
 
+
+def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
+    """stateful_value_ewma keeps its per-user state in at most
+    KEY_GROUPS state rows, however many users it holds, and each
+    user's final running EWMA is still the left-to-right fold of its
+    rows in (ts, event_id) order."""
+    from hello_flink_spark.queries.round7 import EWMA_ALPHA
+
+    _, table, events = _run_key_group_stream(spark, tmp_path, "ewma")
     got = {}
-    for r in spark.table("t_ewma_kg").filter(F.col("user_id") >= 0).collect():
+    for r in spark.table(table).filter(F.col("user_id") >= 0).collect():
         if r.n_events > got.get(r.user_id, (0,))[0]:
             got[r.user_id] = (r.n_events, r.ewma_value)
     want = {}
@@ -2251,8 +2271,23 @@ def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
         cnt, cur = want.get(r.user_id, (0, None))
         cur = r.value if cur is None else EWMA_ALPHA * r.value + (1 - EWMA_ALPHA) * cur
         want[r.user_id] = (cnt + 1, cur)
-    assert len(want) == users
+    assert len(want) == 300
     assert got == want
+
+
+@pytest.mark.parametrize("op", ["markov", "burst", "funnel"])
+def test_stateful_ops_keep_one_state_row_per_key_group(spark, tmp_path, op):
+    """stateful_markov_transitions, stateful_burst_detector and
+    stateful_session_funnel keep their per-user state in at most
+    KEY_GROUPS state rows too. The funnel drops a user when its
+    session closes and a group when it empties: each user's four
+    events are 300 minutes apart, four one-event sessions, and once
+    the sentinel's watermark has closed all 1,200 of them only the
+    sentinel's group is left."""
+    q, table, _ = _run_key_group_stream(spark, tmp_path, op)
+    if op == "funnel":
+        assert q.lastProgress.stateOperators[0].numRowsTotal <= 1
+        assert spark.table(table).filter(F.col("user_id") >= 0).count() == 1200
 
 
 def test_cep_not_between_equals_batch_shadow(spark, sf_dir, replay_dir):
@@ -3164,8 +3199,9 @@ def _make_padded_state_cls(keep: int, pad):
     so cloudpickle serializes it by VALUE inside the shipped processor
     closures; a module-level class would pickle by qualified name and
     executors cannot import ``test_streaming``. Shared by every
-    state-evolution golden (scalar-tuple EWMA r15, list-bearing session
-    funnel r16, map-bearing burst detector r17)."""
+    state-evolution golden through ``_make_evolved`` (an appended
+    scalar on the EWMA, list on the session funnel, map on the burst
+    detector)."""
 
     class _PaddedState:
         def __init__(self, inner):
@@ -3188,34 +3224,33 @@ def _make_padded_state_cls(keep: int, pad):
     return _PaddedState
 
 
-def _make_evolved_ewma():
-    """The evolved EWMA processor: v1 logic against a key-group state
-    schema with one appended defaulted field, adapted by padding
-    writes / truncating reads of the group's state tuple (the shape a
-    real upgrade ships). A FACTORY, not module-level definitions:
-    cloudpickle ships nested functions and classes by VALUE, while
-    module-level ones pickle by qualified name and executors cannot
-    import ``test_streaming``. Two goldens drive it: the rejection
-    golden (old checkpoint must refuse it loud) and the upgrade-recipe
-    golden (fresh-checkpoint reprocess must converge to the batch
-    shadow, VERDICT r14 #5)."""
+def _make_evolved(op, field: str, pad):
+    """The evolved processor of a key-group operator ``op``: v1 logic
+    against its state schema with one appended defaulted ``field``,
+    adapted by padding writes (``pad``) / truncating reads of the
+    group's state tuple (the shape a real upgrade ships). A FACTORY,
+    not module-level definitions: cloudpickle ships nested functions
+    and classes by VALUE, while module-level ones pickle by qualified
+    name and executors cannot import ``test_streaming``. The
+    rejection golden (old checkpoint must refuse it loud) and the
+    three upgrade-recipe goldens (fresh-checkpoint reprocess must
+    converge to the batch shadow, VERDICT r14 #5) drive it."""
     from functools import partial
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    op = stateful._EWMA
-    # uid + one array per scalar + the four buffer arrays
-    _PaddedState = _make_padded_state_cls(keep=1 + len(op.scalars) + 4, pad=1.0)
+    # every field of the state row: uid, the scalars, the buffer arrays
+    _PaddedState = _make_padded_state_cls(keep=len(op.state.split(", ")), pad=pad)
 
-    def _ewma_v2(tzv, key, pdfs, state):
+    def _v2(tzv, key, pdfs, state):
         yield from stateful._key_group_fold(tzv, op, key, pdfs, _PaddedState(state))
 
     def evolved(stream, delay: str = WM):
         tz = stream.sparkSession.conf.get("spark.sql.session.timeZone")
         return stateful._key_grouped(stream, delay).applyInPandasWithState(
-            partial(_ewma_v2, tz),
+            partial(_v2, tz),
             outputStructType=op.output,
-            stateStructType=op.state + ", scale double",
+            stateStructType=f"{op.state}, {field}",
             outputMode=op.mode,
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
@@ -3282,7 +3317,7 @@ def test_state_schema_evolution_rejected_across_checkpoint(spark, tmp_path):
     )
     land_chunk(3)
 
-    evolved = _make_evolved_ewma()  # shared evolved processor
+    evolved = _make_evolved(stateful._EWMA, "scale double", 1.0)
 
     # 1) resume over the OLD checkpoint: rejected loud, no silent remap
     with pytest.raises(
@@ -3337,7 +3372,9 @@ def test_state_evolution_upgrade_recipe_matches_batch_shadow(
     the v1 golden (test_stateful_ewma_equals_batch_shadow): the
     upgrade recipe loses nothing relative to an uninterrupted run."""
     run_to_memory(
-        _make_evolved_ewma()(_stream(spark, ooo_flush_replay_dir)),
+        _make_evolved(stateful._EWMA, "scale double", 1.0)(
+            _stream(spark, ooo_flush_replay_dir)
+        ),
         "t_ewma_v2",
         "update",
     )
@@ -3356,56 +3393,14 @@ def test_state_evolution_upgrade_recipe_matches_batch_shadow(
     assert got == want, "upgrade-recipe run diverged from the batch shadow"
 
 
-def _make_evolved_session_funnel():
-    """The evolved session-funnel processor: v1 logic against a state
-    schema with one appended defaulted LIST field, adapted by padding
-    writes / truncating reads. The r15 recipe golden proved the
-    fresh-checkpoint upgrade path for a SCALAR-tuple extension
-    (`stateful_value_ewma` + `scale double`); this factory extends a
-    state that already carries LIST columns (the three reorder-buffer
-    arrays) with ANOTHER list (`tags array<string>`, default []) — the
-    session/funnel state-machine shape VERDICT r15 #5 asked to cover.
-    A FACTORY for the same reason as `_make_evolved_ewma`: cloudpickle
-    ships nested definitions by value; module-level ones pickle by
-    qualified name and executors cannot import ``test_streaming``."""
-    from functools import partial
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ext_state = (
-        "start long, last long, fv long, fc long, fp long, "
-        "buf_ts array<long>, buf_eid array<long>, buf_et array<string>, "
-        "tags array<string>"
-    )
-    _PaddedState = _make_padded_state_cls(keep=8, pad=[])
-
-    def _funnel_v2(tzv, key, pdfs, state):
-        yield from stateful._session_funnel(tzv, key, pdfs, _PaddedState(state))
-
-    def evolved(stream, delay: str = WM):
-        tz = stream.sparkSession.conf.get("spark.sql.session.timeZone")
-        return stream.withWatermark("ts", delay).groupBy(
-            "user_id"
-        ).applyInPandasWithState(
-            partial(_funnel_v2, tz),
-            outputStructType=(
-                "user_id long, session_start timestamp, reached_stage int"
-            ),
-            stateStructType=ext_state,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-
-    return evolved
-
-
 def test_state_evolution_upgrade_recipe_list_state_matches_batch_shadow(
     spark, sf_dir, ooo_flush_replay_dir
 ):
     """The upgrade recipe proven for scalar-tuple state (r15, EWMA)
     holds for a LIST-bearing session state machine too (VERDICT r15
     #5): after appending a defaulted `array<string>` field to
-    `stateful_session_funnel`'s state, the fresh-checkpoint reprocess
+    `stateful_session_funnel`'s key-group state (which removes users
+    as their sessions close), the fresh-checkpoint reprocess
     over the out-of-order-within-delay replay must aggregate to the
     batch shadow's (`events_session_funnel`) four counters exactly —
     the same comparison as the v1 golden, so the recipe loses nothing
@@ -3413,56 +3408,15 @@ def test_state_evolution_upgrade_recipe_list_state_matches_batch_shadow(
     an uninterrupted run."""
     d, info = ooo_flush_replay_dir
     run_to_memory(
-        _make_evolved_session_funnel()(replay.read_stream(spark, d)),
+        _make_evolved(stateful._SESSION_FUNNEL, "tags array<string>", [])(
+            replay.read_stream(spark, d)
+        ),
         "t_sfunnel_v2",
         "append",
     )
     _assert_funnel_matches_shadow(
         spark, sf_dir, info, "t_sfunnel_v2", label="upgrade-recipe funnel diverged: "
     )
-
-
-def _make_evolved_burst():
-    """The evolved burst-detector processor: v1 logic against a state
-    schema with one appended defaulted MAP column (``meta
-    map<string,long>``, default {}) — the MapState-style dict
-    container VERDICT r16 #5 named as the one state shape the recipe
-    goldens had not yet covered. ``stateful_burst_detector`` is the
-    natural host: its state already encodes a (second → count) map
-    (the ``secs``/``cnts`` parallel arrays), and the appended field is
-    a genuine Spark ``MapType`` state column, so the golden proves
-    both that the recipe holds over map-bearing state AND that a map
-    column itself survives the pad/truncate adapter across
-    micro-batches. A FACTORY for the same reason as
-    ``_make_evolved_ewma``: cloudpickle ships nested definitions by
-    value; module-level ones pickle by qualified name and executors
-    cannot import ``test_streaming``."""
-    from functools import partial
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ext_state = (
-        "secs array<long>, cnts array<long>, max_burst long, "
-        "buf_ts array<long>, meta map<string,long>"
-    )
-    _PaddedState = _make_padded_state_cls(keep=4, pad={})
-
-    def _burst_v2(tzv, key, pdfs, state):
-        yield from stateful._burst(tzv, key, pdfs, _PaddedState(state))
-
-    def evolved(stream, delay: str = WM):
-        tz = stream.sparkSession.conf.get("spark.sql.session.timeZone")
-        return stream.withWatermark("ts", delay).groupBy(
-            "user_id"
-        ).applyInPandasWithState(
-            partial(_burst_v2, tz),
-            outputStructType="user_id long, max_burst_24h long",
-            stateStructType=ext_state,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-
-    return evolved
 
 
 def test_state_evolution_upgrade_recipe_map_state_matches_batch_shadow(
@@ -3473,14 +3427,16 @@ def test_state_evolution_upgrade_recipe_map_state_matches_batch_shadow(
     state machine with an appended ``map<string,long>`` column too
     (VERDICT r16 #5 — the last state-container shape): the
     fresh-checkpoint reprocess of `stateful_burst_detector` under the
-    widened schema, driven over the out-of-order-within-delay replay
+    widened key-group schema, driven over the out-of-order-within-delay replay
     so the reorder buffer works under the new schema as well, must
     reach the same final per-user rolling-24 h maximum as the batch
     RANGE-frame shadow — the identical comparison the v1 goldens make,
     so the recipe loses nothing relative to an uninterrupted run."""
     d, info = ooo_flush_replay_dir
     run_to_memory(
-        _make_evolved_burst()(replay.read_stream(spark, d)),
+        _make_evolved(stateful._BURST, "meta map<string,long>", {})(
+            replay.read_stream(spark, d)
+        ),
         "t_burst_v2",
         "update",
     )
