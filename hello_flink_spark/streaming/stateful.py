@@ -6,8 +6,8 @@ twin of window_count (§2.9).
 org.apache.flink.cep.CEP.pattern — re-expressed as
 ``applyInPandasWithState`` processors: per-key state rows in the
 state store (RocksDB via session factory), Arrow-batched per-group
-Python, event-time timeouts driven by the query watermark. State is a
-flat tuple per key — bounded, evictable, 100 TB-safe (SURVEY §4.2).
+Python, event-time timeouts driven by the query watermark. State rows
+are bounded and evictable — 100 TB-safe (SURVEY §4.2).
 
 API note: Spark 4.x also ships ``transformWithStateInPandas``, the
 closest 1:1 of Flink's keyed-state API, but it cannot start without a
@@ -16,35 +16,39 @@ ends"); the processors below use ``applyInPandasWithState``, which
 expresses the same state machines (value state = the state tuple, list
 state = an array column in it, timers = setTimeoutTimestamp).
 
-Key groups: the seven operators that share the watermark-delay reorder
-buffer (stateful_markov_transitions, stateful_burst_detector,
-stateful_value_ewma, stateful_autocorr, stateful_delta_trigger,
-stateful_cusum, stateful_session_funnel) store their per-user state
-the way Flink stores keyed state, in key groups ([F] KeyGroupRange).
-Users hash into ``KEY_GROUPS = 128`` groups, Flink's default lower
-bound for max parallelism; each group is one struct-of-arrays state
-row, and ``_key_group_fold`` runs the per-user fold for every user of
-a group in one Python call. PySpark's per-call cost (Arrow to pandas
-per column, a GroupState, output frames) is then paid once per touched
-group per micro-batch, not once per user. The price: a touched group
-decodes and re-encodes all its users' scalars and held rows, about a
-µs per user, where a per-user call costs milliseconds. Which design
-wins depends on users per state partition against users touched per
-micro-batch. ``KEY_GROUPS`` is fixed, not an option: a checkpoint's
-state keys depend on it (docs/SEMANTICS.md §13).
+Key groups: every operator here but the CEP NFAs (streaming/cep.py
+keeps their encoded partial matches per user) stores its per-user
+state the way Flink stores keyed state, in key groups ([F]
+KeyGroupRange). Users hash into ``KEY_GROUPS = 128`` groups, Flink's
+default lower bound for max parallelism; each group is one
+struct-of-arrays state row, and ``_key_group_fold`` runs the per-user
+fold for every user of a group in one Python call. PySpark's per-call
+cost (Arrow to pandas per column, a GroupState, output frames) is then
+paid once per touched group per micro-batch, not once per user. The
+price: a touched group decodes and re-encodes all its users' scalars
+and held rows, about a µs per user, where a per-user call costs
+milliseconds. Which design wins depends on users per state partition
+against users touched per micro-batch. ``KEY_GROUPS`` is fixed, not an
+option: a checkpoint's state keys depend on it (docs/SEMANTICS.md §13).
 
-Ordering contract: each processor sorts its per-key batch by event
-time; the replay harness delivers chunks in time order, so cross-batch
-order matches event order (the same assumption Flink tutorials make
-with ascending-timestamp sources).
+Release rules: each operator declares when a row is READY to fold.
+At the watermark: a watermark-delay reorder buffer holds each row
+until the watermark passes it, then folds in (ts, event_id) order. On
+arrival: each micro-batch's rows fold at once, in (ts, event_id)
+order within the batch; the replay harness delivers chunks in time
+order, so cross-batch order matches event order (the same assumption
+Flink tutorials make with ascending-timestamp sources). The count
+operators run with no watermark and no timers.
 """
 
 from __future__ import annotations
 
+import math
 from bisect import bisect_left
 from functools import partial
 from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,154 +60,6 @@ SESSION_GAP_US = 30 * 60 * 1_000_000
 # (full v->c->p funnels are rare within 30 min in the fixture — 0 rows
 # at sf0.01; 4 h keeps the golden test non-vacuous at every SF).
 COUNT_WINDOW_SIZE = 5
-
-
-def _sorted_concat(pdfs: Iterator[pd.DataFrame], by: list[str]) -> pd.DataFrame:
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    return pdf.sort_values(by, ignore_index=True)
-
-
-# ---------------------------------------------------------------------------
-# stateful_running_agg — [F] KeyedProcessFunction + ValueState
-# ---------------------------------------------------------------------------
-
-
-def _running_agg(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    cnt, total = state.get if state.exists else (0, 0.0)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    cnt += len(pdf)
-    total += float(pdf["value"].sum())
-    state.update((cnt, total))
-    yield pd.DataFrame({"user_id": [key[0]], "event_cnt": [cnt], "total_value": [round(total, 2)]})
-
-
-def stateful_running_agg(events: DataFrame) -> DataFrame:
-    """Per-key running fold with explicit ValueState — the arbitrary-
-    state twin of jobs.running_totals (which Catalyst handles natively;
-    this one demonstrates the KeyedProcessFunction escape hatch)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _running_agg,
-        outputStructType="user_id long, event_cnt long, total_value double",
-        stateStructType="cnt long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful_sessionize + stateful_timer — [F] MapState + event-time timers
-# ---------------------------------------------------------------------------
-
-
-def _sessionize(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Custom sessionization: emit a (user, session_start, cnt, total)
-    row when a session closes — either because a later event arrived
-    past the gap (in-order closure) or because the event-time timer
-    fired (watermark passed start+gap with no successor: the
-    stateful_timer path)."""
-    out: list[dict] = []
-
-    def close(sess):
-        out.append(
-            {
-                "user_id": key[0],
-                # integer µs → exactly representable in Arrow timestamp[us]
-                "session_start": pd.Timestamp(int(sess[0]), unit="us"),
-                "cnt": int(sess[2]),
-                "total_value": round(float(sess[3]), 2),
-            }
-        )
-
-    if state.hasTimedOut:
-        if state.exists:
-            close(state.get)
-            state.remove()
-        yield pd.DataFrame(out)
-        return
-
-    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    sess = list(state.get) if state.exists else None  # [start_us, last_us, cnt, total]
-    for ts, value in zip(pdf["ts"], pdf["value"]):
-        ts_us = ts.value // 1000  # pd.Timestamp ns → µs, exact
-        if sess is None:
-            sess = [ts_us, ts_us, 0, 0.0]
-        elif ts_us - sess[1] >= SESSION_GAP_US:
-            close(sess)
-            sess = [ts_us, ts_us, 0, 0.0]
-        sess[1] = ts_us
-        sess[2] += 1
-        sess[3] += float(value)
-    state.update(tuple(sess))
-    # [F] timerService().registerEventTimeTimer(last_ts + gap)
-    state.setTimeoutTimestamp((sess[1] + SESSION_GAP_US) // 1000)
-    yield pd.DataFrame(out)
-
-
-def stateful_sessionize(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Sessionization with explicit state + event-time timers (the
-    custom path; F.session_window covers the declarative case)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize,
-            outputStructType="user_id long, session_start timestamp, cnt long, total_value double",
-            stateStructType="start_us long, last_us long, cnt long, total double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# stateful_timer — [F] Context#timerService().registerEventTimeTimer
-# ---------------------------------------------------------------------------
-
-INACTIVITY_US = 60 * 60 * 1_000_000
-
-
-def _inactivity(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        last_us, cnt = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "last_seen": [pd.Timestamp(int(last_us), unit="us")],
-                "events_before_idle": [int(cnt)],
-            }
-        )
-        return
-    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    last_us = int(pdf["ts"].iloc[-1].value // 1000)
-    cnt = (state.get[1] if state.exists else 0) + len(pdf)
-    state.update((last_us, cnt))
-    # pure timer semantics: the ONLY output is timer-driven (the alert)
-    state.setTimeoutTimestamp((last_us + INACTIVITY_US) // 1000)
-    yield pd.DataFrame([])
-
-
-def inactivity_alerts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Per-key event-time timer callback in isolation: emit an alert row
-    when a user goes quiet for INACTIVITY_US of event time — every event
-    re-registers the timer; only the timeout path produces output."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _inactivity,
-            outputStructType="user_id long, last_seen timestamp, events_before_idle long",
-            stateStructType="last_us long, cnt long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -246,152 +102,8 @@ def cep3_view_click_purchase(
 
 
 # ---------------------------------------------------------------------------
-# window_count streaming twin — [F] countWindow(n)
-# ---------------------------------------------------------------------------
-
-
-def _count_window(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    chunk_idx, buf_cnt, buf_sum = state.get if state.exists else (0, 0, 0.0)
-    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    out: list[dict] = []
-    for value in pdf["value"]:
-        buf_cnt += 1
-        buf_sum += float(value)
-        if buf_cnt == COUNT_WINDOW_SIZE:
-            out.append(
-                {
-                    "user_id": key[0],
-                    "chunk": chunk_idx,
-                    "cnt": COUNT_WINDOW_SIZE,
-                    "total_value": round(buf_sum, 2),
-                }
-            )
-            chunk_idx += 1
-            buf_cnt, buf_sum = 0, 0.0
-    state.update((chunk_idx, buf_cnt, buf_sum))
-    yield pd.DataFrame(out)
-
-
-GLOBAL_TRIGGER_EVERY = 5
-
-
-def _global_count_trigger(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    cnt, total = state.get if state.exists else (0, 0.0)
-    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    out: list[dict] = []
-    for value in pdf["value"]:
-        cnt += 1
-        total += float(value)
-        if cnt % GLOBAL_TRIGGER_EVERY == 0:
-            out.append(
-                {"user_id": key[0], "fire_at": cnt, "total_value": round(total, 2)}
-            )
-    state.update((cnt, total))
-    yield pd.DataFrame(out)
-
-
-def global_count_trigger_stream(events: DataFrame) -> DataFrame:
-    """[F] GlobalWindows.create() + CountTrigger.of(N): one unbounded
-    window per key whose trigger fires a running-aggregate snapshot
-    every N records — SURVEY §2.9's last row, previously documented out
-    of scope. Spark has no custom-trigger surface, but the COUNT
-    trigger is a keyed state machine: a counter + running sum emitting
-    at each N-boundary (the processing-time trigger variant is the
-    query-level Trigger.ProcessingTime, see docs/SEMANTICS.md §3).
-    State is two scalars per key — bounded without eviction, unlike a
-    buffering global window."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _global_count_trigger,
-        outputStructType="user_id long, fire_at long, total_value double",
-        stateStructType="cnt long, total double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def count_window_stream(events: DataFrame) -> DataFrame:
-    """Count-based windows (every N events per key) — no Structured
-    Streaming native (SURVEY §2.9): a stateful counter emitting a row
-    per completed chunk; the trailing partial stays in state (a stream
-    never ends — the batch shadow window_count emits it on EOF)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _count_window,
-        outputStructType="user_id long, chunk long, cnt long, total_value double",
-        stateStructType="chunk_idx long, buf_cnt long, buf_sum double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# window_count_evictor streaming twin — [F] countWindow(n) +
-# CountEvictor.of(keep)
-# ---------------------------------------------------------------------------
-
-# single source for the batch/stream twin pair: queries/round9.py
-# imports both this and COUNT_WINDOW_SIZE
-COUNT_EVICT_KEEP = 3
-
-
-def _count_window_evictor(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    chunk_idx, buf_cnt, ring = state.get if state.exists else (0, 0, [])
-    ring = list(ring)
-    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    out: list[dict] = []
-    for value in pdf["value"]:
-        buf_cnt += 1
-        ring.append(float(value))
-        # the evictor's buffer bound IS the state bound: only the last
-        # `keep` elements can ever be aggregated, so older ones drop
-        # the moment they are displaced — state stays O(keep), not O(n)
-        if len(ring) > COUNT_EVICT_KEEP:
-            ring.pop(0)
-        if buf_cnt == COUNT_WINDOW_SIZE:
-            out.append(
-                {
-                    "user_id": key[0],
-                    "chunk": chunk_idx,
-                    "cnt_kept": len(ring),
-                    "total_value": round(sum(ring), 2),
-                }
-            )
-            chunk_idx += 1
-            buf_cnt, ring = 0, []
-    state.update((chunk_idx, buf_cnt, ring))
-    yield pd.DataFrame(out)
-
-
-def count_window_evictor_stream(events: DataFrame) -> DataFrame:
-    """[F] ``countWindow(5)`` + ``CountEvictor.of(3)`` — streaming
-    twin of queries/round9.py::window_count_evictor. Flink's evictor
-    trims the buffer when the window FIRES; because CountEvictor keeps
-    a suffix, the same result falls out of keeping only the trailing
-    ``keep`` elements as they arrive — which also bounds state at
-    O(keep) scalars per key instead of the full window buffer (the
-    very reason evictors exist). The trailing partial window stays in
-    state (a stream never ends; the batch shadow emits it on EOF).
-
-    Per-batch arrivals are (ts, event_id)-sorted like the other count
-    machines; the fold order across batches is the replay order, the
-    same contract ``count_window_stream`` documents."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _count_window_evictor,
-        outputStructType="user_id long, chunk long, cnt_kept long, total_value double",
-        stateStructType="chunk_idx long, buf_cnt long, ring array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# the watermark-delay reorder buffer and key-group state — shared by the
-# seven reorder-buffered operators below
+# the keyed-state driver: key-group state, the watermark-delay reorder
+# buffer and per-user deadlines — shared by every operator below
 # ---------------------------------------------------------------------------
 
 
@@ -426,7 +138,8 @@ def _reorder_split(buf: list, arrivals: list, cutoff: int | None):
     leading (ts_ns, ...) key, and split at the watermark: rows the
     watermark has passed are READY to fold in event-time order; the
     rest stay HELD (the watermark-delay reorder buffer, VERDICT r07
-    #7). With no watermark yet, everything holds.
+    #7). With no watermark yet, everything holds; a cutoff of +inf
+    releases everything (the on-arrival rule).
 
     The release bound is STRICT (ts < cutoff): a row exactly at the
     watermark is not yet safe to fold, because an equal-timestamp
@@ -462,13 +175,15 @@ def _arm_release_timer(
 _DRAIN_CAST = {"user_id": int, "event_id": int, "event_type": str, "value": float}
 
 
-def _drain_arrivals(tz: str, pdfs: Iterator[pd.DataFrame], state: GroupState, cols: tuple):
-    """Shared arrival intake for the reorder-buffered processors:
-    returns (arrival tuples ``(ts_ns, *cols)``, watermark cutoff).
-    Below-watermark arrivals (ts < cutoff — Spark's own lateness
-    definition) are dropped here; ordering is _reorder_split's job, so
-    the frame is NOT pre-sorted (one sort per batch, not two)."""
-    cutoff = _wm_cutoff_ns(state, tz)
+def _drain_arrivals(tz: str | None, pdfs: Iterator[pd.DataFrame], state: GroupState, cols: tuple):
+    """Arrival intake of the key-group driver: returns (arrival tuples
+    ``(ts_ns, *cols)``, watermark cutoff). Below-watermark arrivals
+    (ts < cutoff — Spark's own lateness definition) are dropped here;
+    ordering is _reorder_split's job, so the frame is NOT pre-sorted
+    (one sort per batch, not two). ``tz`` None means the stream has no
+    watermark (Spark refuses to read one then): the cutoff is None and
+    no row is late."""
+    cutoff = None if tz is None else _wm_cutoff_ns(state, tz)
     if state.hasTimedOut:
         return [], cutoff
     pdf = pd.concat(list(pdfs), ignore_index=True)
@@ -499,7 +214,9 @@ class _Recurrence(NamedTuple):
     (column, type) each held row carries besides its time and id, if
     any. ``deadline(scalars)``, if given, is an event time (session-
     local ns) past which the user is folded even with no rows ready:
-    like a held row, it is due once ``deadline < cutoff``."""
+    like a held row, it is due once ``deadline < cutoff``. A row is
+    READY once the watermark passes it, or under ``on_arrival`` at once
+    (nothing is held; deadlines still wait for the watermark)."""
 
     fold: Callable
     scalars: tuple
@@ -507,6 +224,7 @@ class _Recurrence(NamedTuple):
     mode: str
     payload: tuple | None
     deadline: Callable | None = None
+    on_arrival: bool = False
 
     @property
     def columns(self) -> list[str]:
@@ -535,7 +253,7 @@ def _columns(rows: list, width: int) -> list[list]:
 
 
 def _key_group_fold(
-    tz: str,
+    tz: str | None,
     op: _Recurrence,
     key: Tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
@@ -543,8 +261,10 @@ def _key_group_fold(
 ) -> Iterator[pd.DataFrame]:
     """One call per key group per micro-batch: drop below-watermark
     arrivals, then for each user with held or arriving rows merge them
-    through ``_reorder_split`` and fold its READY rows with ``op.fold``;
-    a user whose deadline is due folds too, with or without rows.
+    through ``_reorder_split`` (released at the watermark, or all at
+    once under ``op.on_arrival``) and fold its READY rows with
+    ``op.fold``; a user whose deadline is due folds too, with or
+    without rows.
     Users with nothing to fold emit nothing and are carried through
     unchanged. Writes the group's one state row, arms one timer at its
     earliest held row or deadline and yields one frame with every
@@ -567,10 +287,11 @@ def _key_group_fold(
     due = set()
     if op.deadline and cutoff is not None:
         due = {u for u, s in scalars.items() if op.deadline(s) < cutoff}
+    release = math.inf if op.on_arrival else cutoff
 
     out: list = []
     for u in sorted(held.keys() | arriving.keys() | due):
-        ready, held[u] = _reorder_split(held.get(u, []), arriving.get(u, []), cutoff)
+        ready, held[u] = _reorder_split(held.get(u, []), arriving.get(u, []), release)
         if ready or u in due:
             s, rows = op.fold(u, scalars.get(u), ready, cutoff)
             if s is None:
@@ -598,25 +319,291 @@ def _key_group_fold(
     yield pd.DataFrame(out, columns=op.columns)
 
 
-def _key_grouped(events: DataFrame, delay: str):
-    """The events watermarked at ``delay`` and grouped by key group
-    (``applyInPandasWithState`` takes named grouping columns only)."""
-    return (
-        events.withWatermark("ts", delay)
-        .withColumn("kg", F.pmod(F.hash("user_id"), F.lit(KEY_GROUPS)))
-        .groupBy("kg")
-    )
+def _key_grouped(events: DataFrame, delay: str | None):
+    """The events watermarked at ``delay`` (not at all if None) and
+    grouped by key group (``applyInPandasWithState`` takes named
+    grouping columns only)."""
+    if delay is not None:
+        events = events.withWatermark("ts", delay)
+    return events.withColumn(
+        "kg", F.pmod(F.hash("user_id"), F.lit(KEY_GROUPS))
+    ).groupBy("kg")
 
 
-def _by_key_group(events: DataFrame, delay: str, op: _Recurrence) -> DataFrame:
-    tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
+def _by_key_group(events: DataFrame, delay: str | None, op: _Recurrence) -> DataFrame:
+    """``op`` over ``events`` through ``_key_group_fold``; with
+    ``delay`` None the stream has no watermark and no timers, which
+    only an ``on_arrival`` operator without a deadline can run on."""
+    tz = None if delay is None else events.sparkSession.conf.get("spark.sql.session.timeZone")
     return _key_grouped(events, delay).applyInPandasWithState(
         partial(_key_group_fold, tz, op),
         outputStructType=op.output,
         stateStructType=op.state,
         outputMode=op.mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout if tz else GroupStateTimeout.NoTimeout,
     )
+
+
+# ---------------------------------------------------------------------------
+# stateful_running_agg — [F] KeyedProcessFunction + ValueState
+# ---------------------------------------------------------------------------
+
+
+def _running_agg(user: int, scalars, ready: list, cutoff):
+    """Running (count, sum) ValueState: one row per user per micro-batch
+    with rows. The batch's values are summed first and the sum is added
+    to the total, the same float arithmetic as summing the batch's
+    column (nulls skipped)."""
+    cnt, total = scalars or (0, 0.0)
+    cnt += len(ready)
+    total += float(np.nansum([v for _, _, v in ready]))
+    return (cnt, total), [(user, cnt, round(total, 2))]
+
+
+_RUNNING_AGG = _Recurrence(
+    _running_agg,
+    (("cnt", "long"), ("total", "double")),
+    "user_id long, event_cnt long, total_value double",
+    "update",
+    ("value", "double"),
+    on_arrival=True,
+)
+
+
+def stateful_running_agg(events: DataFrame) -> DataFrame:
+    """Per-key running fold with explicit ValueState — the arbitrary-
+    state twin of jobs.running_totals (which Catalyst handles natively;
+    this one demonstrates the KeyedProcessFunction escape hatch)."""
+    return _by_key_group(events, None, _RUNNING_AGG)
+
+
+# ---------------------------------------------------------------------------
+# stateful_sessionize + stateful_timer — [F] MapState + event-time timers
+# ---------------------------------------------------------------------------
+
+
+def _session_deadline(sess) -> int:
+    """The session's gap horizon (last + gap) in ns, the event-time
+    timer of the custom sessionizer."""
+    return (sess[1] + SESSION_GAP_US) * 1000
+
+
+def _sessionize(user: int, scalars, ready: list, cutoff):
+    """Custom sessionization: emit a (user, session_start, cnt, total)
+    row when a session closes — either because a later event arrived
+    past the gap (in-order closure) or because the watermark passed
+    last + gap with no successor (the stateful_timer path; the driver
+    folds the user once that deadline is due). A closed session drops
+    the user's scalars."""
+    sess = list(scalars) if scalars else None  # [start_us, last_us, cnt, total]
+    rows: list = []
+
+    def close(s) -> None:
+        # integer µs → exactly representable in Arrow timestamp[us]
+        rows.append((user, pd.Timestamp(int(s[0]), unit="us"), int(s[2]), round(s[3], 2)))
+
+    for ts_ns, _eid, value in ready:
+        ts_us = ts_ns // 1000
+        if sess is None:
+            sess = [ts_us, ts_us, 0, 0.0]
+        elif ts_us - sess[1] >= SESSION_GAP_US:
+            close(sess)
+            sess = [ts_us, ts_us, 0, 0.0]
+        sess[1] = ts_us
+        sess[2] += 1
+        sess[3] += value
+    if sess is not None and cutoff is not None and _session_deadline(sess) < cutoff:
+        close(sess)
+        sess = None
+    return (tuple(sess) if sess else None), rows
+
+
+_SESSIONIZE = _Recurrence(
+    _sessionize,
+    (("start_us", "long"), ("last_us", "long"), ("cnt", "long"), ("total", "double")),
+    "user_id long, session_start timestamp, cnt long, total_value double",
+    "append",
+    ("value", "double"),
+    _session_deadline,
+    on_arrival=True,
+)
+
+
+def stateful_sessionize(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+    """Sessionization with explicit state + event-time timers (the
+    custom path; F.session_window covers the declarative case)."""
+    return _by_key_group(events, watermark, _SESSIONIZE)
+
+
+# ---------------------------------------------------------------------------
+# stateful_timer — [F] Context#timerService().registerEventTimeTimer
+# ---------------------------------------------------------------------------
+
+INACTIVITY_US = 60 * 60 * 1_000_000
+
+
+def _idle_deadline(idle) -> int:
+    """last + INACTIVITY_US in ns: every event moves this timer."""
+    return (idle[0] + INACTIVITY_US) * 1000
+
+
+def _inactivity(user: int, scalars, ready: list, cutoff):
+    """State (last_us, cnt): each micro-batch's rows move the user's
+    last-seen time; the ONLY output is timer-driven — once the
+    watermark passes last + INACTIVITY_US, one alert row, and the
+    user's state is dropped."""
+    idle = scalars
+    if ready:
+        idle = (ready[-1][0] // 1000, (scalars[1] if scalars else 0) + len(ready))
+    if cutoff is not None and _idle_deadline(idle) < cutoff:
+        return None, [(user, pd.Timestamp(int(idle[0]), unit="us"), int(idle[1]))]
+    return idle, []
+
+
+_INACTIVITY = _Recurrence(
+    _inactivity,
+    (("last_us", "long"), ("cnt", "long")),
+    "user_id long, last_seen timestamp, events_before_idle long",
+    "append",
+    None,
+    _idle_deadline,
+    on_arrival=True,
+)
+
+
+def inactivity_alerts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+    """Per-key event-time timer callback in isolation: emit an alert row
+    when a user goes quiet for INACTIVITY_US of event time — every event
+    re-registers the timer; only the timeout path produces output."""
+    return _by_key_group(events, watermark, _INACTIVITY)
+
+
+# ---------------------------------------------------------------------------
+# window_count streaming twin — [F] countWindow(n), and the global-window
+# count trigger — [F] GlobalWindows + CountTrigger.of(n)
+# ---------------------------------------------------------------------------
+
+
+def _count_window(user: int, scalars, ready: list, cutoff):
+    chunk_idx, buf_cnt, buf_sum = scalars or (0, 0, 0.0)
+    rows = []
+    for _, _, value in ready:
+        buf_cnt += 1
+        buf_sum += value
+        if buf_cnt == COUNT_WINDOW_SIZE:
+            rows.append((user, chunk_idx, COUNT_WINDOW_SIZE, round(buf_sum, 2)))
+            chunk_idx += 1
+            buf_cnt, buf_sum = 0, 0.0
+    return (chunk_idx, buf_cnt, buf_sum), rows
+
+
+_COUNT_WINDOW = _Recurrence(
+    _count_window,
+    (("chunk_idx", "long"), ("buf_cnt", "long"), ("buf_sum", "double")),
+    "user_id long, chunk long, cnt long, total_value double",
+    "append",
+    ("value", "double"),
+    on_arrival=True,
+)
+
+GLOBAL_TRIGGER_EVERY = 5
+
+
+def _global_count_trigger(user: int, scalars, ready: list, cutoff):
+    cnt, total = scalars or (0, 0.0)
+    rows = []
+    for _, _, value in ready:
+        cnt += 1
+        total += value
+        if cnt % GLOBAL_TRIGGER_EVERY == 0:
+            rows.append((user, cnt, round(total, 2)))
+    return (cnt, total), rows
+
+
+_GLOBAL_COUNT_TRIGGER = _Recurrence(
+    _global_count_trigger,
+    (("cnt", "long"), ("total", "double")),
+    "user_id long, fire_at long, total_value double",
+    "append",
+    ("value", "double"),
+    on_arrival=True,
+)
+
+
+def global_count_trigger_stream(events: DataFrame) -> DataFrame:
+    """[F] GlobalWindows.create() + CountTrigger.of(N): one unbounded
+    window per key whose trigger fires a running-aggregate snapshot
+    every N records — SURVEY §2.9's last row, previously documented out
+    of scope. Spark has no custom-trigger surface, but the COUNT
+    trigger is a keyed state machine: a counter + running sum emitting
+    at each N-boundary (the processing-time trigger variant is the
+    query-level Trigger.ProcessingTime, see docs/SEMANTICS.md §3).
+    State is two scalars per key — bounded without eviction, unlike a
+    buffering global window."""
+    return _by_key_group(events, None, _GLOBAL_COUNT_TRIGGER)
+
+
+def count_window_stream(events: DataFrame) -> DataFrame:
+    """Count-based windows (every N events per key) — no Structured
+    Streaming native (SURVEY §2.9): a stateful counter emitting a row
+    per completed chunk; the trailing partial stays in state (a stream
+    never ends — the batch shadow window_count emits it on EOF)."""
+    return _by_key_group(events, None, _COUNT_WINDOW)
+
+
+# ---------------------------------------------------------------------------
+# window_count_evictor streaming twin — [F] countWindow(n) +
+# CountEvictor.of(keep)
+# ---------------------------------------------------------------------------
+
+# single source for the batch/stream twin pair: queries/round9.py
+# imports both this and COUNT_WINDOW_SIZE
+COUNT_EVICT_KEEP = 3
+
+
+def _count_window_evictor(user: int, scalars, ready: list, cutoff):
+    chunk_idx, buf_cnt, ring = scalars or (0, 0, [])
+    ring = list(ring)
+    rows = []
+    for _, _, value in ready:
+        buf_cnt += 1
+        ring.append(value)
+        # the evictor's buffer bound IS the state bound: only the last
+        # `keep` elements can ever be aggregated, so older ones drop
+        # the moment they are displaced — state stays O(keep), not O(n)
+        if len(ring) > COUNT_EVICT_KEEP:
+            ring.pop(0)
+        if buf_cnt == COUNT_WINDOW_SIZE:
+            rows.append((user, chunk_idx, len(ring), round(sum(ring), 2)))
+            chunk_idx += 1
+            buf_cnt, ring = 0, []
+    return (chunk_idx, buf_cnt, ring), rows
+
+
+_COUNT_WINDOW_EVICTOR = _Recurrence(
+    _count_window_evictor,
+    (("chunk_idx", "long"), ("buf_cnt", "long"), ("ring", "array<double>")),
+    "user_id long, chunk long, cnt_kept long, total_value double",
+    "append",
+    ("value", "double"),
+    on_arrival=True,
+)
+
+
+def count_window_evictor_stream(events: DataFrame) -> DataFrame:
+    """[F] ``countWindow(5)`` + ``CountEvictor.of(3)`` — streaming
+    twin of queries/round9.py::window_count_evictor. Flink's evictor
+    trims the buffer when the window FIRES; because CountEvictor keeps
+    a suffix, the same result falls out of keeping only the trailing
+    ``keep`` elements as they arrive — which also bounds state at
+    O(keep) scalars per key instead of the full window buffer (the
+    very reason evictors exist). The trailing partial window stays in
+    state (a stream never ends; the batch shadow emits it on EOF).
+
+    Per-batch arrivals are (ts, event_id)-sorted like the other count
+    machines; the fold order across batches is the replay order, the
+    same contract ``count_window_stream`` documents."""
+    return _by_key_group(events, None, _COUNT_WINDOW_EVICTOR)
 
 
 # ---------------------------------------------------------------------------
@@ -786,8 +773,6 @@ def _autocorr(user: int, scalars, ready: list, cutoff):
     into the moments and emits the running correlation; the
     sample-corr denominator uses n-1-normalized moments so the result
     equals covar_samp/(sx·sy)."""
-    import math
-
     prev, n, sx, sy, sxy, sxx, syy = scalars or (None, 0, 0.0, 0.0, 0.0, 0.0, 0.0)
     for _, _, v in ready:
         if prev is not None:
@@ -803,8 +788,10 @@ def _autocorr(user: int, scalars, ready: list, cutoff):
         cov = (sxy - sx * sy / n) / (n - 1)
         vx = (sxx - sx * sx / n) / (n - 1)
         vy = (syy - sy * sy / n) / (n - 1)
-        denom = math.sqrt(vx) * math.sqrt(vy)
-        corr = cov / denom if denom > 0 else None
+        # a constant series with fractional values can leave a variance
+        # a rounding step below zero: zero variance, NULL like the batch
+        if vx > 0 and vy > 0:
+            corr = cov / (math.sqrt(vx) * math.sqrt(vy))
     return (prev, n, sx, sy, sxy, sxx, syy), [(user, n, corr)]
 
 

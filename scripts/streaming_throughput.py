@@ -6,15 +6,17 @@ actually stresses is KEY count, not row rate):
 1. JVM stateful pipeline: rate source -> event-time watermark -> 10 s
    tumbling window x K-key aggregation -> memory sink (shuffle +
    state store, whole-stage codegen end to end), K in {100, 1000}.
-2. Reorder-buffered Python stateful ops (VERDICT r08 #6): fixed-size
-   micro-batches driving ``stateful_value_ewma``,
-   ``stateful_markov_transitions``, ``stateful_burst_detector`` and
-   ``stateful_session_funnel`` — Arrow transfer into
-   applyInPandasWithState, per-key watermark-delay reorder buffer
-   (sort + held rows), the operator's fold, key-group state
+2. Python keyed-state ops (VERDICT r08 #6): fixed-size micro-batches
+   driving ``stateful_value_ewma``, ``stateful_markov_transitions``,
+   ``stateful_burst_detector`` and ``stateful_session_funnel`` (rows
+   released at the watermark through the reorder buffer: sort + held
+   rows), ``count_window_stream`` (rows folded on arrival, no
+   watermark) and ``stateful_sessionize`` (rows folded on arrival,
+   per-user deadlines checked against the watermark) — Arrow transfer
+   into applyInPandasWithState, the operator's fold, key-group state
    round-trip — K in {1000, 10000, 100000}. This prices what the
-   buffer + Python state path costs relative to probe 1, and what a
-   key decade costs each path (users per key-group state row).
+   Python state path costs relative to probe 1, and what a key decade
+   costs each path (users per key-group state row).
 
 Probe 1's rate source is asked for more rows/s than the pipeline can
 absorb so it runs saturated. Probe 2 reads fixed-size micro-batches
@@ -22,10 +24,16 @@ absorb so it runs saturated. Probe 2 reads fixed-size micro-batches
 batch as large as the rows created while the previous one ran, so on
 a host slower than the target rate batch sizes (and memory) grow
 without bound. The EWMA takes a 2 s delay and one second of event
-time per batch; the other three have a fixed 30-minute delay, so
-their batches advance 10 minutes of event time and release rows from
-the fourth batch on. The reported number is the median
-processedRowsPerSecond over the steady-state micro-batches.
+time per batch; the others advance 10 minutes of event time per
+batch, so the three reorder-buffered ones, with a fixed 30-minute
+delay, release rows from the fourth batch on. The reported number is
+the median processedRowsPerSecond over the steady-state
+micro-batches.
+
+Each probe ends between two micro-batches (the query is stopped as
+soon as a micro-batch has finished, while the next one is still
+being planned, so no task is cancelled), and its memory table is
+dropped before the next probe starts.
 
 Run: python scripts/streaming_throughput.py [seconds]
 """
@@ -54,18 +62,34 @@ PY_OPS = {
     "markov": ("Python Markov", "stateful_markov_transitions", "append", 600_000),
     "burst": ("Python burst", "stateful_burst_detector", "update", 600_000),
     "funnel": ("Python funnel", "stateful_session_funnel", "append", 600_000),
+    "count_window": ("Python count window", "count_window_stream", "append", 600_000),
+    "sessionize": ("Python sessionize", "stateful_sessionize", "append", 600_000),
 }
 
 
-def _measure(q, run_s):
+def _stop_between_batches(q, wait_s: float) -> None:
+    """Stop ``q`` right after a micro-batch finishes: the next one is
+    then still on the driver (offsets, write-ahead log, planning), so
+    the stop cancels no task — a task cancelled mid-commit logs
+    CANNOT_COMMIT errors and breaks its Python worker's pipe. A batch
+    still running after ``wait_s`` is stopped where it is."""
+
+    def last() -> int:
+        p = q.lastProgress
+        return p["batchId"] if p else -1
+
+    done, until = last(), time.monotonic() + wait_s
+    while q.isActive and last() == done and time.monotonic() < until:
+        time.sleep(0.005)
+    q.stop()
+
+
+def _measure(spark, q, run_s):
     time.sleep(run_s)
+    _stop_between_batches(q, run_s)
     progress = list(q.recentProgress)
-    try:  # stopping a saturated query mid-batch surfaces the batch's
-        # interruption as an exception — the measurements are already
-        # collected, so a noisy stop must not kill the probe
-        q.stop()
-    except Exception as e:  # noqa: BLE001
-        print(f"(query stop raised: {type(e).__name__} — ignored)")
+    # the memory sink keeps every row it received until its view goes
+    spark.catalog.dropTempView(q.name)
     active = [
         p
         for p in progress
@@ -107,12 +131,11 @@ def probe_jvm(spark, keys: int):
         .outputMode("update")
         .start()
     )
-    return _measure(q, RUN_S)
+    return _measure(spark, q, RUN_S)
 
 
 def probe_op(spark, name: str, keys: int):
-    """Probe 2 for ``PY_OPS[name]`` at ``keys`` reorder-buffer/state
-    keys."""
+    """Probe 2 for ``PY_OPS[name]`` at ``keys`` state keys."""
     from pyspark.sql import functions as F
 
     from hello_flink_spark.streaming import stateful
@@ -144,7 +167,7 @@ def probe_op(spark, name: str, keys: int):
         .outputMode(mode)
         .start()
     )
-    return _measure(q, RUN_S)
+    return _measure(spark, q, RUN_S)
 
 
 def main() -> None:
@@ -224,7 +247,9 @@ def main() -> None:
         "count), measured this run (ratio = rows/s vs the probe's\n"
         "first row). Markov, burst and funnel batches carry 10 minutes\n"
         "of event time under their fixed 30-minute delay, so each one\n"
-        "holds about three batches of rows:\n\n"
+        "holds about three batches of rows; count window (no\n"
+        "watermark) and sessionize fold each batch's rows on arrival\n"
+        "and hold none:\n\n"
         "| probe | keys | median rows/s | median latency | ratio |\n"
         "|---|---|---|---|---|\n"
         f"{decades}\n"

@@ -19,12 +19,20 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hello_flink_spark.operators.joins import asof_join, asof_join_window
+from hello_flink_spark.streaming.stateful import (
+    COUNT_EVICT_KEEP,
+    COUNT_WINDOW_SIZE,
+    GLOBAL_TRIGGER_EVERY,
+    INACTIVITY_US,
+    SESSION_GAP_US,
+)
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -2959,12 +2967,176 @@ def test_reorder_split_folds_in_event_time_order_any_batching(events, cuts, dela
     assert folded == sorted(kept), "fold order diverged from event-time order"
 
 
+# ---------------------------------------------------------------------------
+# The per-user GroupState processors the six on-arrival operators ran on
+# before the key-group driver, kept verbatim as its reference
+# ---------------------------------------------------------------------------
+
+
+def _sorted_concat(pdfs: Iterator[pd.DataFrame], by: list[str]) -> pd.DataFrame:
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    return pdf.sort_values(by, ignore_index=True)
+
+
+def _running_agg(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    cnt, total = state.get if state.exists else (0, 0.0)
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    cnt += len(pdf)
+    total += float(pdf["value"].sum())
+    state.update((cnt, total))
+    yield pd.DataFrame({"user_id": [key[0]], "event_cnt": [cnt], "total_value": [round(total, 2)]})
+
+
+def _sessionize(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Custom sessionization: emit a (user, session_start, cnt, total)
+    row when a session closes — either because a later event arrived
+    past the gap (in-order closure) or because the event-time timer
+    fired (watermark passed start+gap with no successor: the
+    stateful_timer path)."""
+    out: list[dict] = []
+
+    def close(sess):
+        out.append(
+            {
+                "user_id": key[0],
+                # integer µs → exactly representable in Arrow timestamp[us]
+                "session_start": pd.Timestamp(int(sess[0]), unit="us"),
+                "cnt": int(sess[2]),
+                "total_value": round(float(sess[3]), 2),
+            }
+        )
+
+    if state.hasTimedOut:
+        if state.exists:
+            close(state.get)
+            state.remove()
+        yield pd.DataFrame(out)
+        return
+
+    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
+    sess = list(state.get) if state.exists else None  # [start_us, last_us, cnt, total]
+    for ts, value in zip(pdf["ts"], pdf["value"]):
+        ts_us = ts.value // 1000  # pd.Timestamp ns → µs, exact
+        if sess is None:
+            sess = [ts_us, ts_us, 0, 0.0]
+        elif ts_us - sess[1] >= SESSION_GAP_US:
+            close(sess)
+            sess = [ts_us, ts_us, 0, 0.0]
+        sess[1] = ts_us
+        sess[2] += 1
+        sess[3] += float(value)
+    state.update(tuple(sess))
+    # [F] timerService().registerEventTimeTimer(last_ts + gap)
+    state.setTimeoutTimestamp((sess[1] + SESSION_GAP_US) // 1000)
+    yield pd.DataFrame(out)
+
+
+def _inactivity(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    if state.hasTimedOut:
+        last_us, cnt = state.get
+        state.remove()
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "last_seen": [pd.Timestamp(int(last_us), unit="us")],
+                "events_before_idle": [int(cnt)],
+            }
+        )
+        return
+    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
+    last_us = int(pdf["ts"].iloc[-1].value // 1000)
+    cnt = (state.get[1] if state.exists else 0) + len(pdf)
+    state.update((last_us, cnt))
+    # pure timer semantics: the ONLY output is timer-driven (the alert)
+    state.setTimeoutTimestamp((last_us + INACTIVITY_US) // 1000)
+    yield pd.DataFrame([])
+
+
+def _count_window(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    chunk_idx, buf_cnt, buf_sum = state.get if state.exists else (0, 0, 0.0)
+    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
+    out: list[dict] = []
+    for value in pdf["value"]:
+        buf_cnt += 1
+        buf_sum += float(value)
+        if buf_cnt == COUNT_WINDOW_SIZE:
+            out.append(
+                {
+                    "user_id": key[0],
+                    "chunk": chunk_idx,
+                    "cnt": COUNT_WINDOW_SIZE,
+                    "total_value": round(buf_sum, 2),
+                }
+            )
+            chunk_idx += 1
+            buf_cnt, buf_sum = 0, 0.0
+    state.update((chunk_idx, buf_cnt, buf_sum))
+    yield pd.DataFrame(out)
+
+
+def _global_count_trigger(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    cnt, total = state.get if state.exists else (0, 0.0)
+    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
+    out: list[dict] = []
+    for value in pdf["value"]:
+        cnt += 1
+        total += float(value)
+        if cnt % GLOBAL_TRIGGER_EVERY == 0:
+            out.append(
+                {"user_id": key[0], "fire_at": cnt, "total_value": round(total, 2)}
+            )
+    state.update((cnt, total))
+    yield pd.DataFrame(out)
+
+
+def _count_window_evictor(
+    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    chunk_idx, buf_cnt, ring = state.get if state.exists else (0, 0, [])
+    ring = list(ring)
+    pdf = _sorted_concat(pdfs, ["ts", "event_id"])
+    out: list[dict] = []
+    for value in pdf["value"]:
+        buf_cnt += 1
+        ring.append(float(value))
+        # the evictor's buffer bound IS the state bound: only the last
+        # `keep` elements can ever be aggregated, so older ones drop
+        # the moment they are displaced — state stays O(keep), not O(n)
+        if len(ring) > COUNT_EVICT_KEEP:
+            ring.pop(0)
+        if buf_cnt == COUNT_WINDOW_SIZE:
+            out.append(
+                {
+                    "user_id": key[0],
+                    "chunk": chunk_idx,
+                    "cnt_kept": len(ring),
+                    "total_value": round(sum(ring), 2),
+                }
+            )
+            chunk_idx += 1
+            buf_cnt, ring = 0, []
+    state.update((chunk_idx, buf_cnt, ring))
+    yield pd.DataFrame(out)
+
+
 class _TimerGroupState:
     """The slice of Spark's GroupState ``_key_group_fold`` touches,
     with Spark's timer rules: a call starts with no timer, and a timer
-    below the watermark (or not positive) is refused."""
+    below the watermark (or not positive) is refused. ``wm_ms`` None
+    is a stream with no watermark: reading it raises, as it does in
+    Spark, and so does setting a timer (no timeouts)."""
 
-    def __init__(self, value, wm_ms: int, timed_out: bool = False):
+    def __init__(self, value, wm_ms: int | None, timed_out: bool = False):
         self.value, self.wm_ms, self.hasTimedOut = value, wm_ms, timed_out
         self.timer = None
 
@@ -2977,6 +3149,7 @@ class _TimerGroupState:
         return tuple(self.value)
 
     def getCurrentWatermarkMs(self):
+        assert self.wm_ms is not None, "read the watermark of a stream without one"
         return self.wm_ms
 
     def update(self, value):
@@ -2986,6 +3159,7 @@ class _TimerGroupState:
         self.value = None
 
     def setTimeoutTimestamp(self, ms):
+        assert self.wm_ms is not None, "a timer on a stream without a watermark"
         assert 0 < ms and ms >= self.wm_ms, f"timer {ms} below watermark {self.wm_ms}"
         self.timer = ms
 
@@ -3006,7 +3180,7 @@ def _rows(frame):
             st.integers(0, 30),  # event time, ms past the base
             st.sampled_from([0, 1, 999_999]),  # ns inside that ms
             st.integers(0, 7),  # user
-            st.integers(0, 1000),  # value
+            st.integers(0, 10_000),  # value in tenths: sums round
             st.sampled_from(["view", "click", "purchase"]),  # event type
         ),
         min_size=1,
@@ -3014,7 +3188,8 @@ def _rows(frame):
     ),
     cuts=st.lists(st.integers(0, 39), max_size=8),
     # from each of these rows on, event time is one more session gap
-    # (30 min) later, so funnel sessions close mid-stream
+    # (30 min) later, so sessions close mid-stream (and two jumps make
+    # an hour of inactivity)
     jumps=st.lists(st.integers(1, 39), max_size=2),
     delay=st.integers(1, 4),
     groups=st.integers(1, 4),
@@ -3028,9 +3203,9 @@ def _rows(frame):
     delay=1,
     groups=1,
 )
-# a funnel session whose gap horizon sits exactly at the watermark
-# stays open, and must close by a timeout in the batch whose watermark
-# is 1 ms past it
+# a session whose gap horizon sits exactly at the watermark stays open,
+# and must close by a timeout in the batch whose watermark is 1 ms past
+# it; with one group, a data call sees the horizon at the watermark first
 @example(
     events=[(5, 0, 0, 1, "view"), (6, 0, 1, 2, "view"), (7, 0, 1, 3, "click")],
     cuts=[1, 2],
@@ -3038,21 +3213,49 @@ def _rows(frame):
     delay=1,
     groups=2,
 )
+@example(
+    events=[(5, 0, 0, 1, "view"), (6, 0, 1, 2, "view"), (7, 0, 1, 3, "click")],
+    cuts=[1, 2],
+    jumps=[1],
+    delay=1,
+    groups=1,
+)
+# user 0's idle deadline sits exactly at the watermark in a data call
+# for its group, then passes it in a timeout-only call
+@example(
+    events=[(0, 0, 0, 1, "view"), (1, 0, 1, 2, "view"), (2, 0, 1, 3, "click")],
+    cuts=[1, 2],
+    jumps=[1, 1],
+    delay=1,
+    groups=1,
+)
+# 0.1 + (0.2 + 0.3) != (0.1 + 0.2) + 0.3: the running sum adds each
+# micro-batch's sum, and a fold that added row by row would show
+@example(
+    events=[(0, 0, 0, 1, "view"), (1, 0, 0, 2, "view"), (2, 0, 0, 3, "view")],
+    cuts=[1],
+    jumps=[],
+    delay=1,
+    groups=1,
+)
 @settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, delay, groups):
     """``_key_group_fold``, under Spark's call rules (one data call per
     group with arrivals, then one timeout call per other group whose
     timer is below the watermark), emits per micro-batch exactly the
-    rows of a per-user reference that runs every user through
-    ``_reorder_split`` and the fold each batch — folding a user whose
-    deadline is due even with no rows ready, and dropping a user whose
-    fold returns None — and ends in the same per-user state, for each
-    of the seven folds, with several users per group, rows below the
-    watermark and timeout-only calls. No group state row is ever
-    empty, and a watermark past every session gap leaves no funnel
-    user and no group row."""
-    import pandas as pd
-
+    rows of a per-user reference and ends in the same per-user state,
+    for all thirteen folds, with several users per group, rows below
+    the watermark and timeout-only calls. For the seven watermark-rule
+    folds the reference runs every user through ``_reorder_split`` and
+    the fold each batch, folding a user whose deadline is due even with
+    no rows ready and dropping a user whose fold returns None. For the
+    six on-arrival folds it is the per-user GroupState processor each
+    ran on before, under Spark's per-user call rules: a data call for a
+    user with rows, else a timeout call once its timer is below the
+    watermark; the four count operators run without a watermark. No
+    group state row is ever empty, an on-arrival group never holds
+    rows, and a watermark past every deadline leaves no session or
+    idle user and no group row."""
     from hello_flink_spark.streaming import stateful
     from hello_flink_spark.streaming.stateful import _reorder_split
 
@@ -3061,7 +3264,7 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, del
     rows = [
         (
             (base_ms + t + gap_ms * sum(j <= i for j in jumps)) * 1_000_000 + ns,
-            u, i, float(v), et,
+            u, i, v / 10, et,
         )
         for i, (t, ns, u, v, et) in enumerate(events)
     ]
@@ -3069,7 +3272,7 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, del
     batches = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     # the watermark each batch runs under; as in Spark, a watermark
     # advance runs a no-data batch (timeouts only), and a last one
-    # flushes every held row and closes every session (the
+    # flushes every held row and passes every deadline (the
     # bounded-input MAX_WATERMARK)
     runs, wm, seen = [], 0, 0
     for batch in batches:
@@ -3078,25 +3281,45 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, del
         if seen - delay > wm:
             wm = seen - delay
             runs.append(([], wm))
-    runs.append(([], seen + delay + gap_ms + 100))
+    runs.append(([], seen + delay + INACTIVITY_US // 1000 + 100))
 
-    ops = (
-        stateful._MARKOV, stateful._BURST, stateful._EWMA, stateful._AUTOCORR,
-        stateful._DELTA_TRIGGER, stateful._CUSUM, stateful._SESSION_FUNNEL,
-    )
-    for op in ops:
+    def frame(rs):
+        f = pd.DataFrame(rs, columns=["ts", "user_id", "event_id", "value", "event_type"])
+        f["ts"] = pd.to_datetime(f["ts"])
+        return f
+
+    # (fold, per-user processor or None, stream has a watermark)
+    ops = [
+        (op, None, True)
+        for op in (
+            stateful._MARKOV, stateful._BURST, stateful._EWMA, stateful._AUTOCORR,
+            stateful._DELTA_TRIGGER, stateful._CUSUM, stateful._SESSION_FUNNEL,
+        )
+    ] + [
+        (stateful._RUNNING_AGG, _running_agg, False),
+        (stateful._COUNT_WINDOW, _count_window, False),
+        (stateful._GLOBAL_COUNT_TRIGGER, _global_count_trigger, False),
+        (stateful._COUNT_WINDOW_EVICTOR, _count_window_evictor, False),
+        (stateful._SESSIONIZE, _sessionize, True),
+        (stateful._INACTIVITY, _inactivity, True),
+    ]
+    for op, processor, timed in ops:
         n = 1 + len(op.scalars)  # the group row's uid and scalar columns
-        group_state, timers, ref_state, ref_held = {}, {}, {}, {}
+        group_state, timers, ref_state, ref_held, ref_timers = {}, {}, {}, {}, {}
         for batch, wm in runs:
+            wm = wm if timed else None
             cutoff = wm * 1_000_000 if wm else None
-            got = []
+            live = [r for r in batch if cutoff is None or r[0] >= cutoff]
+            got, want = [], []
 
             def call(g, frames, timed_out):
                 st_ = _TimerGroupState(group_state.get(g), wm, timed_out)
-                for out in stateful._key_group_fold("UTC", op, (g,), iter(frames), st_):
+                tz = "UTC" if timed else None
+                for out in stateful._key_group_fold(tz, op, (g,), iter(frames), st_):
                     got.extend(_rows(out))
                 if st_.exists:
                     assert st_.value[0] or st_.value[n], "an empty group state row"
+                    assert not (op.on_arrival and st_.value[n]), "an on-arrival row held"
                     group_state[g], timers[g] = st_.value, st_.timer
                 else:
                     group_state.pop(g, None)
@@ -3105,38 +3328,55 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, del
             for r in batch:
                 by_group.setdefault(r[1] % groups, []).append(r)
             for g, rs in by_group.items():
-                frame = pd.DataFrame(
-                    rs, columns=["ts", "user_id", "event_id", "value", "event_type"]
-                )
-                frame["ts"] = pd.to_datetime(frame["ts"])
-                call(g, [frame], False)
+                call(g, [frame(rs)], False)
             for g in [g for g in group_state if g not in by_group]:
                 if timers[g] is not None and timers[g] < wm:
                     call(g, [], True)
 
-            want = []
-            arriving: dict = {}
-            for t, u, e, v, et in batch:
-                if cutoff is None or t >= cutoff:
+            if processor is not None:
+
+                def ref_call(u, frames, timed_out):
+                    st_ = _TimerGroupState(ref_state.get(u), wm, timed_out)
+                    for out in processor((u,), iter(frames), st_):
+                        want.extend(_rows(out))
+                    if st_.exists:
+                        ref_state[u], ref_timers[u] = st_.value, st_.timer
+                    else:
+                        ref_state.pop(u, None)
+
+                # Spark filters late rows out before the call; it hands
+                # a user's rows in no set order, so the reference gets
+                # them in the (ts, event_id) order the driver folds in
+                by_user: dict = {}
+                for r in sorted(live):
+                    by_user.setdefault(r[1], []).append(r)
+                for u, rs in by_user.items():
+                    ref_call(u, [frame(rs)], False)
+                for u in [u for u in ref_state if u not in by_user]:
+                    if ref_timers[u] is not None and ref_timers[u] < wm:
+                        ref_call(u, [], True)
+            else:
+                arriving: dict = {}
+                for t, u, e, v, et in live:
                     payload = {"value": v, "event_type": et}
                     arriving.setdefault(u, []).append(
                         (t, e, *(payload[c] for c in op.arrival[2:]))
                     )
-            due = set()
-            if op.deadline and cutoff is not None:
-                due = {u for u, s in ref_state.items() if op.deadline(s) < cutoff}
-            for u in sorted(ref_held.keys() | arriving.keys() | due):
-                ready, ref_held[u] = _reorder_split(
-                    ref_held.get(u, []), arriving.get(u, []), cutoff
-                )
-                if ready or u in due:
-                    s, out = op.fold(u, ref_state.get(u), ready, cutoff)
-                    if s is None:
-                        ref_state.pop(u, None)
-                    else:
-                        ref_state[u] = s
-                    want += out
-            ref_held = {u: b for u, b in ref_held.items() if b}
+                due = set()
+                if op.deadline and cutoff is not None:
+                    due = {u for u, s in ref_state.items() if op.deadline(s) < cutoff}
+                for u in sorted(ref_held.keys() | arriving.keys() | due):
+                    ready, ref_held[u] = _reorder_split(
+                        ref_held.get(u, []), arriving.get(u, []), cutoff
+                    )
+                    if ready or u in due:
+                        s, out = op.fold(u, ref_state.get(u), ready, cutoff)
+                        if s is None:
+                            ref_state.pop(u, None)
+                        else:
+                            ref_state[u] = s
+                        want += out
+                ref_held = {u: b for u, b in ref_held.items() if b}
             assert sorted(got, key=lambda r: r[:2]) == sorted(want, key=lambda r: r[:2])
 
         assert not ref_held

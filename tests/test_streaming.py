@@ -654,14 +654,22 @@ def test_stateful_running_agg(spark, sf_dir, replay_dir):
         .collect()
     )
     got = {r.user_id: r.event_cnt for r in final}
-    want = {
-        r.user_id: r.event_cnt
-        for r in load_table(spark, sf_dir, "events")
+    batch = (
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(F.count("*").alias("event_cnt"))
+        .agg(F.count("*").alias("event_cnt"), F.sum("value").alias("total_value"))
         .collect()
-    }
+    )
+    want = {r.user_id: r.event_cnt for r in batch}
     assert got == want
+    # each user's last update carries the total of all its events
+    totals = {
+        r.user_id: r.total_value
+        for r in spark.table("t_srun").collect()
+        if r.event_cnt == want[r.user_id]
+    }
+    for r in batch:
+        assert abs(totals[r.user_id] - r.total_value) <= 0.01, r
 
 
 def test_stateful_sessionize_matches_batch_shadow(spark, sf_dir, replay_dir):
@@ -1094,6 +1102,99 @@ def test_windowed_state_recovers_across_restart(spark, sf_dir, tmp_path):
     assert any(r.window_start == cut_window for r in emitted), (
         "cut-spanning window never finalized — state did not merge across restart"
     )
+
+
+def _run_across_restart(spark, tmp_path, fn, events, cut):
+    """Run ``fn`` over ``events`` in two availableNow sessions on ONE
+    checkpoint: the first over the events before ``cut``, the second
+    over the rest. Returns the parquet sink's rows."""
+    d = str(tmp_path / "replay")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    for k, part in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
+        events.filter(part).coalesce(1).write.parquet(os.path.join(d, f"chunk_{k:03d}"))
+        jobs.to_parquet_sink(fn(replay.read_stream(spark, d)), out, ckpt).awaitTermination()
+    return spark.read.parquet(out).collect()
+
+
+def test_count_window_evictor_recovers_across_restart(spark, sf_dir, tmp_path):
+    """count_window_evictor_stream's key-group state (each user's
+    count and ring of kept values) survives a restart: over two
+    sessions it emits every full chunk once, equal to the batch shadow
+    of the single-run golden, the chunks whose events straddle the cut
+    included."""
+    events = load_table(spark, sf_dir, "events")
+    lo, hi = events.agg(F.min("ts"), F.max("ts")).head()
+    cut = lo + (hi - lo) / 2
+    emitted = _run_across_restart(
+        spark, tmp_path, stateful.count_window_evictor_stream, events, cut
+    )
+    got = {(r.user_id, r.chunk): (r.cnt_kept, r.total_value) for r in emitted}
+    assert len(got) == len(emitted), "chunk emitted twice across restart"
+    full_keys = {
+        (r.user_id, r.chunk)
+        for r in get_spec("window_count")
+        .fn(spark, sf_dir)
+        .filter(F.col("cnt") == stateful.COUNT_WINDOW_SIZE)
+        .collect()
+    }
+    want = {
+        (r.user_id, r.chunk): (r.cnt_kept, r.total_value)
+        for r in get_spec("window_count_evictor").fn(spark, sf_dir).collect()
+        if (r.user_id, r.chunk) in full_keys
+    }
+    assert got == want
+    by_user: dict = {}
+    for r in events.collect():
+        by_user.setdefault(r.user_id, []).append((r.ts, r.event_id))
+    size = stateful.COUNT_WINDOW_SIZE
+    straddling = {
+        (u, i // size)
+        for u, evs in by_user.items()
+        for i in range(0, len(evs) - size + 1, size)
+        if sorted(evs)[i][0] < cut <= sorted(evs)[i + size - 1][0]
+    }
+    assert straddling, "no full chunk straddles the cut"
+    assert straddling <= got.keys()
+
+
+def test_stateful_sessionize_recovers_across_restart(spark, sf_dir, tmp_path):
+    """stateful_sessionize's key-group state (open sessions and their
+    deadlines) survives a restart: cut between two events of one
+    session near the middle of the stream, two sessions emit every
+    session equal to the batch shadow of the single-run golden, each
+    session a later one of its user closes once, and the session open
+    across the cut with its events from both runs."""
+    import datetime as dt
+
+    events = load_table(spark, sf_dir, "events")
+    by_user: dict = {}
+    for r in events.collect():
+        by_user.setdefault(r.user_id, []).append(r.ts)
+    pairs = [
+        (u, a, b)
+        for u, ts in by_user.items()
+        for a, b in zip(sorted(ts), sorted(ts)[1:])
+        if b - a < dt.timedelta(minutes=30)
+    ]
+    lo, hi = events.agg(F.min("ts"), F.max("ts")).head()
+    user, before, cut = min(pairs, key=lambda p: abs(p[2] - (lo + (hi - lo) / 2)))
+    emitted = _run_across_restart(
+        spark, tmp_path, lambda s: stateful.stateful_sessionize(s, WM), events, cut
+    )
+    got = {(r.user_id, r.session_start): (r.cnt, r.total_value) for r in emitted}
+    assert len(got) == len(emitted), "session emitted twice across restart"
+    want = {
+        (r.user_id, r.session_start): (r.cnt, r.total_value)
+        for r in get_spec("window_session").fn(spark, sf_dir).collect()
+    }
+    mismatches = {k: (v, want.get(k)) for k, v in got.items() if want.get(k) != v}
+    assert not mismatches, f"sessions diverge from batch shadow: {list(mismatches.items())[:3]}"
+    last: dict = {}
+    for u, start in want:
+        last[u] = max(last.get(u, start), start)
+    assert {k for k in want if k[1] < last[k[0]]} <= got.keys()
+    spanning = (user, max(s for u, s in want if u == user and s <= before))
+    assert spanning in got, "the session open across the cut was not emitted"
 
 
 def test_foreach_batch_upsert(spark, sf_dir, replay_dir, tmp_path):
@@ -2204,10 +2305,10 @@ def test_stateful_autocorr_equals_batch_shadow(spark, sf_dir, ooo_flush_replay_d
 
 
 def _run_key_group_stream(spark, tmp_path, op):
-    """Run one reorder-buffered operator over 300 users in three
-    parquet chunks, odd events 10 minutes early (inside the delay),
-    and a sentinel chunk a day later whose watermark releases every
-    held row and closes every funnel session. Asserts the state store
+    """Run one key-group operator over 300 users in three parquet
+    chunks, odd events 10 minutes early (inside the delay), and a
+    sentinel chunk a day later whose watermark releases every held row
+    and passes every session and idle deadline. Asserts the state store
     never held more than KEY_GROUPS rows (a per-user store holds about
     300 here). Returns the query, its memory table and the events."""
     fn, mode = {
@@ -2215,6 +2316,12 @@ def _run_key_group_stream(spark, tmp_path, op):
         "markov": (stateful.stateful_markov_transitions, "append"),
         "burst": (stateful.stateful_burst_detector, "update"),
         "funnel": (stateful.stateful_session_funnel, "append"),
+        "running_agg": (stateful.stateful_running_agg, "update"),
+        "count_window": (stateful.count_window_stream, "append"),
+        "global_count_trigger": (stateful.global_count_trigger_stream, "append"),
+        "count_window_evictor": (stateful.count_window_evictor_stream, "append"),
+        "sessionize": (stateful.stateful_sessionize, "append"),
+        "inactivity": (stateful.inactivity_alerts, "append"),
     }[op]
     users, n = 300, 1200
     src = str(tmp_path / "replay")
@@ -2275,19 +2382,30 @@ def test_stateful_ewma_keeps_one_state_row_per_key_group(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.parametrize("op", ["markov", "burst", "funnel"])
+@pytest.mark.parametrize(
+    "op",
+    [
+        "markov", "burst", "funnel", "running_agg", "count_window",
+        "global_count_trigger", "count_window_evictor", "sessionize", "inactivity",
+    ],
+)
 def test_stateful_ops_keep_one_state_row_per_key_group(spark, tmp_path, op):
-    """stateful_markov_transitions, stateful_burst_detector and
-    stateful_session_funnel keep their per-user state in at most
-    KEY_GROUPS state rows too. The funnel drops a user when its
-    session closes and a group when it empties: each user's four
-    events are 300 minutes apart, four one-event sessions, and once
-    the sentinel's watermark has closed all 1,200 of them only the
-    sentinel's group is left."""
+    """Every other key-group operator keeps its per-user state in at
+    most KEY_GROUPS state rows too, the four count operators on a
+    stream without a watermark. The funnel, the sessionizer and the
+    inactivity timer drop a user when its session closes or it goes
+    idle, and a group when it empties: each user's four events are
+    300 minutes apart, four one-event sessions and four idle spells,
+    and once the sentinel's watermark has passed all of them only the
+    sentinel's group is left: 1,200 closed sessions, but 300 idle
+    alerts, because each user's next event arrives in the micro-batch
+    whose watermark passes its idle deadline, and a key with data gets
+    a data call, which re-arms its timer, not a timeout."""
     q, table, _ = _run_key_group_stream(spark, tmp_path, op)
-    if op == "funnel":
+    closed = {"funnel": 1200, "sessionize": 1200, "inactivity": 300}
+    if op in closed:
         assert q.lastProgress.stateOperators[0].numRowsTotal <= 1
-        assert spark.table(table).filter(F.col("user_id") >= 0).count() == 1200
+        assert spark.table(table).filter(F.col("user_id") >= 0).count() == closed[op]
 
 
 def test_cep_not_between_equals_batch_shadow(spark, sf_dir, replay_dir):
