@@ -1981,11 +1981,20 @@ def _any_join(pattern: CepPattern, cur, events: DataFrame, i: int, w, total_pred
     survives as its own branch row. rel_guards compose (the guard
     predicate filters the branch set); a referenced any-match stage
     carries the branch event's own value (no argmin needed — the
-    branch IS the event)."""
+    branch IS the event). Each branch row also carries its event's id
+    (``__br{i}``, dropped at the end of ``_chain``), so two branch
+    events at the same timestamp stay two rows through the later
+    stages' GROUP BY, as they stay two branches in the NFA."""
     referenced = set(pattern.referenced_steps)
     rel = pattern.rel_guards[i] if pattern.rel_guards is not None else None
-    need_v = i in referenced or rel is not None
-    nxt = _stage_events(pattern, events, i, with_value=need_v)
+    cols = [
+        F.col("user_id").alias("__u"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").alias(f"__br{i}"),
+    ]
+    if i in referenced or rel is not None:
+        cols.append(F.col("value").alias("__v"))
+    nxt = _stage_filter(pattern, events, i).select(*cols)
     prev_ts = pattern.ts_col(i - 1)
     cond = (
         (F.col("user_id") == F.col("__u"))
@@ -1998,7 +2007,10 @@ def _any_join(pattern: CepPattern, cur, events: DataFrame, i: int, w, total_pred
         cond = cond & (
             F.col("__v") >= F.lit(rel[1]) * F.col(pattern.val_col(rel[0]))
         )
-    sel = [F.col(c) for c in cur.columns] + [F.col("__ts").alias(pattern.ts_col(i))]
+    sel = [F.col(c) for c in cur.columns] + [
+        F.col("__ts").alias(pattern.ts_col(i)),
+        F.col(f"__br{i}"),
+    ]
     if i in referenced:
         sel.append(F.col("__v").alias(pattern.val_col(i)))
     return cur.join(nxt, cond, "inner").select(*sel)
@@ -2112,7 +2124,7 @@ def _chain(pattern: CepPattern, events: DataFrame, left: bool) -> DataFrame:
                 i,
             )
             i += 1
-    return cur
+    return cur.drop(*(f"__br{s}" for s in pattern.any_match_steps))
 
 
 def compile_batch(pattern: CepPattern, events: DataFrame) -> DataFrame:
@@ -2338,9 +2350,12 @@ def _oracle_chain(pattern: CepPattern, left: bool) -> str:
                 f", e.value AS {pattern.val_col(i)}" if i in referenced else ""
             )
             # the band join WITHOUT the MIN collapse: every candidate
-            # is its own branch row ([F] followedByAny)
+            # is its own branch row ([F] followedByAny), carrying its
+            # event id so same-timestamp branches stay apart through
+            # the later GROUP BYs
             sql += (
-                f", s{i + 1} AS (SELECT {qcols}, e.ts AS {this_ts}{valsel} "
+                f", s{i + 1} AS (SELECT {qcols}, e.ts AS {this_ts}{valsel}, "
+                f"e.event_id AS __br{i} "
                 f"FROM {prev} JOIN events e ON e.user_id = {prev}.user_id "
                 f"AND e.event_type {tl(i)} {guard}{relg}"
                 f"AND e.ts > {prev}.{prev_ts} AND e.ts <= {prev}.{prev_ts} + {w} "
@@ -2399,6 +2414,8 @@ def _oracle_chain(pattern: CepPattern, left: bool) -> str:
         cols.append(this_ts)
         if i in referenced:
             cols.append(pattern.val_col(i))
+        if i in pattern.any_match_steps:
+            cols.append(f"__br{i}")
         if pattern.not_next is not None and pattern.not_next[i] is not None:
             sql, prev = not_next_cte(sql, prev, cols, i)
     if left:
@@ -2411,7 +2428,8 @@ def _oracle_chain(pattern: CepPattern, left: bool) -> str:
         f" AND {pattern.ts_col(s)} IS NOT NULL" for s in pattern.strict_steps
     )
     where = f" WHERE TRUE{strict_keep}" if strict_keep else ""
-    return f"{sql} SELECT user_id, {', '.join(cols)} FROM {prev}{where}"
+    out = [c for c in cols if not c.startswith("__br")]
+    return f"{sql} SELECT user_id, {', '.join(out)} FROM {prev}{where}"
 
 
 def oracle_sql_timeouts(pattern: CepPattern) -> str:

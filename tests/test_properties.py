@@ -2714,6 +2714,10 @@ ANY_EVENTS = st.lists(
 
 
 @given(events=ANY_EVENTS, cuts=st.lists(st.integers(0, 24), max_size=4))
+@example(
+    events=[(1, 0, "a", 0.0), (1, 1, "b", 0.0), (1, 1, "b", 0.0), (1, 2, "c", 0.0)],
+    cuts=[],
+)
 @SETTINGS
 def test_cep_any_match_mid_all_targets_agree(spark, events, cuts):
     """followedByAny on a MIDDLE stage: every b within the window of a
