@@ -14,12 +14,24 @@ The fixed-point check is a driver-side scalar per round (count +
 order-insensitive xxhash64 checksum of the canonical edge set). An
 action per iteration is inherent to convergence-checked iterative
 algorithms — it is one tiny aggregate, not a collect of data rows.
+
+Small graphs skip the rounds. The entry edge set is probed with a
+LIMIT-bounded collect (the bounded-broadcast protocol of
+``scale.anti_join_bounded``): a graph of at most ``HOT_BROADCAST_MAX``
+canonical edges — every near-dup pair graph of the test bed has a few
+dozen — is labeled on the driver by union-find, so the build waits
+for the probe and none of the rounds' checkpoint and convergence
+jobs. A larger graph runs the rounds below on the same entry
+checkpoint the probe began filling.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
+
+from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX
 
 MAX_ROUNDS = 25  # ~log²(n) bound; 25 covers graphs far beyond any test rig
 
@@ -153,6 +165,35 @@ def _checksum(canon: DataFrame, star_test: bool = True) -> tuple[int, int, bool]
     return int(row["n"]), int(row["h"]), int(row["viol"]) == 0
 
 
+def _union_find_labels(
+    spark: SparkSession, edges: list, node_type: DataType
+) -> DataFrame:
+    """Driver finish: ``(node, label)`` for every endpoint of the (u, v)
+    rows in ``edges``, label = min node id of its component. Edges with
+    a null endpoint and self-loops are dropped, as ``_canonical`` drops
+    them, so a node with no other edge gets no label."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        if u is None or v is None or u == v:
+            continue
+        ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+        if ru != rv:  # the smaller root wins, so a root is its component's min
+            parent[max(ru, rv)] = min(ru, rv)
+    schema = StructType(
+        [StructField("node", node_type), StructField("label", node_type)]
+    )
+    return spark.createDataFrame([(n, find(n)) for n in parent], schema)
+
+
 def connected_components(
     edges: DataFrame, src: str = "u", dst: str = "v",
     assume_canonical: bool = False,
@@ -172,15 +213,21 @@ def connected_components(
     out of a keyed aggregation (pass src=the larger column). The
     entry materialization is then map-only instead of paying a full
     edge-set shuffle.
+
+    A graph of at most ``HOT_BROADCAST_MAX`` entry edges is labeled on
+    the driver (module docstring); the output columns, their type and
+    the labels are the same on both paths.
     """
-    # non-eager: the _checksum action right below is the first
-    # materialization and persists the checkpoint in the SAME job —
-    # one job launch saved per round vs eager=True (round-17,
-    # guide §1.2 "fewer passes"), identical caching afterwards.
+    # non-eager: the bounded probe right below is the first
+    # materialization and persists the checkpoint in the SAME job; past
+    # the bound, the rounds read the partitions it filled.
     named = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     cur = (named if assume_canonical else _canonical(named)).localCheckpoint(
         eager=False
     )
+    head = cur.limit(HOT_BROADCAST_MAX + 1).collect()
+    if len(head) <= HOT_BROADCAST_MAX:
+        return _union_find_labels(cur.sparkSession, head, cur.schema["u"].dataType)
 
     sig = _checksum(cur)
     if not sig[2]:  # entry already a star forest ⇒ zero rounds needed

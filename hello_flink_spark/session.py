@@ -27,7 +27,10 @@ only when its inode, size or mtime changed, so an unchanged one costs
 a ``stat``. The package must be importable where the daemon starts:
 the local master gets that from ``spark.executorEnv.PYTHONPATH`` (the
 package's parent directory); a cluster must install the package on
-its executors, as it already must for any query UDF.
+its executors, as it already must for any query UDF. Workers run with
+``PYTHONSAFEPATH=1``: ``python -m`` would otherwise put the driver's
+working directory first on ``sys.path``, and a ``hello_flink_spark``
+there (another checkout) would shadow the driver's own package.
 
 On a real cluster these configs are a starting point; the operators in
 this package are written so their *plans* scale (broadcast hints on
@@ -75,6 +78,7 @@ def get_spark(app_name: str = "hello-flink-spark", cpus: str | None = None) -> S
         # the package's parent dir lets it start from any driver cwd.
         .config("spark.python.daemon.module", "hello_flink_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         # -- streaming state ------------------------------------------------
         .config(
             "spark.sql.streaming.stateStore.providerClass",

@@ -6,15 +6,27 @@ Schema comes from the parquet footer (SURVEY §1.1), so scans get
 vectorized reading, predicate pushdown, and column pruning for free.
 
 ``load_table`` is the single entry point every declared query uses; it
-never caches, never collects, and keeps the scan lazy so Catalyst can
-push filters/projections from downstream operators into the reader.
+never caches data, never collects, and keeps the scan lazy so Catalyst
+can push filters/projections from downstream operators into the reader.
+
+What it does keep is each table's inferred schema. Inferring a parquet
+schema launches a Spark job (one per ``spark.read.parquet`` call), and
+a query's build waits for it; a later read of an unchanged table passes
+the kept schema to ``spark.read.schema(...)`` and launches none. The
+schema is kept per path, under a signature of every file in it
+(name, size, mtime_ns) plus the session settings that change what
+inference returns: a rewritten or added file is inferred again, and a
+path the driver cannot ``stat`` (a remote store, a partitioned
+directory) is inferred on every read.
 """
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,6 +40,53 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# session settings that change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (signature, inferred schema); one entry per path read
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files_signature(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of the file at ``path``, or of every entry
+    of the directory at ``path``; None when the driver cannot stat it or
+    the directory holds sub-directories (partition discovery)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        sig = []
+        with os.scandir(path) as entries:
+            for e in entries:
+                if e.is_dir():
+                    return None
+                st = e.stat()
+                sig.append((e.name, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(sig))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema kept from the last
+    inference of the same, unchanged files (module docstring)."""
+    files = _files_signature(path)
+    if files is None:
+        return spark.read.parquet(path)
+    sig = (files, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    kept = _SCHEMAS.get(path)
+    if kept is not None and kept[0] == sig:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -61,7 +120,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Session built outside get_spark (e.g. the driver's own): the
             # flag is read at scan time, so setting it here still works.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -80,7 +139,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

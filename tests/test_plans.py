@@ -361,6 +361,9 @@ COLLECT_SITES_OK = {
     # PQ trainer: k x dim codebook rows per subspace (constant), twice
     # (init + refined).
     ("queries/round7.py", "pq_train_frame", "collect"): 2,
+    # connected components: the entry edge set's LIMIT-bounded probe,
+    # at most HOT_BROADCAST_MAX + 1 rows (the anti_join_bounded protocol).
+    ("operators/graph.py", "connected_components", "collect"): 1,
     # checkpoint-recovery test replay: late-id list of the bounded
     # replay fixture (test harness path, not a data-scale operator).
     ("streaming/replay.py", "chunk_events", "collect"): 1,
@@ -434,3 +437,101 @@ def test_no_scale_killer_in_plan(spark, name):
             # "col#12 ASC NULLS FIRST".
             if re.search(r"(ASC|DESC)", first_arg):
                 pytest.fail(f"{name}: unpartitioned window: {inner[:200]}")
+
+
+# ---------------------------------------------------------------------------
+# Build-time jobs (ROADMAP direction 1): a query's build waits for every
+# Spark job it launches before it returns its frame. Ceilings are the
+# counts of a warm build (each table's schema already inferred) at
+# sf0.001 on a local[4] session (local[1] and local[32] stay under them
+# too). Before the schema reuse and the driver-side connected components
+# these read 24 (dedup_cluster), 3 (flagship_shipping_priority, one
+# schema inference per table), 1 and 6.
+# ---------------------------------------------------------------------------
+
+BUILD_JOB_CEILING = {
+    "dedup_cluster": 12,
+    "flagship_shipping_priority": 0,
+    "win_topn": 0,
+    "multimodal_dedup_phash": 5,
+}
+
+
+def _jobs_launched(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn launched), counted in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_jobs_within_ceiling(spark, sf_dir):
+    for name in BUILD_JOB_CEILING:  # warm-up build
+        SPECS[name].fn(spark, sf_dir)
+    got = {}
+    for name in BUILD_JOB_CEILING:
+        build = SPECS[name].fn
+        got[name] = _jobs_launched(spark, f"build-ceiling:{name}", lambda: build(spark, sf_dir))[1]
+    over = {n: (got[n], c) for n, c in BUILD_JOB_CEILING.items() if got[n] > c}
+    assert not over, f"(jobs, ceiling) per query over its ceiling: {over}; all: {got}"
+
+
+def test_load_table_reuses_schema_without_a_job(spark, sf_dir, tmp_path):
+    """The second load of an unchanged table passes the kept schema and
+    launches no job; the frame's schema is the inferred one."""
+    import shutil
+
+    from hello_flink_spark.sources.readers import TABLES, load_table
+
+    for name in TABLES:
+        shutil.copy(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    for name in TABLES:
+        first, n_first = _jobs_launched(
+            spark, f"schema-infer:{name}", lambda: load_table(spark, str(tmp_path), name)
+        )
+        again, n_again = _jobs_launched(
+            spark, f"schema-reuse:{name}", lambda: load_table(spark, str(tmp_path), name)
+        )
+        assert n_first >= 1, name  # inference did run a job
+        assert n_again == 0, name
+        assert again.schema == first.schema, name
+
+
+def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hello_flink_spark.sources.readers import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["a"]
+    assert load_table(spark, str(tmp_path), "region").columns == ["a"]  # kept
+    pq.write_table(pa.table({"b": ["x"], "c": [0.5]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 0.5)]
+
+
+def test_load_table_events_ts_identical_on_reuse(spark, sf_dir, tmp_path):
+    """events.ts goes through the ns/NTZ normalization on the reuse
+    path too: the same epoch microseconds as the inferring read."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from hello_flink_spark.sources.readers import load_table
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+
+    def epochs():
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return sorted(df.select("event_id", F.unix_micros("ts")).collect())
+
+    inferred = epochs()
+    assert epochs() == inferred
+    assert len(inferred) > 0

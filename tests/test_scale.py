@@ -466,3 +466,60 @@ def test_session_python_workers_run_through_engine_daemon(spark):
 
     got = {r.f for r in spark.range(4).mapInPandas(hook_name, "f string").collect()}
     assert got == {worker_daemon.invalidate_if_changed.__name__}
+
+
+_SAFEPATH_DRIVER = """
+import json
+
+import hello_flink_spark
+from hello_flink_spark.session import get_spark
+
+
+def worker_file(_):
+    import hello_flink_spark
+
+    return hello_flink_spark.__file__
+
+
+spark = get_spark("safepath", cpus="1")
+got = spark.sparkContext.parallelize([0], 1).map(worker_file).collect()
+print(json.dumps([hello_flink_spark.__file__, got]))
+spark.stop()
+"""
+
+
+def test_workers_import_the_drivers_package_not_its_cwd(tmp_path):
+    """A driver started from a directory that holds another
+    hello_flink_spark (here a decoy whose worker_daemon still starts
+    pyspark's daemon) must run its own package in its Python workers:
+    get_spark starts them with PYTHONSAFEPATH, so ``python -m`` does
+    not put the driver's cwd ahead of spark.executorEnv.PYTHONPATH."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    cwd = tmp_path / "cwd"
+    decoy = cwd / "hello_flink_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "worker_daemon.py").write_text(
+        "from pyspark import daemon\n\nif __name__ == '__main__':\n    daemon.manager()\n"
+    )
+    script = tmp_path / "driver.py"  # sys.path[0] is tmp_path, not cwd
+    script.write_text(_SAFEPATH_DRIVER)
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+        "SPARK_DRIVER_MEMORY": "1g",
+    }
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=cwd, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    driver_file, worker_files = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert driver_file.startswith(repo)
+    assert worker_files == [driver_file]
