@@ -38,14 +38,25 @@ distance is ``aggregate(zip_with(a, b, bit_count∘xor))`` — so
 duplicate candidates from multiple shared bands are harmless
 (min-aggregation is idempotent) and the r9 video tier's extra
 DISTINCT + frame-aligned verify join disappear entirely.
+
+Small inputs skip the Spark plan. ``min_rep_dedup`` probes the
+signature frame with a LIMIT-bounded collect (the bounded-broadcast
+protocol of ``scale.anti_join_bounded``): a frame of at most
+``HOT_BROADCAST_MAX`` rows (every multimodal tier of the test bed has
+500) runs the same collapse, banding, cap and verify on the driver, so
+the build waits for the probe, not for the collapse and hot-list
+checkpoints, and the result is a local frame. A larger frame runs the
+Spark plan below.
 """
 
 from __future__ import annotations
 
 import logging
+from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX
 
@@ -66,6 +77,20 @@ BAND_BUCKET_CAP = 32  # distinct signatures per (word, band, value)
 # here, mirroring the sf1 probe's candidate accounting. Driver-side,
 # single-writer per run — read it right after the action completes.
 LAST_BAND_METRICS: dict[str, int] = {"capped_buckets": 0}
+
+
+def _record_capped(n_hot: int, cap: int) -> None:
+    """Publish the over-cap bucket count, and warn when hub-star
+    chaining engaged (the same signal on the driver and Spark paths)."""
+    LAST_BAND_METRICS["capped_buckets"] = n_hot
+    if n_hot:
+        logger.warning(
+            "banded_candidates: %d band bucket(s) over cap=%d switched to "
+            "hub-star chaining — member-to-member pairs verifying only "
+            "through those buckets are dropped (documented recall trade)",
+            n_hot,
+            cap,
+        )
 
 
 def hamming_dist(a: Column | str, b: Column | str) -> Column:
@@ -130,20 +155,11 @@ def banded_candidates(
         )
         .localCheckpoint(eager=False)
     )
-    # this count is the FIRST action on the chain: with the non-eager
-    # checkpoints above (r17, guide §1.2 "fewer passes") it
-    # materializes hot AND every upstream checkpoint (reps, the
-    # caller's sig frame) in ONE job instead of one blocking job each
+    # A non-eager checkpoint still launches jobs before this count:
+    # under AQE the ``localCheckpoint`` call runs its plan's
+    # shuffle-map stages itself. The count then fills hot's checkpoint.
     n_hot = hot.count()
-    LAST_BAND_METRICS["capped_buckets"] = n_hot
-    if n_hot:
-        logger.warning(
-            "banded_candidates: %d band bucket(s) over cap=%d switched to "
-            "hub-star chaining — member-to-member pairs verifying only "
-            "through those buckets are dropped (documented recall trade)",
-            n_hot,
-            cap,
-        )
+    _record_capped(n_hot, cap)
     small_hot = n_hot <= HOT_BROADCAST_MAX
     hot_b = F.broadcast(hot) if small_hot else hot
     hot_keys = hot.select(*bkey)
@@ -175,6 +191,62 @@ def banded_candidates(
     return pairs_cold.unionByName(pairs_hot)
 
 
+_U64 = (1 << 64) - 1  # a Spark long's two's-complement bit pattern
+
+
+def _keep_on_driver(
+    docs: list[tuple[int, tuple[int, ...]]],
+    *,
+    bands_per_word: int,
+    bits_per_band: int,
+    hamming_max: int,
+    cap: int,
+) -> dict[tuple[int, ...], int]:
+    """``keep_doc_id`` per distinct signature of the (doc id, sig)
+    rows in ``docs`` (no null id, no null word): the rule of
+    ``banded_candidates`` and ``min_rep_dedup``, step for step. Reps
+    are keyed by ``rep_id`` where Spark compares or groups by it, so
+    two distinct signatures sharing a min doc id merge as they do
+    there."""
+    reps: dict[tuple[int, ...], int] = {}
+    for doc, sig in docs:
+        reps[sig] = min(doc, reps.get(sig, doc))
+    mask = (1 << bits_per_band) - 1
+    buckets = defaultdict(list)
+    for sig, rep in reps.items():
+        for w, word in enumerate(sig):
+            for b in range(bands_per_word):
+                # shiftrightunsigned: the shift counts mod 64, as Java's >>>
+                val = ((word & _U64) >> (b * bits_per_band % 64)) & mask
+                buckets[(w, b, val)].append((rep, sig))
+    _record_capped(sum(len(m) > cap for m in buckets.values()), cap)
+
+    # every candidate pair is emitted in both directions, and the
+    # hamming distance is symmetric: verify each unordered pair once
+    nb_min: dict[int, int] = {}
+    seen = set()
+    for members in buckets.values():
+        if len(members) > cap:
+            hub = min(members)
+            cands = [(m, hub) for m in members if m[0] != hub[0]]
+        else:
+            cands = [
+                (x, y) for i, x in enumerate(members) for y in members[i + 1:]
+                if x[0] != y[0]
+            ]
+        for (ra, sa), (rb, sb) in cands:
+            key = (sa, sb) if sa < sb else (sb, sa)
+            if key in seen:
+                continue
+            seen.add(key)
+            if len(sa) == len(sb) and sum(
+                ((x ^ y) & _U64).bit_count() for x, y in zip(sa, sb)
+            ) <= hamming_max:
+                nb_min[ra] = min(rb, nb_min.get(ra, rb))
+                nb_min[rb] = min(ra, nb_min.get(rb, ra))
+    return {sig: min(rep, nb_min.get(rep, rep)) for sig, rep in reps.items()}
+
+
 def min_rep_dedup(
     sigs: DataFrame,
     *,
@@ -190,16 +262,61 @@ def min_rep_dedup(
     ``sigs``: ``(id_col long, sig array<long>, …extra cols)`` — extra
     columns pass through untouched. The returned frame has the same
     rows plus ``keep_doc_id``; ``sig`` is retained for the caller to
-    drop or project.
+    drop or project. Rows with a null ``sig`` are dropped.
+
+    A frame of at most ``HOT_BROADCAST_MAX`` rows is finished on the
+    driver (module docstring); its result has ``sigs``' columns plus
+    ``keep_doc_id``. A null id or null signature word sends the frame
+    to the Spark plan, which defines what those mean.
+
+    The probe is a global aggregate over the LIMIT: one map stage over
+    all partitions plus one result stage, where a plain LIMIT collect
+    scans 1, 4, 16… partitions in turn (more jobs the more cores
+    spread the frame). Its cost past the bound: every partition
+    computes its rows and writes up to ``HOT_BROADCAST_MAX`` + 1 of
+    them to one shuffle, and the reduce side stops at the bound and
+    returns null, so no row reaches the driver.
     """
+    head = (
+        sigs.limit(HOT_BROADCAST_MAX + 1)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.collect_list(F.struct(*sigs.columns)).alias("rows"),
+        )
+        .select(F.when(F.col("n") <= HOT_BROADCAST_MAX, F.col("rows")))
+        .collect()[0][0]
+    )
+    if head is not None:
+        i_id, i_sig = sigs.columns.index(id_col), sigs.columns.index("sig")
+        rows = [r for r in head if r[i_sig] is not None]
+        if all(r[i_id] is not None and None not in r[i_sig] for r in rows):
+            keep = _keep_on_driver(
+                [(r[i_id], tuple(r[i_sig])) for r in rows],
+                bands_per_word=bands_per_word,
+                bits_per_band=bits_per_band,
+                hamming_max=hamming_max,
+                cap=cap,
+            )
+            schema = StructType(
+                sigs.schema.fields
+                + [StructField("keep_doc_id", sigs.schema[id_col].dataType)]
+            )
+            return sigs.sparkSession.createDataFrame(
+                [(*r, keep[tuple(r[i_sig])]) for r in rows], schema, verifySchema=False
+            )
+
     # 1. exact collapse: one row per DISTINCT signature. Checkpointed —
     #    three branches consume it (both band sides live under
     #    banded_candidates' shared `banded`, plus the keep join), and
-    #    the collapsed frame is the small end of the pipeline.
+    #    the collapsed frame is the small end of the pipeline. Eager:
+    #    the hot-list count and the caller's action both read it, and a
+    #    lazy checkpoint first filled by concurrent jobs of a later
+    #    action can log "Failed to update accumulator" ERRORs (see
+    #    ``llm._shingle_df``). The probe above already filled ``sigs``.
     reps = (
         sigs.groupBy("sig")
         .agg(F.min(id_col).alias("rep_id"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     cand = banded_candidates(
         reps, bands_per_word=bands_per_word, bits_per_band=bits_per_band, cap=cap

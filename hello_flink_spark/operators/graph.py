@@ -218,9 +218,13 @@ def connected_components(
     the driver (module docstring); the output columns, their type and
     the labels are the same on both paths.
     """
-    # non-eager: the bounded probe right below is the first
-    # materialization and persists the checkpoint in the SAME job; past
-    # the bound, the rounds read the partitions it filled.
+    # non-eager: the bounded probe right below is the first action on
+    # the checkpoint and fills it (with one more job for any partition
+    # the LIMIT did not read); past the bound, the rounds read the
+    # partitions it filled. Under AQE the ``localCheckpoint`` call
+    # itself first runs the plan's shuffle-map stages as jobs (the
+    # ``_canonical`` distinct's exchange), so not every job waits for
+    # the probe.
     named = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     cur = (named if assume_canonical else _canonical(named)).localCheckpoint(
         eager=False

@@ -1096,21 +1096,34 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log² n), independent of component diameter, so deep chain
     components that broke the old 5-round min-label unroll (VERDICT
     r03) converge too — property-tested on a diameter-6 chain in
-    tests/test_properties.py. A pair graph of at most
-    ``scale.HOT_BROADCAST_MAX`` edges (the test bed's have a few dozen)
-    skips the rounds: one bounded probe collects it and union-find
-    labels it on the driver. Output: one row per clustered doc with
-    its cluster representative (min doc_id)."""
-    from hello_flink_spark.operators.graph import connected_components
-    from hello_flink_spark.queries.llm import dedup_ngram_jaccard
-
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    # pairs come out of the keyed similarity aggregation with
-    # doc_a < doc_b, one row per pair — already canonical for CC with
-    # src=doc_b (the larger endpoint), so the entry shuffle is skipped
-    labels = connected_components(
-        pairs, src="doc_b", dst="doc_a", assume_canonical=True
+    tests/test_properties.py. When the shingle overlap was counted on
+    the driver (a corpus of at most ``scale.HOT_BROADCAST_MAX``
+    shingle rows, ``llm._shingle_overlap_rows``), union-find labels the
+    jaccard pairs there directly; otherwise ``connected_components``
+    takes the Spark-computed jaccard pair frame. Output: one row per
+    clustered doc with its cluster representative (min doc_id)."""
+    from hello_flink_spark.operators.graph import _union_find_labels, connected_components
+    from hello_flink_spark.queries.llm import (
+        _jaccard_dup,
+        _jaccard_pairs,
+        _shingle_overlap,
+        _shingle_overlap_rows,
     )
+
+    d = t(spark, sf_dir, "documents")
+    rows = _shingle_overlap_rows(d)
+    if rows is not None:
+        pairs = [(a, b) for a, b, both, n_a, n_b in rows if _jaccard_dup(both, n_a, n_b)]
+        labels = _union_find_labels(spark, pairs, d.schema["doc_id"].dataType)
+    else:
+        # pairs come out of the keyed similarity aggregation with
+        # doc_a < doc_b, one row per pair — already canonical for CC
+        # with src=doc_b (the larger endpoint), so the entry shuffle
+        # is skipped
+        labels = connected_components(
+            _jaccard_pairs(_shingle_overlap(d, None, spread=True)),
+            src="doc_b", dst="doc_a", assume_canonical=True,
+        )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

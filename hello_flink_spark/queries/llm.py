@@ -22,13 +22,16 @@ BASELINE.json:6; anchors are SURVEY.md §2.12 rows.
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX, spread_small_scan
 from hello_flink_spark.registry import register
 from hello_flink_spark.sources.readers import load_table as t
 
@@ -130,32 +133,19 @@ NGRAM_SHINGLES_SQL = f"""
 """
 
 
-def _shingle_df(d: DataFrame, checkpoint: bool = False) -> DataFrame:
-    """Distinct (doc_id, 3-gram shingle) pairs, document-frequency-capped.
+def _shingle_rows(d: DataFrame) -> DataFrame:
+    """(doc_id, 3-gram shingle) rows of ``d``, one per token position:
+    map-only, not yet distinct or df-capped.
 
     Guards the index range for docs with < 3 tokens: ``sequence(1, 0)``
     in Spark is the DESCENDING [1, 0], which would drive element_at out
     of bounds — such docs legitimately have zero shingles (matching
-    DuckDB's empty generate_series(1, 0)).
-
-    ``checkpoint=True`` (round-17, guide §5 caching): materialize the
-    distinct shingle frame once BEFORE the hot-list aggregation —
-    callers that consume the capped frame more than once (self-join
-    sides, per-doc sizes) plus the hot-list probe otherwise each
-    recompute the scan+explode+distinct subtree (4 copies in
-    dedup_ngram_jaccard's pre-r17 plan, zero ReusedExchange in the
-    initial plan). NON-eager: the hot-list probe job right below is
-    the first action and persists the checkpoint as a side effect —
-    one blocking job launch saved per query vs eager=True (guide §1.2
-    "fewer passes"), identical caching afterwards. Single-consumer
-    callers should leave it off — the materialization buys nothing
-    there.
-    """
+    DuckDB's empty generate_series(1, 0))."""
     toks = d.select("doc_id", _tokens().alias("tokens"))
     idx = F.when(
         F.size("tokens") >= 3, F.sequence(F.lit(1), F.size("tokens") - 2)
     ).otherwise(F.array().cast("array<int>"))
-    shingles = toks.select(
+    return toks.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -168,9 +158,31 @@ def _shingle_df(d: DataFrame, checkpoint: bool = False) -> DataFrame:
                 ),
             )
         ).alias("shingle"),
-    ).distinct()
+    )
+
+
+def _shingle_df(d: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """Distinct (doc_id, 3-gram shingle) pairs, document-frequency-capped.
+
+    ``checkpoint=True`` (round-17, guide §5 caching): materialize the
+    distinct shingle frame once BEFORE the hot-list aggregation —
+    callers that consume the capped frame more than once (self-join
+    sides, per-doc sizes) plus the hot-list probe otherwise each
+    recompute the scan+explode+distinct subtree (4 copies in
+    dedup_ngram_jaccard's pre-r17 plan, zero ReusedExchange in the
+    initial plan). Eager: a non-eager checkpoint saves no job here
+    (under AQE the ``localCheckpoint`` call runs the distinct's
+    shuffle-map stage itself), and while it is unfilled the concurrent
+    jobs of the caller's action compute it through the original plan;
+    when one of them fills it, that plan's metrics are dropped and the
+    others' task updates for them log a burst of "Failed to update
+    accumulator" ERRORs (50 a query at sf0.1, in half the cold runs).
+    Single-consumer callers should leave it off — the materialization
+    buys nothing there.
+    """
+    shingles = _shingle_rows(d).distinct()
     if checkpoint:
-        shingles = shingles.localCheckpoint(eager=False)
+        shingles = shingles.localCheckpoint(eager=True)
     # df-cap via hot-list anti-join: the hot list (shingles above the
     # cap) is boilerplate-sized in practice, so it broadcasts and the
     # filter is map-side — but the bound is enforced, not assumed:
@@ -217,6 +229,98 @@ def _shingle_pairs(shingles: DataFrame) -> DataFrame:
     )
 
 
+def _overlap_counts(rows: list) -> list[tuple]:
+    """Driver twin of ``_shingle_df`` + ``_shingle_pairs`` + sizes over
+    the (doc_id, shingle) rows of ``_shingle_rows``: distinct, drop
+    shingles in more than SHINGLE_DF_CAP docs, count each doc's
+    shingles and each pair's shared ones. Integers only. A null doc_id
+    counts toward a shingle's df but pairs with nothing, as
+    ``collect_list`` and the equi-joins treat it."""
+    docs_of: dict[str, set] = defaultdict(set)
+    for doc, shingle in rows:
+        docs_of[shingle].add(doc)
+    n: Counter = Counter()
+    both: Counter = Counter()
+    for docs in docs_of.values():
+        if len(docs) > SHINGLE_DF_CAP:
+            continue
+        ids = sorted(x for x in docs if x is not None)
+        n.update(ids)
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                both[a, b] += 1
+    return [(a, b, c, n[a], n[b]) for (a, b), c in both.items()]
+
+
+def _shingle_overlap_rows(d: DataFrame) -> list[tuple] | None:
+    """``(doc_a, doc_b, both_cnt, n_a, n_b)`` for every doc pair of
+    ``d`` that shares a df-capped shingle (doc_a < doc_b; n = the doc's
+    capped shingle count), counted on the driver; None when ``d`` has
+    more than ``HOT_BROADCAST_MAX`` shingle rows.
+
+    The bounded-broadcast protocol (``scale.anti_join_bounded``): one
+    LIMIT-bounded probe of the map-only ``_shingle_rows`` plan (one job
+    on a one-split scan; Spark's own lower/trim/split and concat_ws),
+    and ``_overlap_counts`` does at most
+    ``HOT_BROADCAST_MAX·(SHINGLE_DF_CAP−1)/2`` pair updates. Past the
+    bound the probe's ``HOT_BROADCAST_MAX`` + 1 rows still reach the
+    driver as Python rows and are dropped: a fixed cost that a corpus
+    just over the bound pays on top of the Spark plan (the LIMIT stops
+    the scan early, so a large corpus pays no more)."""
+    head = _shingle_rows(d).limit(HOT_BROADCAST_MAX + 1).collect()
+    return _overlap_counts(head) if len(head) <= HOT_BROADCAST_MAX else None
+
+
+def _shingle_overlap(
+    d: DataFrame, rows: list[tuple] | None, *, spread: bool = False
+) -> DataFrame:
+    """The ``(doc_a, doc_b, both_cnt, n_a, n_b)`` frame of ``d``:
+    ``rows`` (from ``_shingle_overlap_rows``, doc_id's type) as a local
+    frame, or, past the bound (``rows`` None), the Spark plan:
+    ``_shingle_df`` (over ``spread_small_scan(d)`` when ``spread``),
+    ``_shingle_pairs`` and the per-doc sizes."""
+    if rows is not None:
+        doc_type = d.schema["doc_id"].dataType
+        schema = StructType(
+            [StructField("doc_a", doc_type), StructField("doc_b", doc_type)]
+            + [StructField(c, LongType()) for c in ("both_cnt", "n_a", "n_b")]
+        )
+        return d.sparkSession.createDataFrame(rows, schema, verifySchema=False)
+    shingles = _shingle_df(spread_small_scan(d) if spread else d, checkpoint=True)
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        _shingle_pairs(shingles)
+        .join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a", "doc_b", "both_cnt",
+            F.col("sa.n").alias("n_a"), F.col("sb.n").alias("n_b"),
+        )
+    )
+
+
+def _jaccard(both, n_a, n_b):
+    """|A∩B| / |A∪B| from the shared and per-doc shingle counts. The
+    same expression on Columns (Spark's double division) and on Python
+    ints (true division): for counts below 2**53 both divide the same
+    two doubles with IEEE rounding, so they agree bit for bit."""
+    return both / (n_a + n_b - both)
+
+
+def _jaccard_dup(both, n_a, n_b):
+    """dedup_ngram_jaccard's pair test, on Columns or on Python ints."""
+    return _jaccard(both, n_a, n_b) >= 0.5
+
+
+def _jaccard_pairs(overlap: DataFrame) -> DataFrame:
+    """dedup_ngram_jaccard's ``(doc_a, doc_b, jaccard)`` rows of a
+    ``_shingle_overlap`` frame."""
+    cnts = F.col("both_cnt"), F.col("n_a"), F.col("n_b")
+    return overlap.filter(_jaccard_dup(*cnts)).select(
+        "doc_a", "doc_b", F.round(_jaccard(*cnts), 6).alias("jaccard")
+    )
+
+
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
@@ -242,29 +346,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-capped shingle sets (SHINGLE_DF_CAP bounds the k² pair blow-up
     from hot boilerplate shingles). This IS the scalable shape: shuffle
     on shingle, combine-side distinct, residual skew handled by AQE.
-    Round-17: the shingle frame materializes once (checkpoint=True —
-    the sizes agg and both former self-join sides each recomputed the
-    scan+explode+distinct subtree, zero ReusedExchange in the initial
-    plan) and the pair counts come from the grouped single-shuffle
-    enumeration (_shingle_pairs) instead of the two-shuffle self-join;
-    output identical row-for-row."""
-    from hello_flink_spark.operators.scale import spread_small_scan
-
-    # r12: the map-side shingle explode should use every core when the
-    # scan arrives as one split (A/B at sf0.1: 2.2 s -> 1.7 s in one
-    # window, parity elsewhere — the shingle shuffle dominates here,
-    # so the gain is smaller than the substring-dedup pair's).
-    d = spread_small_scan(t(spark, sf_dir, "documents"))
-    shingles = _shingle_df(d, checkpoint=True)
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = _shingle_pairs(shingles)
-    jac = F.col("both_cnt").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("both_cnt"))
-    return (
-        inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    The overlap counts come from ``_shingle_overlap_rows``: on the driver
+    for a corpus of at most HOT_BROADCAST_MAX shingle rows, else from
+    the materialized shingle frame and the grouped single-shuffle pair
+    enumeration (_shingle_pairs); the similarity filter and rounding
+    are Spark expressions either way."""
+    d = t(spark, sf_dir, "documents")
+    # r12: on the Spark path the map-side shingle explode should use
+    # every core when the scan arrives as one split (A/B at sf0.1:
+    # 2.2 s -> 1.7 s in one window), hence spread=True.
+    return _jaccard_pairs(_shingle_overlap(d, _shingle_overlap_rows(d), spread=True))
 
 
 @register("dedup_minhash", oracle=None)
@@ -1099,8 +1190,6 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame (one tiny map-only job) and fall back to the hint-free
     # join — AQE decides — past HOT_BROADCAST_MAX rows. Either path
     # returns identical rows.
-    from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX
-
     n_bench = bench.limit(HOT_BROADCAST_MAX + 1).count()
     bench_b = F.broadcast(bench) if n_bench <= HOT_BROADCAST_MAX else bench
     joined = (

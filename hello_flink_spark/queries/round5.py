@@ -584,22 +584,23 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator — and the same round-17 shape: the shingle frame
     materializes once and the pair counts come from the grouped
     single-shuffle enumeration (_shingle_pairs) instead of the
-    two-shuffle self-join; output identical row-for-row."""
-    from hello_flink_spark.queries.llm import _shingle_df, _shingle_pairs
+    two-shuffle self-join; output identical row-for-row. A corpus of
+    at most HOT_BROADCAST_MAX shingle rows is counted on the driver
+    (``llm._shingle_overlap_rows``); the containment filter and
+    rounding stay Spark expressions."""
+    from hello_flink_spark.queries.llm import _shingle_overlap, _shingle_overlap_rows
 
     d = t(spark, sf_dir, "documents")
-    shingles = _shingle_df(d, checkpoint=True)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = _shingle_pairs(shingles)
-    containment = F.col("both_cnt").cast("double") / F.least(
-        F.col("sa.n"), F.col("sb.n")
+    overlap = _shingle_overlap(d, _shingle_overlap_rows(d))
+    containment = _containment()
+    return overlap.filter(containment >= 0.8).select(
+        "doc_a", "doc_b", F.round(containment, 6).alias("containment")
     )
-    return (
-        inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(containment >= 0.8)
-        .select("doc_a", "doc_b", F.round(containment, 6).alias("containment"))
-    )
+
+
+def _containment():
+    """|A∩B| / min(|A|, |B|) over a ``llm._shingle_overlap`` frame."""
+    return F.col("both_cnt").cast("double") / F.least(F.col("n_a"), F.col("n_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -1866,7 +1867,7 @@ def pipeline_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join base; zero ReusedExchange in the initial plan) — and the
     containment pair stage uses the grouped single-shuffle enumeration
     (_shingle_pairs) instead of the two-shuffle self-join."""
-    from hello_flink_spark.queries.llm import _shingle_df, _shingle_pairs
+    from hello_flink_spark.queries.llm import _shingle_overlap
 
     d = t(spark, sf_dir, "documents")
     bounds = d.agg(
@@ -1891,16 +1892,9 @@ def pipeline_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
         .localCheckpoint(eager=False)
     )
-    shingles = _shingle_df(f2.select("doc_id", "text"), checkpoint=True)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = _shingle_pairs(shingles)
-    containment = F.col("both_cnt").cast("double") / F.least(
-        F.col("sa.n"), F.col("sb.n")
-    )
+    overlap = _shingle_overlap(f2.select("doc_id", "text"), None)
     drops = (
-        inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(containment >= 0.8)
+        overlap.filter(_containment() >= 0.8)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

@@ -13,6 +13,33 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from hello_flink_spark import registry  # noqa: E402
 
 
+# Queries whose operators finish on the driver under a bounded probe
+# and run the Spark plan past it.
+PATHS = """## Driver finish or Spark plan
+
+The near-dup tier probes its input once with a LIMIT of
+`scale.HOT_BROADCAST_MAX` + 1 rows. At or under the bound it finishes
+on the driver, exactly as the Spark plan would; past it the Spark plan
+runs. What is probed decides the path:
+
+| queries | probed rows |
+|---|---|
+| `dedup_ngram_jaccard`, `dedup_containment`, `dedup_cluster`, `dedup_cluster_stats`, `docs_near_dup_rate_by_source` | the exploded `(doc_id, shingle)` rows, one per token position (`llm._shingle_overlap_rows`) |
+| `multimodal_dedup_phash`, `multimodal_audio_dedup_fingerprint`, `multimodal_video_dedup_framehash` | the signature rows, one per doc (`banded_dedup.min_rep_dedup`) |
+
+On the test bed, every probe finishes on the driver at sf0.001, sf0.01
+and on the perfbench tables; at sf0.1 the shingle probe is over the
+bound, so its five queries run the Spark plan there, while the
+signature probes stay on the driver (the measured sizes are in
+ROADMAP.md).
+
+`dedup_cluster` labels the driver-side jaccard pairs by union-find and,
+on the Spark path, hands the pair frame to `connected_components`
+(which has its own probe of the same bound). Tests reach the Spark
+path by patching the module's `HOT_BROADCAST_MAX` to -1.
+"""
+
+
 def main() -> None:
     specs = registry._REGISTRY  # registration order, not driver-priority order
     registry._load()
@@ -40,6 +67,7 @@ def main() -> None:
         f"**Total: {len(specs)} declared queries — {o} oracle-checked (O), "
         f"{len(specs) - o} rows-only (R).**",
         "",
+        PATHS,
     ]
     out = Path(__file__).resolve().parent.parent / "docs" / "OPERATORS.md"
     out.write_text("\n".join(lines))

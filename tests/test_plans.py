@@ -364,6 +364,10 @@ COLLECT_SITES_OK = {
     # connected components: the entry edge set's LIMIT-bounded probe,
     # at most HOT_BROADCAST_MAX + 1 rows (the anti_join_bounded protocol).
     ("operators/graph.py", "connected_components", "collect"): 1,
+    # near-dup driver finishes, same protocol and bound: the signature
+    # frame's probe and the exploded (doc_id, shingle) rows' probe.
+    ("operators/banded_dedup.py", "min_rep_dedup", "collect"): 1,
+    ("queries/llm.py", "_shingle_overlap_rows", "collect"): 1,
     # checkpoint-recovery test replay: late-id list of the bounded
     # replay fixture (test harness path, not a data-scale operator).
     ("streaming/replay.py", "chunk_events", "collect"): 1,
@@ -445,15 +449,21 @@ def test_no_scale_killer_in_plan(spark, name):
 # counts of a warm build (each table's schema already inferred) at
 # sf0.001 on a local[4] session (local[1] and local[32] stay under them
 # too). Before the schema reuse and the driver-side connected components
-# these read 24 (dedup_cluster), 3 (flagship_shipping_priority, one
-# schema inference per table), 1 and 6.
+# the first four read 24 (dedup_cluster), 3 (flagship_shipping_priority,
+# one schema inference per table), 1 and 6; before the near-dup driver
+# finishes (shingle overlap, min-rep dedup) dedup_cluster read 12 and
+# the other five 5, 6, 5, 5 and 6.
 # ---------------------------------------------------------------------------
 
 BUILD_JOB_CEILING = {
-    "dedup_cluster": 12,
+    "dedup_cluster": 1,
     "flagship_shipping_priority": 0,
     "win_topn": 0,
-    "multimodal_dedup_phash": 5,
+    "multimodal_dedup_phash": 3,
+    "dedup_ngram_jaccard": 1,
+    "dedup_containment": 1,
+    "multimodal_audio_dedup_fingerprint": 3,
+    "multimodal_video_dedup_framehash": 4,
 }
 
 

@@ -381,6 +381,140 @@ def test_shingle_pairs_match_self_join(spark):
     assert got == ref and len(got) > 0
 
 
+# The near-dup tier's driver finishes (``llm._shingle_overlap_rows``,
+# ``banded_dedup.min_rep_dedup``) read the bound their module imported;
+# patched to -1 it sends every input, the empty one too, through the
+# Spark plan (as CC_PATHS does for connected components).
+NEAR_DUP_PATHS = {"driver": HOT_BROADCAST_MAX, "spark": -1}
+
+corpora = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(st.sampled_from(["a", "b", "c", "A", "", "dd"]), max_size=7).map(" ".join),
+        st.sampled_from(["  a b c ", "a b", "x"]),
+    ),
+    max_size=12,
+)
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+def _overlap_paths(spark, d, driver_bound=HOT_BROADCAST_MAX, spark_bound=-1):
+    """Sorted shingle-overlap rows of ``d`` on each path, checking that
+    each bound picked the path it names."""
+    from hello_flink_spark.queries import llm
+
+    out = {}
+    for path, bound in (("driver", driver_bound), ("spark", spark_bound)):
+        with mock.patch.object(llm, "HOT_BROADCAST_MAX", bound):
+            rows = llm._shingle_overlap_rows(d)
+        assert (rows is not None) == (path == "driver"), (path, bound)
+        out[path] = sorted(tuple(r) for r in llm._shingle_overlap(d, rows).collect())
+    return out
+
+
+@given(texts=corpora)
+@example(texts=[])
+@example(texts=["a b c"])
+@example(texts=[None, "a b", "a b c", "A b c d", "a  b c"])
+@SETTINGS
+def test_shingle_overlap_driver_matches_spark(spark, texts):
+    """Counted on the driver or by the Spark plan, the df-capped pair
+    overlap (both_cnt, n_a, n_b) is the same: empty tables, null text,
+    docs under 3 tokens, case and spacing included."""
+    out = _overlap_paths(spark, _docs(spark, texts))
+    assert out["driver"] == out["spark"]
+
+
+def test_shingle_overlap_df_cap_and_bound_edges(spark):
+    """A shingle in exactly SHINGLE_DF_CAP docs pairs them all, one in
+    SHINGLE_DF_CAP + 1 pairs none, on both paths; a corpus of exactly
+    the bound's shingle rows is counted on the driver, one row over
+    runs the Spark plan, with the same result."""
+    from hello_flink_spark.queries.llm import SHINGLE_DF_CAP, _shingle_rows
+
+    for k in (SHINGLE_DF_CAP, SHINGLE_DF_CAP + 1):
+        d = _docs(spark, [f"x y z w{i}" for i in range(k)] + ["p q r", "p q r s"])
+        out = _overlap_paths(spark, d)
+        assert out["driver"] == out["spark"], k
+        n_pairs = k * (k - 1) // 2 if k <= SHINGLE_DF_CAP else 0
+        assert len(out["driver"]) == n_pairs + 1, k
+    d = _docs(spark, ["a b c d", "b c d e", "a b c", None, "c d e a b c"])
+    n = _shingle_rows(d).count()
+    out = _overlap_paths(spark, d, driver_bound=n, spark_bound=n - 1)
+    assert out["driver"] == out["spark"] and out["driver"]
+
+
+def _signed(w):
+    return w - (1 << 64) if w >= 1 << 63 else w
+
+
+sig_words = st.builds(
+    lambda base, flips: _signed(base ^ sum(1 << b for b in flips)),
+    st.sampled_from([0, 0xFFFF_0000_FFFF_0000, 0x1234_5678_9ABC_DEF0, (1 << 64) - 1]),
+    st.sets(st.integers(0, 63), max_size=3),
+)
+
+
+def _min_rep(spark, rows, bound, **kwargs):
+    """(sorted (doc_id, sig, keep_doc_id) rows, capped bucket count)."""
+    from hello_flink_spark.operators import banded_dedup
+
+    sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+    with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+        out = banded_dedup.min_rep_dedup(sigs, **kwargs).collect()
+    return (
+        sorted((r.doc_id, tuple(r.sig), r.keep_doc_id) for r in out),
+        banded_dedup.LAST_BAND_METRICS["capped_buckets"],
+    )
+
+
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 30), st.lists(sig_words, min_size=1, max_size=2)),
+        max_size=20,
+    ),
+    cap=st.sampled_from([1, 2, 32]),
+)
+@example(rows=[], cap=32)
+@example(rows=[(1, [5])], cap=32)
+@example(rows=[(1, [5]), (2, None), (3, [4]), (3, [7, 1])], cap=1)
+@SETTINGS
+def test_min_rep_dedup_driver_matches_spark(spark, rows, cap):
+    """Signatures with negative words, several words, unequal lengths
+    and doc ids shared by different signatures: the driver finish
+    gives the Spark plan's keep_doc_id and capped-bucket count, with
+    hub-star chaining engaged by the small caps."""
+    got = {p: _min_rep(spark, rows, b, cap=cap) for p, b in NEAR_DUP_PATHS.items()}
+    assert got["driver"] == got["spark"]
+
+
+def test_min_rep_dedup_bucket_cap_and_bound_edges(spark):
+    """k signatures i << 16 share the three zero-valued band buckets:
+    at k = BAND_BUCKET_CAP they stay all-pairs, at BAND_BUCKET_CAP + 1
+    all three are capped, on both paths alike. A frame of exactly the
+    bound's rows is finished on the driver, one row over runs the
+    Spark plan."""
+    from hello_flink_spark.operators import banded_dedup
+
+    cap = banded_dedup.BAND_BUCKET_CAP
+    for k, capped in ((cap, 0), (cap + 1, 3)):
+        rows = [(i, [i << 16]) for i in range(k)]
+        got = {p: _min_rep(spark, rows, b) for p, b in NEAR_DUP_PATHS.items()}
+        assert got["driver"] == got["spark"], k
+        assert got["driver"][1] == capped, k
+    results = []
+    for bound, on_driver in ((len(rows), True), (len(rows) - 1, False)):
+        with mock.patch.object(
+            banded_dedup, "banded_candidates", wraps=banded_dedup.banded_candidates
+        ) as spark_plan:
+            results.append(_min_rep(spark, rows, bound))
+        assert spark_plan.called != on_driver, bound
+    assert results[0] == results[1]
+
+
 def test_approx_quantiles_within_rank_error(spark):
     """agg_approx_quantile_merge invariant: each approximate quantile
     must land within epsilon = 1/accuracy RANK error of the exact

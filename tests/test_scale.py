@@ -3,10 +3,13 @@ under pathological skew; bucketed tables join with NO exchange."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
 from hello_flink_spark.operators.scale import (
+    HOT_BROADCAST_MAX,
     anti_join_bounded,
     bucketed_join,
     salted_join,
@@ -242,6 +245,12 @@ def test_phash_incremental_index_side_shuffle_free(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+# min_rep_dedup finishes a frame of at most banded_dedup.HOT_BROADCAST_MAX
+# rows on the driver; patched to -1 it sends every frame, the empty one
+# too, through the Spark plan
+MIN_REP_PATHS = {"driver": HOT_BROADCAST_MAX, "spark": -1}
+
+
 def _sig_df(spark, pairs):
     """(doc_id, sig) frame from [(doc_id, [words…]), …]."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -261,6 +270,7 @@ def test_banded_dedup_exact_collapse_is_duplication_invariant(spark):
     """A million byte-identical uploads must contribute ONE row to the
     band join: candidate count is IDENTICAL whether a signature appears
     once or 200 times, and every duplicate maps to the group min."""
+    from hello_flink_spark.operators import banded_dedup
     from hello_flink_spark.operators.banded_dedup import (
         LAST_BAND_METRICS,
         banded_candidates,
@@ -280,15 +290,20 @@ def test_banded_dedup_exact_collapse_is_duplication_invariant(spark):
     # and the observability metric says so (ADVICE r10).
     assert LAST_BAND_METRICS["capped_buckets"] == 0
 
-    out = {
-        r["doc_id"]: r["keep_doc_id"]
-        for r in min_rep_dedup(_sig_df(spark, base + dups), hamming_max=2).collect()
-    }
-    # 0x1234 vs 0x1233 differ by 3 bits (0b0100 vs 0b0011): NOT
-    # near-dups at hamming<=2 — the exact group collapses to doc 0,
-    # nothing else.
-    assert out[0] == 0 and all(out[100 + i] == 0 for i in range(200))
-    assert out[1] == 1 and out[2] == 2
+    for path, bound in MIN_REP_PATHS.items():
+        with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+            out = {
+                r["doc_id"]: r["keep_doc_id"]
+                for r in min_rep_dedup(
+                    _sig_df(spark, base + dups), hamming_max=2
+                ).collect()
+            }
+        assert LAST_BAND_METRICS["capped_buckets"] == 0, path
+        # 0x1234 vs 0x1233 differ by 3 bits (0b0100 vs 0b0011): NOT
+        # near-dups at hamming<=2 — the exact group collapses to doc 0,
+        # nothing else.
+        assert out[0] == 0 and all(out[100 + i] == 0 for i in range(200)), path
+        assert out[1] == 1 and out[2] == 2, path
 
 
 def test_banded_dedup_hot_bucket_emits_hub_star_not_all_pairs(spark):
@@ -297,6 +312,7 @@ def test_banded_dedup_hot_bucket_emits_hub_star_not_all_pairs(spark):
     LINEAR in the bucket size, and the hub chain must still collapse
     the dense cluster to its min representative exactly as all-pairs
     would (every member is within hamming 1 of the hub)."""
+    from hello_flink_spark.operators import banded_dedup
     from hello_flink_spark.operators.banded_dedup import (
         BAND_BUCKET_CAP,
         LAST_BAND_METRICS,
@@ -319,14 +335,17 @@ def test_banded_dedup_hot_bucket_emits_hub_star_not_all_pairs(spark):
     assert n == 3 * 94 + 96, n
     assert n < BAND_BUCKET_CAP * (BAND_BUCKET_CAP - 1) * 4
 
-    out = {
-        r["doc_id"]: r["keep_doc_id"]
-        for r in min_rep_dedup(sigs, hamming_max=2).collect()
-    }
-    # all-pairs ground truth: every pair is within hamming 2 -> every
-    # doc keeps doc 0. The capped star reaches the same fixpoint
-    # because every member verifies against the hub (hamming 1).
-    assert out == {d: 0 for d in range(64)}
+    for path, bound in MIN_REP_PATHS.items():
+        with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+            out = {
+                r["doc_id"]: r["keep_doc_id"]
+                for r in min_rep_dedup(sigs, hamming_max=2).collect()
+            }
+        assert LAST_BAND_METRICS["capped_buckets"] == 4, path
+        # all-pairs ground truth: every pair is within hamming 2 -> every
+        # doc keeps doc 0. The capped star reaches the same fixpoint
+        # because every member verifies against the hub (hamming 1).
+        assert out == {d: 0 for d in range(64)}, path
 
 
 def test_multimodal_fixture_buckets_stay_under_cap():
