@@ -42,7 +42,7 @@ DISTINCT + frame-aligned verify join disappear entirely.
 Small inputs skip the Spark plan. ``min_rep_dedup`` probes the
 signature frame with a LIMIT-bounded collect (the bounded-broadcast
 protocol of ``scale.anti_join_bounded``): a frame of at most
-``HOT_BROADCAST_MAX`` rows (every multimodal tier of the test bed has
+``scale.HOT_BROADCAST_MAX`` rows (every multimodal tier of the test bed has
 500) runs the same collapse, banding, cap and verify on the driver, so
 the build waits for the probe, not for the collapse and hot-list
 checkpoints, and the result is a local frame. A larger frame runs the
@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX
+from hello_flink_spark.operators import scale
 
 logger = logging.getLogger(__name__)
 
@@ -160,7 +160,7 @@ def banded_candidates(
     # shuffle-map stages itself. The count then fills hot's checkpoint.
     n_hot = hot.count()
     _record_capped(n_hot, cap)
-    small_hot = n_hot <= HOT_BROADCAST_MAX
+    small_hot = n_hot <= scale.HOT_BROADCAST_MAX
     hot_b = F.broadcast(hot) if small_hot else hot
     hot_keys = hot.select(*bkey)
     cold = banded.join(
@@ -264,7 +264,7 @@ def min_rep_dedup(
     rows plus ``keep_doc_id``; ``sig`` is retained for the caller to
     drop or project. Rows with a null ``sig`` are dropped.
 
-    A frame of at most ``HOT_BROADCAST_MAX`` rows is finished on the
+    A frame of at most ``scale.HOT_BROADCAST_MAX`` rows is finished on the
     driver (module docstring); its result has ``sigs``' columns plus
     ``keep_doc_id``. A null id or null signature word sends the frame
     to the Spark plan, which defines what those mean.
@@ -277,13 +277,14 @@ def min_rep_dedup(
     them to one shuffle, and the reduce side stops at the bound and
     returns null, so no row reaches the driver.
     """
+    bound = scale.HOT_BROADCAST_MAX
     head = (
-        sigs.limit(HOT_BROADCAST_MAX + 1)
+        sigs.limit(bound + 1)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.collect_list(F.struct(*sigs.columns)).alias("rows"),
         )
-        .select(F.when(F.col("n") <= HOT_BROADCAST_MAX, F.col("rows")))
+        .select(F.when(F.col("n") <= bound, F.col("rows")))
         .collect()[0][0]
     )
     if head is not None:

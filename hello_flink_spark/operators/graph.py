@@ -17,7 +17,7 @@ algorithms — it is one tiny aggregate, not a collect of data rows.
 
 Small graphs skip the rounds. The entry edge set is probed with a
 LIMIT-bounded collect (the bounded-broadcast protocol of
-``scale.anti_join_bounded``): a graph of at most ``HOT_BROADCAST_MAX``
+``scale.anti_join_bounded``): a graph of at most ``scale.HOT_BROADCAST_MAX``
 canonical edges — every near-dup pair graph of the test bed has a few
 dozen — is labeled on the driver by union-find, so the build waits
 for the probe and none of the rounds' checkpoint and convergence
@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructField, StructType
 
-from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX
+from hello_flink_spark.operators import scale
+from hello_flink_spark.operators.joins import pair_counts
 
 MAX_ROUNDS = 25  # ~log²(n) bound; 25 covers graphs far beyond any test rig
 
@@ -214,7 +215,7 @@ def connected_components(
     entry materialization is then map-only instead of paying a full
     edge-set shuffle.
 
-    A graph of at most ``HOT_BROADCAST_MAX`` entry edges is labeled on
+    A graph of at most ``scale.HOT_BROADCAST_MAX`` entry edges is labeled on
     the driver (module docstring); the output columns, their type and
     the labels are the same on both paths.
     """
@@ -229,8 +230,8 @@ def connected_components(
     cur = (named if assume_canonical else _canonical(named)).localCheckpoint(
         eager=False
     )
-    head = cur.limit(HOT_BROADCAST_MAX + 1).collect()
-    if len(head) <= HOT_BROADCAST_MAX:
+    head = cur.limit(scale.HOT_BROADCAST_MAX + 1).collect()
+    if len(head) <= scale.HOT_BROADCAST_MAX:
         return _union_find_labels(cur.sparkSession, head, cur.schema["u"].dataType)
 
     sig = _checksum(cur)
@@ -294,44 +295,19 @@ def connected_components(
 
 def copurchase_edges(lineitem: DataFrame, min_cooccur: int = 2) -> DataFrame:
     """Part co-purchase edge set: undirected (pa < pb) pairs of parts
-    sharing >= ``min_cooccur`` orders. The one edge definition shared
-    by graph_triangle_count, graph_degree_stats and their oracles.
+    sharing >= ``min_cooccur`` orders, with that count as ``cooccur``.
+    The one edge definition shared by graph_triangle_count,
+    graph_degree_stats, orders_basket_pairs and their oracles.
 
-    Round-17 shape (guide §2.3/§2.4): group the lineitem scan by order
-    ONCE and emit the in-basket ordered pairs with an array fold —
-    baskets are a handful of lines, so the per-group fan-out is
-    basket² — then hash-aggregate by pair. The previous self-join on
-    l_orderkey shuffled the (ok, part) table TWICE and joined; pair
-    multiset is identical (the sorted index enumeration with the
-    strict pa < pb filter replicates the join's duplicate-line
-    semantics exactly — verified row-for-row)."""
+    One grouped exchange of the lineitem scan by order
+    (``joins.pair_counts``) instead of the self-join on l_orderkey; its
+    strict pa < pb keeps the join's duplicate-line semantics."""
     # Round-18 note: spreading the (order, part) feed before the
     # basket aggregation (the minhash r18 treatment) was tried and
     # measured WORSE at sf1 (graph_triangle_count c32 7.4 -> 10.0 s):
     # the collect_list partials cannot map-side-combine across the
     # round-robin spread the way minhash's md5 min() can, so the
     # added exchange buys no parallel work. Reverted.
-    baskets = (
-        lineitem.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
-        )
-        .groupBy("ok")
-        .agg(F.expr("array_sort(collect_list(p))").alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "filter(flatten(transform(sequence(1, size(ds) - 1),"
-                " i -> transform(slice(ds, i + 1, size(ds) - i),"
-                " y -> struct(element_at(ds, i) AS pa, y AS pb)))),"
-                " s -> s.pa < s.pb)"
-            )
-        ).alias("s")
-    ).select("s.pa", "s.pb")
-    return (
-        pairs.groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("cooccur"))
-        .filter(F.col("cooccur") >= min_cooccur)
-        .select("pa", "pb")
-    )
+    return pair_counts(
+        lineitem, ["l_orderkey"], "l_partkey", "pa", "pb", "cooccur"
+    ).where(F.col("cooccur") >= min_cooccur)

@@ -8,6 +8,9 @@ Spark lacks natively:
 - ``asof_join`` — Flink's temporal table join, ``FOR SYSTEM_TIME AS OF``
   [F org.apache.flink.table.api: temporal table function join]. For each
   left row, the latest right row with ``right_ts <= left_ts`` per key.
+- ``pair_counts`` — the grouped form of a counted equi-self-join
+  (``a.g = b.g AND a.x < b.x GROUP BY a.x, b.x``), the one in-group
+  pair enumeration of every pair-producing query.
 
 Scale notes (100 TB): the naive formulation (range join + ROW_NUMBER)
 explodes to O(|L|·|R|/keys) intermediate rows before the rank filter.
@@ -183,6 +186,38 @@ def asof_join_window(
             *[F.when(fresh, F.col(c)).alias(c) for c in [right_ts, *right_cols]],
         )
     return out
+
+
+def pair_counts(
+    frame: DataFrame, group_cols: list[str], item: str, a: str, b: str, count: str
+) -> DataFrame:
+    """``(a, b, count)``: for every pair of ``item`` values a < b that
+    share a ``group_cols`` group, the number of (group, member, member)
+    matches — the rows of
+
+        SELECT x.item AS a, y.item AS b, COUNT(*) AS count
+        FROM frame x JOIN frame y
+          ON x.g = y.g AND x.item < y.item GROUP BY a, b
+
+    with ONE exchange of ``frame`` instead of the self-join's two. Each
+    group of two or more members becomes one sorted member array; each
+    member is posexploded against its strictly-later tail, so a row
+    holds one O(k) slice, never a group's k(k−1)/2 pair array, and the
+    pairs stream into the count's map-side partial. ``a < b`` drops the
+    equal pairs that duplicate members form, as the join's ``<`` does.
+    A null member pairs with nothing (``collect_list`` skips it), and
+    a null group key, which an equi-join never matches, is dropped."""
+    return (
+        frame.dropna(subset=group_cols)
+        .groupBy(*group_cols)
+        .agg(F.array_sort(F.collect_list(item)).alias("ds"))
+        .where(F.size("ds") >= 2)
+        .select(F.posexplode("ds").alias("i", a), "ds")
+        .select(a, F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias(b))
+        .where(F.col(a) < F.col(b))
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias(count))
+    )
 
 
 def lookup_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:

@@ -50,7 +50,11 @@ def salted_join(
 
 HOT_BROADCAST_MAX = 100_000  # rows; ~a few MB of short strings — far
 # below any executor broadcast limit, far above any real boilerplate
-# hot-list (fixture hot lists are 0-25 rows).
+# hot-list (fixture hot lists are 0-25 rows). The one driver-or-Spark
+# bound: every bounded probe (anti_join_bounded, connected_components,
+# the near-dup driver finishes) reads it from this module at call
+# time, so patching ``scale.HOT_BROADCAST_MAX`` (to -1: the Spark plan
+# everywhere) forces every path at once.
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
@@ -83,9 +87,7 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def anti_join_bounded(
-    left: DataFrame, keys: DataFrame, on: str, max_broadcast: int = HOT_BROADCAST_MAX
-) -> DataFrame:
+def anti_join_bounded(left: DataFrame, keys: DataFrame, on: str) -> DataFrame:
     """Left-anti join against a key set that is SMALL IN PRACTICE but
     not bounded by construction (df-cap hot lists: boilerplate shingle
     / fingerprint counts). Broadcasting such a set is the right plan —
@@ -93,7 +95,7 @@ def anti_join_bounded(
     `F.broadcast` hint is a latent OOM if a pathological corpus makes
     the set huge (VERDICT r05 "What's wrong #2": make the bound
     honest). So: probe the size with a LIMIT-bounded count (scans at
-    most ``max_broadcast``+1 rows, one tiny job) and fail over to a
+    most ``HOT_BROADCAST_MAX``+1 rows, one tiny job) and fail over to a
     plain shuffle anti-join past the threshold. Either path returns
     identical rows (property-tested in tests/test_scale.py with a
     forced-failover threshold).
@@ -106,8 +108,8 @@ def anti_join_bounded(
     The checkpoint holds only the key set itself, the data that was
     about to be broadcast or shuffled anyway."""
     keys = keys.localCheckpoint(eager=True)
-    n = keys.limit(max_broadcast + 1).count()
-    if n <= max_broadcast:
+    n = keys.limit(HOT_BROADCAST_MAX + 1).count()
+    if n <= HOT_BROADCAST_MAX:
         keys = F.broadcast(keys)
     return left.join(keys, on, "left_anti")
 

@@ -445,11 +445,11 @@ def _lev_fp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify term superlinear is caught by the probe, not the bench
     gate). Composition identical to the inline form it replaced."""
     from hello_flink_spark.operators.scale import anti_join_bounded
-    from hello_flink_spark.queries.llm import _shingle_df
+    from hello_flink_spark.queries.llm import text_fingerprint
 
-    d = t(spark, sf_dir, "documents")
-    # One fingerprint row per doc; materialize once — the hot-bucket
-    # branch and the candidate self-join both consume it, and without
+    # One fingerprint row per doc (text_fingerprint's frame);
+    # materialize once — the hot-bucket branch and the candidate
+    # self-join both consume it, and without
     # the checkpoint each re-runs the whole shingle pipeline (the same
     # double-compute anti_join_bounded guards against for its keys).
     # Repartition WIDE before checkpointing: AQE coalesces the small
@@ -460,9 +460,7 @@ def _lev_fp_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # see per-row CPU weight). 32-wide checkpoint -> 32-wide verify
     # (measured 0.9 s for the same stage).
     fp0 = (
-        _shingle_df(d)
-        .groupBy("doc_id")
-        .agg(F.min(F.md5("shingle")).alias("fingerprint"))
+        text_fingerprint(spark, sf_dir)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .localCheckpoint(eager=True)
     )
@@ -582,6 +580,7 @@ def dedup_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate. Every stage is a hash aggregate or equi-join with
     map-side combine — linear in corpus size plus banded pair output.
     """
+    from hello_flink_spark.operators.joins import pair_counts
     from hello_flink_spark.operators.scale import spread_small_scan
     from hello_flink_spark.queries.llm import _shingle_df
 
@@ -635,36 +634,18 @@ def dedup_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("x"),
     ).select("doc_id", F.col("x.band").alias("band"), F.col("x.band_val").alias("band_val"))
-    # candidates: one exchange of the band table (group on the band
-    # signature, emit in-group ordered pairs) instead of the pre-r17
-    # two-shuffle self-join; candidate set identical (distinct pairs
-    # sharing >= 1 band either way). Round-18 (ADVICE r17, guide §2.5):
-    # band buckets are UNBOUNDED on duplicate-heavy corpora, and the
-    # r17 flatten() built the whole k(k-1)/2 pair array in ONE
-    # projection row — O(k²) memory in a single task for a hot bucket.
-    # The enumeration now streams through two Generates (posexplode
-    # the group, then explode each element's strictly-later tail slice):
-    # per-row state is one O(k) slice, never the O(k²) pair set, and
-    # pair rows stream straight into the distinct's map-side partial.
-    # Same pair set row-for-row (ds is sorted & duplicate-free, so
-    # (ds[i], ds[j≥i+1]) enumerates exactly the doc_a < doc_b pairs).
+    # candidates: the distinct pairs sharing >= 1 band, the keys of the
+    # band-grouped pair count (joins.pair_counts: one exchange of the
+    # band table, and a hot bucket streams its pairs in O(k) per row).
     # A capped-enumeration + band-keyed-self-join-fallback variant
     # (banded_dedup's cap protocol) was measured at +25% on the benched
     # query (the grp subtree double-computes under two consumers) and
     # rejected; the residual hot-bucket COMPUTE skew (one task owns a
     # bucket's pair stream) is the same trade the self-join had on the
     # build side, now without its second shuffle.
-    cand = (
-        bands.groupBy("band", "band_val")
-        .agg(F.expr("array_sort(collect_list(doc_id))").alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(F.posexplode("ds").alias("i", "doc_a"), F.col("ds"))
-        .select(
-            "doc_a",
-            F.explode(F.expr("slice(ds, i + 2, size(ds) - i - 1)")).alias("doc_b"),
-        )
-        .distinct()
-    )
+    cand = pair_counts(
+        bands, ["band", "band_val"], "doc_id", "doc_a", "doc_b", "n_bands"
+    ).select("doc_a", "doc_b")
     # verify: one row per side per pair; the seed-aligned agreement
     # count is a zip_with over the two ordered signature arrays —
     # identical to the old 8-way join + regroup (mh values per (doc,

@@ -31,7 +31,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from hello_flink_spark.operators.scale import HOT_BROADCAST_MAX, spread_small_scan
+from hello_flink_spark.operators import scale
+from hello_flink_spark.operators.joins import pair_counts
+from hello_flink_spark.operators.scale import spread_small_scan
 from hello_flink_spark.registry import register
 from hello_flink_spark.sources.readers import load_table as t
 
@@ -200,37 +202,8 @@ def _shingle_df(d: DataFrame, checkpoint: bool = False) -> DataFrame:
     return anti_join_bounded(shingles, hot, "shingle")
 
 
-def _shingle_pairs(shingles: DataFrame) -> DataFrame:
-    """Shared-shingle pair counts (doc_a < doc_b, both_cnt) via ONE
-    exchange of the shingle table (round-17, guide §2.3/§2.4): group
-    by shingle, emit the in-group ordered pairs with an array fold —
-    the group is df-capped at SHINGLE_DF_CAP docs, so the per-group
-    fan-out is bounded at k(k-1)/2 ≤ 1225 — then hash-aggregate by
-    pair with map-side combine. Replaces the a⋈b self-join on
-    shingle, which shuffled the shingle table TWICE and joined;
-    pair output is identical row-for-row (verified at sf0.1), the
-    same rows the self-join's equi-match would emit."""
-    grp = (
-        shingles.groupBy("shingle")
-        .agg(F.expr("array_sort(collect_list(doc_id))").alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = grp.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(1, size(ds) - 1),"
-                " i -> transform(slice(ds, i + 1, size(ds) - i),"
-                " y -> struct(element_at(ds, i) AS doc_a, y AS doc_b))))"
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
-    return pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("both_cnt")
-    )
-
-
 def _overlap_counts(rows: list) -> list[tuple]:
-    """Driver twin of ``_shingle_df`` + ``_shingle_pairs`` + sizes over
+    """Driver twin of ``_shingle_df`` + ``pair_counts`` + sizes over
     the (doc_id, shingle) rows of ``_shingle_rows``: distinct, drop
     shingles in more than SHINGLE_DF_CAP docs, count each doc's
     shingles and each pair's shared ones. Integers only. A null doc_id
@@ -256,7 +229,7 @@ def _shingle_overlap_rows(d: DataFrame) -> list[tuple] | None:
     """``(doc_a, doc_b, both_cnt, n_a, n_b)`` for every doc pair of
     ``d`` that shares a df-capped shingle (doc_a < doc_b; n = the doc's
     capped shingle count), counted on the driver; None when ``d`` has
-    more than ``HOT_BROADCAST_MAX`` shingle rows.
+    more than ``scale.HOT_BROADCAST_MAX`` shingle rows.
 
     The bounded-broadcast protocol (``scale.anti_join_bounded``): one
     LIMIT-bounded probe of the map-only ``_shingle_rows`` plan (one job
@@ -267,8 +240,9 @@ def _shingle_overlap_rows(d: DataFrame) -> list[tuple] | None:
     driver as Python rows and are dropped: a fixed cost that a corpus
     just over the bound pays on top of the Spark plan (the LIMIT stops
     the scan early, so a large corpus pays no more)."""
-    head = _shingle_rows(d).limit(HOT_BROADCAST_MAX + 1).collect()
-    return _overlap_counts(head) if len(head) <= HOT_BROADCAST_MAX else None
+    bound = scale.HOT_BROADCAST_MAX
+    head = _shingle_rows(d).limit(bound + 1).collect()
+    return _overlap_counts(head) if len(head) <= bound else None
 
 
 def _shingle_overlap(
@@ -278,7 +252,7 @@ def _shingle_overlap(
     ``rows`` (from ``_shingle_overlap_rows``, doc_id's type) as a local
     frame, or, past the bound (``rows`` None), the Spark plan:
     ``_shingle_df`` (over ``spread_small_scan(d)`` when ``spread``),
-    ``_shingle_pairs`` and the per-doc sizes."""
+    ``joins.pair_counts`` and the per-doc sizes."""
     if rows is not None:
         doc_type = d.schema["doc_id"].dataType
         schema = StructType(
@@ -289,7 +263,7 @@ def _shingle_overlap(
     shingles = _shingle_df(spread_small_scan(d) if spread else d, checkpoint=True)
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     return (
-        _shingle_pairs(shingles)
+        pair_counts(shingles, ["shingle"], "doc_id", "doc_a", "doc_b", "both_cnt")
         .join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
         .select(
@@ -347,9 +321,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hot boilerplate shingles). This IS the scalable shape: shuffle
     on shingle, combine-side distinct, residual skew handled by AQE.
     The overlap counts come from ``_shingle_overlap_rows``: on the driver
-    for a corpus of at most HOT_BROADCAST_MAX shingle rows, else from
-    the materialized shingle frame and the grouped single-shuffle pair
-    enumeration (_shingle_pairs); the similarity filter and rounding
+    for a corpus of at most scale.HOT_BROADCAST_MAX shingle rows, else
+    from the materialized shingle frame and the grouped single-shuffle
+    pair enumeration (joins.pair_counts); the similarity filter and rounding
     are Spark expressions either way."""
     d = t(spark, sf_dir, "documents")
     # r12: on the Spark path the map-side shingle explode should use
@@ -1190,8 +1164,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame (one tiny map-only job) and fall back to the hint-free
     # join — AQE decides — past HOT_BROADCAST_MAX rows. Either path
     # returns identical rows.
-    n_bench = bench.limit(HOT_BROADCAST_MAX + 1).count()
-    bench_b = F.broadcast(bench) if n_bench <= HOT_BROADCAST_MAX else bench
+    n_bench = bench.limit(scale.HOT_BROADCAST_MAX + 1).count()
+    bench_b = F.broadcast(bench) if n_bench <= scale.HOT_BROADCAST_MAX else bench
     joined = (
         bench_b.alias("b")
         .join(train.alias("a"), F.col("a.shingle") == F.col("b.shingle"))

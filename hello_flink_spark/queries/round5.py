@@ -583,9 +583,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-equi-join skeleton as dedup_ngram_jaccard, different
     denominator — and the same round-17 shape: the shingle frame
     materializes once and the pair counts come from the grouped
-    single-shuffle enumeration (_shingle_pairs) instead of the
+    single-shuffle enumeration (joins.pair_counts) instead of the
     two-shuffle self-join; output identical row-for-row. A corpus of
-    at most HOT_BROADCAST_MAX shingle rows is counted on the driver
+    at most scale.HOT_BROADCAST_MAX shingle rows is counted on the driver
     (``llm._shingle_overlap_rows``); the containment filter and
     rounding stay Spark expressions."""
     from hello_flink_spark.queries.llm import _shingle_overlap, _shingle_overlap_rows
@@ -1470,34 +1470,16 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orders_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: part pairs appearing together in
-    ≥ 3 orders (the frequent-itemset candidate pass). The fan-out per
-    order is bounded by BASKET SIZE squared (a handful of lines per
-    order), never corpus²; the pair counts hash-aggregate with
-    map-side combine. Round-17: one grouped exchange of the lineitem
-    projection (group by order, emit in-basket ordered pairs) instead
-    of the previous two-shuffle self-join on l_orderkey — pair
-    multiset identical (sorted index enumeration + strict < filter
-    replicates the join's duplicate-line semantics)."""
+    ≥ 3 orders (the frequent-itemset candidate pass). The part
+    co-purchase edge set (``graph.copurchase_edges``) at a count of 3:
+    the fan-out per order is bounded by BASKET SIZE squared, never
+    corpus², and the pair counts hash-aggregate with map-side
+    combine."""
+    from hello_flink_spark.operators.graph import copurchase_edges
+
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.expr("array_sort(collect_list(l_partkey))").alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "filter(flatten(transform(sequence(1, size(ds) - 1),"
-                " i -> transform(slice(ds, i + 1, size(ds) - i),"
-                " y -> struct(element_at(ds, i) AS part_a, y AS part_b)))),"
-                " s -> s.part_a < s.part_b)"
-            )
-        ).alias("s")
-    ).select("s.part_a", "s.part_b")
-    return (
-        pairs.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("cooccur"))
-        .filter(F.col("cooccur") >= 3)
+    return copurchase_edges(li, 3).select(
+        F.col("pa").alias("part_a"), F.col("pb").alias("part_b"), "cooccur"
     )
 
 
@@ -1866,7 +1848,7 @@ def pipeline_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     window four times (once per shingle self-join side, sizes, and the
     anti-join base; zero ReusedExchange in the initial plan) — and the
     containment pair stage uses the grouped single-shuffle enumeration
-    (_shingle_pairs) instead of the two-shuffle self-join."""
+    (joins.pair_counts) instead of the two-shuffle self-join."""
     from hello_flink_spark.queries.llm import _shingle_overlap
 
     d = t(spark, sf_dir, "documents")

@@ -1563,31 +1563,17 @@ def events_user_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     in concurrent stages may race the persist and recompute a bounded
     suffix — results unaffected, and the sizes agg and the pair stage
     shared no exchange at all before) — then ONE grouped exchange on
-    user_id emits each
-    user's in-group ordered type pairs (fan-out bounded by the
-    event-type alphabet squared, so the pair output is O(users ×
-    |types|²), linear in users; the pre-r17 self-join shuffled the
-    distinct table twice). Type pairs with empty intersection are
-    absent by construction in both engines."""
+    user_id counts each user's in-group type pairs
+    (``joins.pair_counts``; fan-out bounded by the event-type alphabet
+    squared, so the pair output is O(users × |types|²), linear in
+    users). Type pairs with empty intersection are absent by
+    construction in both engines."""
+    from hello_flink_spark.operators.joins import pair_counts
+
     e = t(spark, sf_dir, "events")
     tu = e.select("event_type", "user_id").distinct().localCheckpoint(eager=False)
     sizes = tu.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        tu.groupBy("user_id")
-        .agg(F.expr("array_sort(collect_list(event_type))").alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, size(ds) - 1),"
-                    " i -> transform(slice(ds, i + 1, size(ds) - i),"
-                    " y -> struct(element_at(ds, i) AS type_a, y AS type_b))))"
-                )
-            ).alias("s")
-        )
-        .groupBy(F.col("s.type_a").alias("type_a"), F.col("s.type_b").alias("type_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = pair_counts(tu, ["user_id"], "event_type", "type_a", "type_b", "n_common")
     sa = sizes.select(F.col("event_type").alias("type_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("event_type").alias("type_b"), F.col("n").alias("nb"))
     return (

@@ -134,24 +134,8 @@ def iter_correctness_rows(repo_root: Path | None = None):
 # of the rotation — after never-verified names, before the
 # staleness-ordered rest — until the driver hash-greens it in a round
 # >= ``reverify_before_round``; the pin then self-clears and the
-# ordering returns to pure last-green staleness. Round 15's five
-# format pins all hash-greened in CORRECTNESS_r15 and self-cleared.
-# Round 16 pinned ``scan_avro_container`` alone (hash-greened in
-# CORRECTNESS_r16, self-cleared): the advisor-r15 fix extended
-# ``_validate_refs`` (mapping-wrapped named references) inside
-# ``encode_container``, on that query's WRITE path — and the same
-# round's second review wave added ``_validate_refs`` to
-# ``decode_container``'s embedded writer/reader schemas, which sits on
-# the same query's READ path (advisor r16: the pin covered both
-# changes, not just the write-side one the original comment named; no
-# other registered query touches ``decode_container``).
-# Round 17 pins the two column-codec queries: advisor-r16 added
-# ``_validate_refs`` at the four Avro column-UDF construction sites
-# (``from_avro_col``/``to_avro_col``/``from_avro_confluent_col``'s
-# reader+per-id writers/``to_avro_confluent_col``), which sit on
-# ``scan_avro_decode``'s and ``scan_avro_confluent``'s decode/encode
-# paths; ``scan_avro_container`` goes through ``decode_container``,
-# untouched this round.
+# ordering returns to pure last-green staleness. A cleared pin is
+# deleted; the pins that remain have not yet been re-verified.
 _ROTATION_HEAD: tuple[tuple[str, int], ...] = (
     # Round-18 OPTIMIZATION pins (reverify_before_round=19): every
     # declared query whose executed code path changed in the r18
@@ -178,33 +162,13 @@ _ROTATION_HEAD: tuple[tuple[str, int], ...] = (
     ("sim_ann_ivf_pq_residual", 19),
     ("dedup_semantic_clusters", 19),
     ("text_bpe_train_merges", 19),
-    # Round-17 pins (reverify_before_round=18) for names NOT re-changed
-    # in r18 — they self-clear on their r18 hash-green. The original
-    # codec pins (scan_avro_*, before=17) stay for the record below
-    # them; names re-changed in r18 moved into the block above.
-    ("scan_avro_decode", 17),
-    ("scan_avro_confluent", 17),
-    ("dedup_ngram_jaccard", 18),
-    ("dedup_containment", 18),
-    ("pipeline_training_corpus_v3", 18),
-    ("orders_basket_pairs", 18),
-    ("events_user_overlap_jaccard", 18),
-    ("graph_triangle_count", 18),
-    ("graph_degree_stats", 18),
-    ("sim_cosine_pairs", 18),
-    ("sim_knn", 18),
-    ("sim_range_search", 18),
-    ("sim_ann_ivf", 18),
-    ("text_tfidf_sql", 18),
-    ("text_substring_dedup", 18),
-    ("text_substring_dedup_fp", 18),
-    ("text_bpe_apply", 18),
-    ("multimodal_dedup_phash", 18),
-    ("multimodal_video_dedup_framehash", 18),
-    ("multimodal_audio_dedup_fingerprint", 18),
-    ("agg_pq_quantize", 18),
-    ("sim_ann_ivf_pq", 18),
-    ("graph_pagerank", 18),
+    # The O-tier queries whose sf0.01 plan moved onto the shared
+    # in-group pair enumerator (joins.pair_counts); the other queries
+    # it changes are pinned above already.
+    ("orders_basket_pairs", 19),
+    ("events_user_overlap_jaccard", 19),
+    ("graph_triangle_count", 19),
+    ("graph_degree_stats", 19),
 )
 
 

@@ -448,16 +448,26 @@ def _idle_deadline(idle) -> int:
 
 
 def _inactivity(user: int, scalars, ready: list, cutoff):
-    """State (last_us, cnt): each micro-batch's rows move the user's
-    last-seen time; the ONLY output is timer-driven — once the
-    watermark passes last + INACTIVITY_US, one alert row, and the
-    user's state is dropped."""
-    idle = scalars
-    if ready:
-        idle = (ready[-1][0] // 1000, (scalars[1] if scalars else 0) + len(ready))
-    if cutoff is not None and _idle_deadline(idle) < cutoff:
-        return None, [(user, pd.Timestamp(int(idle[0]), unit="us"), int(idle[1]))]
-    return idle, []
+    """State (last_us, cnt): one alert row ``(user, last, cnt)`` per idle
+    spell, a gap of more than INACTIVITY_US after ``last``. Each row
+    first closes the spell its gap from ``last`` ends (previous batch's
+    last → first row, then row → row), then becomes ``last``; once the
+    watermark passes last + INACTIVITY_US the timer closes the open
+    spell and drops the user's state. Closing on the gap, not only on
+    the timer, keeps the alerts the same however the stream is cut
+    into micro-batches: a user's next event may arrive in the very
+    batch whose watermark passes its deadline."""
+    last, cnt = scalars or (None, 0)
+    rows: list = []
+    for ts_ns, _eid in ready:
+        ts_us = ts_ns // 1000
+        if last is not None and ts_us - last > INACTIVITY_US:
+            rows.append((user, pd.Timestamp(int(last), unit="us"), int(cnt)))
+            cnt = 0
+        last, cnt = ts_us, cnt + 1
+    if cutoff is not None and _idle_deadline((last, cnt)) < cutoff:
+        return None, rows + [(user, pd.Timestamp(int(last), unit="us"), int(cnt))]
+    return (last, cnt), rows
 
 
 _INACTIVITY = _Recurrence(
@@ -472,9 +482,10 @@ _INACTIVITY = _Recurrence(
 
 
 def inactivity_alerts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Per-key event-time timer callback in isolation: emit an alert row
-    when a user goes quiet for INACTIVITY_US of event time — every event
-    re-registers the timer; only the timeout path produces output."""
+    """Per-key event-time timer callback: emit an alert row when a user
+    goes quiet for INACTIVITY_US of event time — every event
+    re-registers the timer, and a gap that a later event closes alerts
+    too, whichever micro-batch that event arrives in."""
     return _by_key_group(events, watermark, _INACTIVITY)
 
 

@@ -35,8 +35,9 @@ ROADMAP.md).
 
 `dedup_cluster` labels the driver-side jaccard pairs by union-find and,
 on the Spark path, hands the pair frame to `connected_components`
-(which has its own probe of the same bound). Tests reach the Spark
-path by patching the module's `HOT_BROADCAST_MAX` to -1.
+(which has its own probe of the same bound). Every probe reads the
+bound from `scale` when it runs, so patching `scale.HOT_BROADCAST_MAX`
+to -1 sends every one of them down the Spark path.
 """
 
 

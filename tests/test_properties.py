@@ -209,17 +209,17 @@ def test_semi_anti_partition_left(spark, keys):
     assert semi + anti == len(keys)
 
 
-# connected_components labels a graph of at most graph.HOT_BROADCAST_MAX
+# connected_components labels a graph of at most scale.HOT_BROADCAST_MAX
 # entry edges on the driver; a bound of -1 sends every graph, the empty
 # one too, through the distributed rounds
 CC_PATHS = {"driver": HOT_BROADCAST_MAX, "distributed": -1}
 
 
 def _cc_spark(spark, edges, path="driver", **kwargs):
-    from hello_flink_spark.operators import graph
+    from hello_flink_spark.operators import graph, scale
 
     df = spark.createDataFrame(edges, "u long, v long")
-    with mock.patch.object(graph, "HOT_BROADCAST_MAX", CC_PATHS[path]):
+    with mock.patch.object(scale, "HOT_BROADCAST_MAX", CC_PATHS[path]):
         return {r.node: r.label for r in graph.connected_components(df, **kwargs).collect()}
 
 
@@ -290,13 +290,13 @@ def test_connected_components_assume_canonical_identical(spark, edges):
 def test_connected_components_bound_picks_path(spark):
     """A graph of exactly the bound's edge count is labeled on the
     driver, one edge over it runs the rounds; the labels agree."""
-    from hello_flink_spark.operators import graph
+    from hello_flink_spark.operators import graph, scale
 
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]
     want = _cc_union_find(edges)
     for bound, driver in ((len(edges), True), (len(edges) - 1, False)):
         df = spark.createDataFrame(edges, "u long, v long")
-        with mock.patch.object(graph, "HOT_BROADCAST_MAX", bound), mock.patch.object(
+        with mock.patch.object(scale, "HOT_BROADCAST_MAX", bound), mock.patch.object(
             graph, "_union_find_labels", wraps=graph._union_find_labels
         ) as finish:
             got = {r.node: r.label for r in graph.connected_components(df).collect()}
@@ -349,42 +349,75 @@ def test_pq_codes_col_matches_assignment_pivot(spark):
     assert direct == pivot and len(direct) > 0
 
 
-def test_shingle_pairs_match_self_join(spark):
-    """r17 optimization guard: the grouped single-shuffle pair
-    enumeration (``_shingle_pairs``) must emit exactly the rows the
-    replaced a⋈b self-join on shingle produced — same (doc_a < doc_b)
-    pairs, same both_cnt multiset semantics."""
-    from pyspark.sql import functions as F
-
-    from hello_flink_spark.queries.llm import _shingle_df, _shingle_pairs
+def _docs_shingles(spark, sf):
+    from hello_flink_spark.queries.llm import _shingle_df
     from hello_flink_spark.sources.readers import load_table
 
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    sh = _shingle_df(d).localCheckpoint()
-    got = {
-        (r.doc_a, r.doc_b): r.both_cnt for r in _shingle_pairs(sh).collect()
-    }
-    a, b = sh.alias("a"), sh.alias("b")
-    ref = {
-        (r.doc_a, r.doc_b): r.both_cnt
-        for r in a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("both_cnt"))
+    return _shingle_df(load_table(spark, sf, "documents"))
+
+
+def _basket_lines(spark, sf):
+    from hello_flink_spark.sources.readers import load_table
+
+    return load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
+
+
+def _user_event_types(spark, sf):
+    from hello_flink_spark.sources.readers import load_table
+
+    return load_table(spark, sf, "events").select("event_type", "user_id").distinct()
+
+
+def _null_keys(spark, sf):
+    """A null group key, which an equi-join never matches, and a null
+    member, which matches nothing."""
+    rows = [(None, 1), (None, 2), (1, None), (1, 3), (1, 3), (1, 4), (2, 5)]
+    return spark.createDataFrame(rows, "g long, x long")
+
+
+# (frame, group columns, member column, members repeat within a group)
+PAIR_INPUTS = {
+    "shingles": (_docs_shingles, ["shingle"], "doc_id", False),
+    "baskets": (_basket_lines, ["l_orderkey"], "l_partkey", True),
+    "event_types": (_user_event_types, ["user_id"], "event_type", False),
+    "null_keys": (_null_keys, ["g"], "x", True),
+}
+
+
+@pytest.mark.parametrize("case", PAIR_INPUTS)
+def test_pair_counts_match_self_join(spark, sf_dir, case):
+    """``joins.pair_counts`` emits exactly the ``(a, b, count)`` rows of
+    the counted equi-self-join it replaces — ``x.g = y.g AND x.item <
+    y.item GROUP BY`` the two members — for distinct members (shingle
+    docs), repeated members (an order that lists a part twice, where
+    ``a < b`` drops the equal pairs), string members (event types) and
+    null keys and members."""
+    from hello_flink_spark.operators.joins import pair_counts
+
+    load, group, item, repeats = PAIR_INPUTS[case]
+    frame = load(spark, sf_dir).localCheckpoint()
+    assert (frame.count() > frame.distinct().count()) == repeats
+    got = sorted(
+        tuple(r) for r in pair_counts(frame, group, item, "a", "b", "n").collect()
+    )
+    on = F.col(f"x.{item}") < F.col(f"y.{item}")
+    for g in group:
+        on &= F.col(f"x.{g}") == F.col(f"y.{g}")
+    ref = sorted(
+        tuple(r)
+        for r in frame.alias("x")
+        .join(frame.alias("y"), on)
+        .groupBy(F.col(f"x.{item}").alias("a"), F.col(f"y.{item}").alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"))
         .collect()
-    }
-    assert got == ref and len(got) > 0
+    )
+    assert got == ref and got
 
 
 # The near-dup tier's driver finishes (``llm._shingle_overlap_rows``,
-# ``banded_dedup.min_rep_dedup``) read the bound their module imported;
-# patched to -1 it sends every input, the empty one too, through the
-# Spark plan (as CC_PATHS does for connected components).
+# ``banded_dedup.min_rep_dedup``) read scale.HOT_BROADCAST_MAX at call
+# time; patched to -1 it sends every input, the empty one too, through
+# the Spark plan (as CC_PATHS does for connected components).
 NEAR_DUP_PATHS = {"driver": HOT_BROADCAST_MAX, "spark": -1}
 
 corpora = st.lists(
@@ -404,11 +437,12 @@ def _docs(spark, texts):
 def _overlap_paths(spark, d, driver_bound=HOT_BROADCAST_MAX, spark_bound=-1):
     """Sorted shingle-overlap rows of ``d`` on each path, checking that
     each bound picked the path it names."""
+    from hello_flink_spark.operators import scale
     from hello_flink_spark.queries import llm
 
     out = {}
     for path, bound in (("driver", driver_bound), ("spark", spark_bound)):
-        with mock.patch.object(llm, "HOT_BROADCAST_MAX", bound):
+        with mock.patch.object(scale, "HOT_BROADCAST_MAX", bound):
             rows = llm._shingle_overlap_rows(d)
         assert (rows is not None) == (path == "driver"), (path, bound)
         out[path] = sorted(tuple(r) for r in llm._shingle_overlap(d, rows).collect())
@@ -460,10 +494,10 @@ sig_words = st.builds(
 
 def _min_rep(spark, rows, bound, **kwargs):
     """(sorted (doc_id, sig, keep_doc_id) rows, capped bucket count)."""
-    from hello_flink_spark.operators import banded_dedup
+    from hello_flink_spark.operators import banded_dedup, scale
 
     sigs = spark.createDataFrame(rows, "doc_id long, sig array<long>")
-    with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+    with mock.patch.object(scale, "HOT_BROADCAST_MAX", bound):
         out = banded_dedup.min_rep_dedup(sigs, **kwargs).collect()
     return (
         sorted((r.doc_id, tuple(r.sig), r.keep_doc_id) for r in out),
@@ -3219,12 +3253,25 @@ def _inactivity(
         )
         return
     pdf = _sorted_concat(pdfs, ["ts", "event_id"])
-    last_us = int(pdf["ts"].iloc[-1].value // 1000)
-    cnt = (state.get[1] if state.exists else 0) + len(pdf)
+    last_us, cnt = state.get if state.exists else (None, 0)
+    out: list[dict] = []
+    for ts in pdf["ts"]:
+        ts_us = ts.value // 1000
+        # a gap that this event closes is an idle spell too, whichever
+        # call the event arrives in
+        if last_us is not None and ts_us - last_us > INACTIVITY_US:
+            out.append(
+                {
+                    "user_id": key[0],
+                    "last_seen": pd.Timestamp(int(last_us), unit="us"),
+                    "events_before_idle": int(cnt),
+                }
+            )
+            cnt = 0
+        last_us, cnt = ts_us, cnt + 1
     state.update((last_us, cnt))
-    # pure timer semantics: the ONLY output is timer-driven (the alert)
     state.setTimeoutTimestamp((last_us + INACTIVITY_US) // 1000)
-    yield pd.DataFrame([])
+    yield pd.DataFrame(out)
 
 
 def _count_window(
@@ -3556,6 +3603,92 @@ def test_key_group_fold_matches_per_user_reorder_buffer(events, cuts, jumps, del
         assert final_state == ref_state
         if op.deadline:
             assert not group_state, "a closed session kept its group row"
+
+
+@given(
+    steps=st.lists(
+        st.tuples(
+            # ms since the previous event: the same instant, half an
+            # hour, exactly the inactivity span (no idle spell), 1 ms
+            # more (a spell) or two spans
+            st.sampled_from([0, 1, 1_800_000, 3_600_000, 3_600_001, 7_200_000]),
+            st.integers(0, 3),  # user
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    cuts=st.lists(st.integers(0, 29), max_size=8),
+    delay=st.integers(1, 4),
+    groups=st.integers(1, 3),
+)
+@settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_inactivity_alerts_every_idle_spell_under_any_cut(steps, cuts, delay, groups):
+    """On an in-order stream, ``inactivity_alerts``' fold alerts every
+    idle spell, whatever micro-batches the stream is cut into: one
+    ``(user, last_seen, events_before_idle)`` row per gap of more than
+    INACTIVITY_US between a user's consecutive events, and one for its
+    last event once a watermark passes every deadline. Spark's call
+    rules as in the test above: a data call per group with arrivals,
+    then a timeout call per other group whose timer is below the
+    watermark."""
+    from hello_flink_spark.streaming import stateful
+
+    rows, t_ms = [], 1_700_000_000_000
+    for i, (dt_ms, u) in enumerate(steps):
+        t_ms += dt_ms
+        rows.append((t_ms * 1_000_000, u, i))
+    want, open_spell = [], {}
+    for ts, u, _ in rows:
+        last, cnt = open_spell.get(u, (None, 0))
+        if last is not None and ts - last > INACTIVITY_US * 1000:
+            want.append((u, pd.Timestamp(last // 1000, unit="us"), cnt))
+            cnt = 0
+        open_spell[u] = (ts, cnt + 1)
+    want += [(u, pd.Timestamp(ts // 1000, unit="us"), c) for u, (ts, c) in open_spell.items()]
+
+    group_state, timers, got = {}, {}, []
+
+    def call(g, rs, wm):
+        st_ = _TimerGroupState(group_state.get(g), wm, not rs)
+        frames = [
+            pd.DataFrame(
+                {
+                    "ts": pd.to_datetime([r[0] for r in rs]),
+                    "user_id": [r[1] for r in rs],
+                    "event_id": [r[2] for r in rs],
+                }
+            )
+        ] if rs else []
+        for out in stateful._key_group_fold(
+            "UTC", stateful._INACTIVITY, (g,), iter(frames), st_
+        ):
+            got.extend(_rows(out))
+        if st_.exists:
+            group_state[g], timers[g] = st_.value, st_.timer
+        else:
+            group_state.pop(g, None)
+
+    def run(batch, wm):
+        by_group: dict = {}
+        for r in batch:
+            by_group.setdefault(r[1] % groups, []).append(r)
+        for g, rs in by_group.items():
+            call(g, rs, wm)
+        for g in [g for g in group_state if g not in by_group]:
+            if timers[g] is not None and timers[g] < wm:
+                call(g, [], wm)
+
+    bounds = sorted({c for c in cuts if c < len(rows)} | {0, len(rows)})
+    wm = seen = 0
+    for a, b in zip(bounds, bounds[1:]):
+        run(rows[a:b], wm)
+        seen = rows[b - 1][0] // 1_000_000
+        if seen - delay > wm:
+            wm = seen - delay
+            run([], wm)
+    run([], seen + delay + INACTIVITY_US // 1000 + 100)
+    assert sorted(got) == sorted(want)
+    assert not group_state
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ from unittest import mock
 import pytest
 from pyspark.sql import functions as F
 
+from hello_flink_spark.operators import scale
 from hello_flink_spark.operators.scale import (
     HOT_BROADCAST_MAX,
     anti_join_bounded,
@@ -64,9 +65,9 @@ def test_anti_join_bounded_broadcasts_small_sets(spark, sf_dir):
 
 def test_anti_join_bounded_fails_over_to_shuffle(spark, sf_dir):
     """A hot-heavy corpus (every key 'hot': the pathological input the
-    VERDICT r05 #2 guard exists for) must NOT broadcast — forced via
-    max_broadcast=0 — and the shuffle path must return the identical
-    anti-join result."""
+    VERDICT r05 #2 guard exists for) must NOT broadcast — forced by
+    patching scale.HOT_BROADCAST_MAX to 0 — and the shuffle path must
+    return the identical anti-join result."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     keys = docs.filter("doc_id % 7 = 0").select("doc_id")
     try:
@@ -74,7 +75,8 @@ def test_anti_join_bounded_fails_over_to_shuffle(spark, sf_dir):
         # guard's unhinted join must not (AQE re-broadcasting from
         # genuine runtime stats is fine and not what this asserts)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        guarded = anti_join_bounded(docs, keys, "doc_id", max_broadcast=0)
+        with mock.patch.object(scale, "HOT_BROADCAST_MAX", 0):
+            guarded = anti_join_bounded(docs, keys, "doc_id")
         plan = guarded._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, f"failover did not engage:\n{plan[:1500]}"
         want = docs.join(keys, "doc_id", "left_anti")
@@ -245,9 +247,9 @@ def test_phash_incremental_index_side_shuffle_free(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# min_rep_dedup finishes a frame of at most banded_dedup.HOT_BROADCAST_MAX
-# rows on the driver; patched to -1 it sends every frame, the empty one
-# too, through the Spark plan
+# min_rep_dedup finishes a frame of at most scale.HOT_BROADCAST_MAX rows
+# on the driver; patched to -1 it sends every frame, the empty one too,
+# through the Spark plan
 MIN_REP_PATHS = {"driver": HOT_BROADCAST_MAX, "spark": -1}
 
 
@@ -270,7 +272,6 @@ def test_banded_dedup_exact_collapse_is_duplication_invariant(spark):
     """A million byte-identical uploads must contribute ONE row to the
     band join: candidate count is IDENTICAL whether a signature appears
     once or 200 times, and every duplicate maps to the group min."""
-    from hello_flink_spark.operators import banded_dedup
     from hello_flink_spark.operators.banded_dedup import (
         LAST_BAND_METRICS,
         banded_candidates,
@@ -291,7 +292,7 @@ def test_banded_dedup_exact_collapse_is_duplication_invariant(spark):
     assert LAST_BAND_METRICS["capped_buckets"] == 0
 
     for path, bound in MIN_REP_PATHS.items():
-        with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+        with mock.patch.object(scale, "HOT_BROADCAST_MAX", bound):
             out = {
                 r["doc_id"]: r["keep_doc_id"]
                 for r in min_rep_dedup(
@@ -312,7 +313,6 @@ def test_banded_dedup_hot_bucket_emits_hub_star_not_all_pairs(spark):
     LINEAR in the bucket size, and the hub chain must still collapse
     the dense cluster to its min representative exactly as all-pairs
     would (every member is within hamming 1 of the hub)."""
-    from hello_flink_spark.operators import banded_dedup
     from hello_flink_spark.operators.banded_dedup import (
         BAND_BUCKET_CAP,
         LAST_BAND_METRICS,
@@ -336,7 +336,7 @@ def test_banded_dedup_hot_bucket_emits_hub_star_not_all_pairs(spark):
     assert n < BAND_BUCKET_CAP * (BAND_BUCKET_CAP - 1) * 4
 
     for path, bound in MIN_REP_PATHS.items():
-        with mock.patch.object(banded_dedup, "HOT_BROADCAST_MAX", bound):
+        with mock.patch.object(scale, "HOT_BROADCAST_MAX", bound):
             out = {
                 r["doc_id"]: r["keep_doc_id"]
                 for r in min_rep_dedup(sigs, hamming_max=2).collect()

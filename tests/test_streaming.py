@@ -890,9 +890,10 @@ def test_global_count_trigger_stream(spark, sf_dir, replay_dir):
 
 
 def test_stateful_timer_inactivity_alerts(spark, sf_dir, replay_dir):
-    """stateful_timer: alerts fire only via event-time timers; every
-    alerted (user, last_seen) must be a real >=1h-idle point — i.e. the
-    next event for that user in the batch data is >1h later or absent."""
+    """stateful_timer: every alerted (user, last_seen) must be a real
+    >=1h-idle point — the next event for that user in the batch data is
+    >1h later or absent — and every gap of more than 1h between a
+    user's consecutive events in the replay alerts."""
     run_to_memory(
         stateful.inactivity_alerts(_stream(spark, replay_dir), WM), "t_idle", "append"
     )
@@ -908,6 +909,15 @@ def test_stateful_timer_inactivity_alerts(spark, sf_dir, replay_dir):
         later = [ts for ts in by_user[a.user_id] if ts > a.last_seen]
         gap_ok = not later or (later[0] - a.last_seen).total_seconds() >= 3600
         assert gap_ok, f"alert at {a.last_seen} for user {a.user_id} but next event {later[:1]}"
+    alerted = {(a.user_id, a.last_seen) for a in alerts}
+    gaps = {
+        (u, prev)
+        for u, tss in by_user.items()
+        for prev, nxt in zip(tss, tss[1:])
+        if (nxt - prev).total_seconds() > 3600
+    }
+    assert gaps, "no idle gap in the replay"
+    assert gaps <= alerted, f"idle gaps without an alert: {sorted(gaps - alerted)[:5]}"
 
 
 # ---------------------------------------------------------------------------
@@ -2397,12 +2407,12 @@ def test_stateful_ops_keep_one_state_row_per_key_group(spark, tmp_path, op):
     idle, and a group when it empties: each user's four events are
     300 minutes apart, four one-event sessions and four idle spells,
     and once the sentinel's watermark has passed all of them only the
-    sentinel's group is left: 1,200 closed sessions, but 300 idle
-    alerts, because each user's next event arrives in the micro-batch
-    whose watermark passes its idle deadline, and a key with data gets
-    a data call, which re-arms its timer, not a timeout."""
+    sentinel's group is left: 1,200 closed sessions and 1,200 idle
+    alerts. Three of each user's idle spells end in the micro-batch
+    whose watermark passes their deadline, so they alert on the gap
+    the next event closes, not on a timeout."""
     q, table, _ = _run_key_group_stream(spark, tmp_path, op)
-    closed = {"funnel": 1200, "sessionize": 1200, "inactivity": 300}
+    closed = {"funnel": 1200, "sessionize": 1200, "inactivity": 1200}
     if op in closed:
         assert q.lastProgress.stateOperators[0].numRowsTotal <= 1
         assert spark.table(table).filter(F.col("user_id") >= 0).count() == closed[op]
