@@ -6,10 +6,13 @@ has no MATCH_RECOGNIZE surface, so a declarative pattern (an ordered
 list of event types + a per-stage time window) is COMPILED into both
 execution forms:
 
-- ``compile_stream``: one generic ``applyInPandasWithState`` NFA.
-  State per key is the open partial-match list (anchor event_id + the
-  matched timestamps so far), expired by event-time timers, so state
-  stays bounded by the window span regardless of stream length.
+- ``compile_stream``: one generic NFA, a per-user fold run by the
+  key-group driver every keyed operator shares
+  (``stateful._by_key_group``). State per user is the open
+  partial-match list (anchor event_id + the matched timestamps so
+  far), kept in its key group's state row and expired by event-time
+  deadlines, so state stays bounded by the window span regardless of
+  stream length.
 - ``compile_batch``: a chain of keyed equi-joins with time-band
   residuals + MIN-aggregations — the batch shadow, linear per key.
 - ``oracle_sql``: the equivalent DuckDB CTE chain for the driver gate.
@@ -28,12 +31,13 @@ they had when hand-written.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Iterator, Tuple
+from typing import Any, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hello_flink_spark.streaming.stateful import _by_key_group, _Recurrence
 
 
 @dataclass(frozen=True)
@@ -1048,16 +1052,24 @@ def _make_processor(
     grp: Tuple[int, int] | None = None,
     reluctant: bool = False,
 ):
-    """Build the per-key NFA closure. Partial matches are encoded in
-    state as 'anchor_id:ts1,ts2,...|n_rep|pending' strings (stage =
-    number of ts entries) — a single array<string> state column works
-    for every pattern length, which is what makes the compiler general.
+    """Build the NFA as a per-user fold for the key-group driver
+    (``stateful._by_key_group``): the returned recurrence folds one
+    user's ``(ts_ns, event_id, event_type, value)`` rows, on arrival
+    and in (ts, event_id) order, onto its open partial matches and
+    returns the output rows as tuples in its ``output`` column order.
+    Partial matches are encoded in the user's one state field as
+    'anchor_id:ts1,ts2,...|n_rep|pending|values' strings (stage =
+    number of ts entries) — a single array<string> works for every
+    pattern length, which is what makes the compiler general. The
+    user's deadline, its event-time timer, is the latest partial's
+    expiry; once the watermark passes it, the driver folds the user
+    with no rows and every partial has expired.
 
     With ``emit_timeouts`` ([F] Flink's timed-out-pattern side output,
     ``PatternStream.select(timeoutTag, ...)``) every expired partial is
     EMITTED as a row carrying the stage prefix it reached plus
     ``matched=false`` (completed matches carry ``matched=true``) —
-    both at the event-time timer and at inline window pruning.
+    both at the deadline and at inline window pruning.
 
     With ``rep`` ([F] Flink CEP ``oneOrMore()``, greedy single-match —
     see CepPattern.one_or_more) a partial that has matched through step
@@ -1077,7 +1089,7 @@ def _make_processor(
     GROUPS; a partial waiting at a strict stage when a later-timestamp
     group ends unpromoted is marked with a pending-kill timestamp and
     silently discarded at the next strictly-later group (or silently at
-    the timer — a later event existed, so it is a contiguity violation,
+    the deadline — a later event existed, so it is a contiguity violation,
     not a timeout). The deferral makes the verdict identical no matter
     how a same-timestamp group is split across micro-batches.
 
@@ -1119,21 +1131,23 @@ def _make_processor(
             return vals[:-1] + [float("nan")]
         return vals[:-1] + [val]
 
+    # output rows are tuples in this column order
+    counted = rep is not None or grp is not None
+    output = ", ".join(
+        ["user_id long", "anchor_id long"]
+        + [f"ts{j + 1} timestamp" for j in range(k)]
+        + [f"v{j + 1} double" for j in emit_vals]
+        + (["n_rep int"] if counted else [])
+        + (["matched boolean"] if emit_timeouts else [])
+    )
+
     def _row(uid, aid, tss, matched, cnt, vals=()):
-        row = {"user_id": uid, "anchor_id": aid}
-        for j in range(k):
-            row[f"ts{j + 1}"] = (
-                pd.Timestamp(int(tss[j]), unit="us")
-                if j < len(tss) and tss[j] is not None
-                else None
-            )
-        for j in emit_vals:
-            row[f"v{j + 1}"] = vals[j] if j < len(vals) else None
-        if rep is not None or grp is not None:
-            row["n_rep"] = cnt
-        if emit_timeouts:
-            row["matched"] = matched
-        return row
+        tss = [
+            None if t is None else pd.Timestamp(int(t), unit="us")
+            for t in tss + [None] * (k - len(tss))
+        ]
+        row = (uid, aid, *tss, *(vals[j] if j < len(vals) else None for j in emit_vals))
+        return row + ((cnt,) if counted else ()) + ((matched,) if emit_timeouts else ())
 
     def _expired(tss, now_us) -> bool:
         return now_us - tss[-1] > window_us or (
@@ -1177,61 +1191,53 @@ def _make_processor(
             d = min(d, tss[0] + total_us)
         return d
 
-    def _decode(state: GroupState):
+    def _decode(encoded):
         # skipped optional slots encode as -1 (timestamps are µs > 0);
         # accepted-event values ride a 4th segment (repr round-trips
         # doubles exactly; '' = no value, e.g. a skipped slot)
         partials: list[
             tuple[int, list[int | None], int, int | None, list[float | None]]
         ] = []
-        if state.exists:
-            for enc in state.get[0]:
-                parts = enc.split("|")
-                aid, _, tss = parts[0].partition(":")
-                cnt = int(parts[1]) if len(parts) > 1 and parts[1] else 0
-                pend = int(parts[2]) if len(parts) > 2 and parts[2] else None
-                stss = [None if x == "-1" else int(x) for x in tss.split(",")]
-                vals = (
-                    [None if x == "" else float(x) for x in parts[3].split(",")]
-                    if len(parts) > 3 and parts[3]
-                    else [None] * len(stss)
-                )
-                partials.append((int(aid), stss, cnt, pend, vals))
+        for enc in encoded:
+            parts = enc.split("|")
+            aid, _, tss = parts[0].partition(":")
+            cnt = int(parts[1]) if len(parts) > 1 and parts[1] else 0
+            pend = int(parts[2]) if len(parts) > 2 and parts[2] else None
+            stss = [None if x == "-1" else int(x) for x in tss.split(",")]
+            vals = (
+                [None if x == "" else float(x) for x in parts[3].split(",")]
+                if len(parts) > 3 and parts[3]
+                else [None] * len(stss)
+            )
+            partials.append((int(aid), stss, cnt, pend, vals))
         return partials
 
-    def proc(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # watermark passed every open partial
-            expired = _decode(state)
-            state.remove()
-            if emit_timeouts and reluctant:
-                expired = _collapse_anchor_timeouts(expired)
-            yield pd.DataFrame(
-                [
-                    _row(key[0], aid, tss, False, cnt, vals)
-                    for aid, tss, cnt, pend, vals in expired
-                    if _timeout_eligible(pend)
-                ]
-                if emit_timeouts
-                else []
-            )
-            return
+    def deadline(scalars) -> int:
+        # the event-time timer (ns): once the watermark passes the
+        # latest partial's expiry, every open partial has expired
+        return 1000 * max(_deadline(p[1]) for p in _decode(scalars[0]))
 
-        partials = _decode(state)
+    def fold(user: int, scalars, ready: list, cutoff):
+        partials = _decode(scalars[0]) if scalars else []
+        if not ready:  # folded for its deadline: every partial expired
+            if not emit_timeouts:
+                return None, []
+            if reluctant:
+                partials = _collapse_anchor_timeouts(partials)
+            return None, [
+                _row(user, aid, tss, False, cnt, vals)
+                for aid, tss, cnt, pend, vals in partials
+                if _timeout_eligible(pend)
+            ]
 
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"], ignore_index=True
-        )
-        out: list[dict] = []
-        rows = list(zip(pdf["ts"], pdf["event_id"], pdf["event_type"], pdf["value"]))
+        out: list[tuple] = []
         gi = 0
-        while gi < len(rows):
-            ts_us = rows[gi][0].value // 1000
+        while gi < len(ready):
+            ts_us = ready[gi][0] // 1000
             gj = gi
-            while gj < len(rows) and rows[gj][0].value // 1000 == ts_us:
+            while gj < len(ready) and ready[gj][0] // 1000 == ts_us:
                 gj += 1
-            group, gi = rows[gi:gj], gj
+            group, gi = ready[gi:gj], gj
             # group start: window/total expiry, then strict pending kills
             if emit_timeouts:
                 expired_now = [p for p in partials if _expired(p[1], ts_us)]
@@ -1245,7 +1251,7 @@ def _make_processor(
                         },
                     )
                 out.extend(
-                    _row(key[0], aid, tss, False, cnt, vals)
+                    _row(user, aid, tss, False, cnt, vals)
                     for aid, tss, cnt, pend, vals in expired_now
                     if _timeout_eligible(pend)
                 )
@@ -1529,7 +1535,7 @@ def _make_processor(
                         (c for c in completed if c[0] == win_aid),
                         key=lambda c: [-1 if x is None else x for x in c[1]],
                     ):
-                        out.append(_row(key[0], aid, tss, True, cnt, vals))
+                        out.append(_row(user, aid, tss, True, cnt, vals))
                     partials = []
                     continue  # the completing event is consumed: no anchor
                 if completed and skip_to is not None:
@@ -1550,7 +1556,7 @@ def _make_processor(
                         for aid, tss, cnt, vals in completed:
                             if aid not in emitted:
                                 out.append(
-                                    _row(key[0], aid, tss, True, cnt, vals)
+                                    _row(user, aid, tss, True, cnt, vals)
                                 )
                                 emitted.add(aid)
                         partials = [p for p in partials if p[0] not in emitted]
@@ -1560,7 +1566,7 @@ def _make_processor(
                         for aid, tss, cnt, vals in completed:
                             if bound is not None and tss[0] < bound:
                                 continue  # killed by an earlier emission
-                            out.append(_row(key[0], aid, tss, True, cnt, vals))
+                            out.append(_row(user, aid, tss, True, cnt, vals))
                             emitted_aids.add(aid)
                             b = tss[sj]
                             bound = b if bound is None else max(bound, b)
@@ -1581,7 +1587,7 @@ def _make_processor(
                             ]
                     completed = []
                 out.extend(
-                    _row(key[0], aid, tss, True, cnt, vals)
+                    _row(user, aid, tss, True, cnt, vals)
                     for aid, tss, cnt, vals in completed
                 )
                 if completed and reluctant and not any_match:
@@ -1627,32 +1633,26 @@ def _make_processor(
                     for aid, tss, cnt, pend, vals in partials
                 ]
 
-        if partials:
-            state.update(
-                (
-                    [
-                        f"{aid}:"
-                        + ",".join("-1" if x is None else str(x) for x in tss)
-                        + f"|{cnt}|{'' if pend is None else pend}|"
-                        + ",".join("" if v is None else repr(v) for v in vals)
-                        for aid, tss, cnt, pend, vals in partials
-                    ],
-                )
-            )
-            expiry = max(_deadline(tss) for _, tss, _, _, _ in partials)
-            try:  # a tight total bound can put the deadline behind the
-                # watermark; Spark rejects a non-future timer, so clamp —
-                # the timer then fires on the very next micro-batch,
-                # which is exactly when the expired partials can drain
-                wm_ms = state.getCurrentWatermarkMs()
-            except Exception:  # noqa: BLE001 — test double without watermark
-                wm_ms = 0
-            state.setTimeoutTimestamp(max(expiry // 1000, wm_ms + 1))
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(out)
+        if not partials:
+            return None, out
+        encoded = [
+            f"{aid}:"
+            + ",".join("-1" if x is None else str(x) for x in tss)
+            + f"|{cnt}|{'' if pend is None else pend}|"
+            + ",".join("" if v is None else repr(v) for v in vals)
+            for aid, tss, cnt, pend, vals in partials
+        ]
+        return (encoded,), out
 
-    return proc
+    return _Recurrence(
+        fold,
+        (("partials", "array<string>"),),
+        output,
+        "append",
+        (("event_type", "string"), ("value", "double")),
+        deadline,
+        on_arrival=True,
+    )
 
 
 def _stream_nfa(
@@ -1694,13 +1694,6 @@ def _stream_nfa(
     # anchor yields exactly one timeout row. Reference model +
     # chunking-invariance property + goldens in tests/test_properties.py.
     k = len(pattern.steps)
-    out_cols = ", ".join(f"ts{i + 1} timestamp" for i in range(k))
-    for j in pattern.referenced_steps:
-        out_cols += f", v{j + 1} double"
-    if pattern.one_or_more is not None or pattern.group_reps is not None:
-        out_cols += ", n_rep int"
-    if emit_timeouts:
-        out_cols += ", matched boolean"
     types = {
         t for i in range(k) for t in pattern.step_types(i)
     } | {x for x in (pattern.not_between or ()) if x is not None}
@@ -1717,43 +1710,37 @@ def _stream_nfa(
         if pattern.strict_steps or types is None
         else events.filter(F.col("event_type").isin(*types))
     )
-    nfa = (
-        src.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_processor(
-                pattern.steps,
-                pattern.window_us,
-                pattern.step_min_value,
-                emit_timeouts=emit_timeouts,
-                rep=pattern.one_or_more,
-                optionals=frozenset(pattern.optional_steps),
-                min_reps=pattern.min_reps,
-                max_reps=pattern.max_reps,
-                total_us=pattern.total_window_us,
-                strict=frozenset(pattern.strict_steps),
-                skip_past_last=pattern.skip_past_last,
-                not_between=pattern.not_between,
-                not_next=pattern.not_next,
-                rel_guards=pattern.rel_guards,
-                emit_vals=pattern.referenced_steps,
-                any_match=frozenset(pattern.any_match_steps),
-                alts=pattern.or_types,
-                skip_to=pattern.after_match_skip,
-                until=(
-                    (pattern.until_type, pattern.until_min_value)
-                    if pattern.until_type is not None
-                    else None
-                ),
-                run_total=pattern.run_min_total,
-                grp=pattern.group_reps,
-                reluctant=pattern.reluctant,
+    nfa = _by_key_group(
+        src,
+        watermark,
+        _make_processor(
+            pattern.steps,
+            pattern.window_us,
+            pattern.step_min_value,
+            emit_timeouts=emit_timeouts,
+            rep=pattern.one_or_more,
+            optionals=frozenset(pattern.optional_steps),
+            min_reps=pattern.min_reps,
+            max_reps=pattern.max_reps,
+            total_us=pattern.total_window_us,
+            strict=frozenset(pattern.strict_steps),
+            skip_past_last=pattern.skip_past_last,
+            not_between=pattern.not_between,
+            not_next=pattern.not_next,
+            rel_guards=pattern.rel_guards,
+            emit_vals=pattern.referenced_steps,
+            any_match=frozenset(pattern.any_match_steps),
+            alts=pattern.or_types,
+            skip_to=pattern.after_match_skip,
+            until=(
+                (pattern.until_type, pattern.until_min_value)
+                if pattern.until_type is not None
+                else None
             ),
-            outputStructType=f"user_id long, anchor_id long, {out_cols}",
-            stateStructType="partials array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+            run_total=pattern.run_min_total,
+            grp=pattern.group_reps,
+            reluctant=pattern.reluctant,
+        ),
     )
     renames = [F.col("user_id"), F.col("anchor_id").alias(pattern.anchor_col)]
     renames += [F.col(f"ts{i + 1}").alias(pattern.ts_col(i)) for i in range(k)]

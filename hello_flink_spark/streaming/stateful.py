@@ -16,13 +16,13 @@ ends"); the processors below use ``applyInPandasWithState``, which
 expresses the same state machines (value state = the state tuple, list
 state = an array column in it, timers = setTimeoutTimestamp).
 
-Key groups: every operator here but the CEP NFAs (streaming/cep.py
-keeps their encoded partial matches per user) stores its per-user
-state the way Flink stores keyed state, in key groups ([F]
-KeyGroupRange). Users hash into ``KEY_GROUPS = 128`` groups, Flink's
-default lower bound for max parallelism; each group is one
-struct-of-arrays state row, and ``_key_group_fold`` runs the per-user
-fold for every user of a group in one Python call. PySpark's per-call
+Key groups: every operator here, and the CEP NFAs streaming/cep.py
+compiles (their encoded partial matches are one per-user field),
+stores its per-user state the way Flink stores keyed state, in key
+groups ([F] KeyGroupRange). Users hash into ``KEY_GROUPS = 128``
+groups, Flink's default lower bound for max parallelism; each group is
+one struct-of-arrays state row, and ``_key_group_fold`` runs the
+per-user fold for every user of a group in one Python call. PySpark's per-call
 cost (Arrow to pandas per column, a GroupState, output frames) is then
 paid once per touched group per micro-batch, not once per user. The
 price: a touched group decodes and re-encodes all its users' scalars
@@ -207,22 +207,24 @@ class _Recurrence(NamedTuple):
     """A per-user operator run by ``_key_group_fold``.
 
     ``fold(user, scalars or None, ready rows, cutoff)`` folds one
-    user's released ``(ts_ns, event_id[, payload])`` rows, in order,
+    user's released ``(ts_ns, event_id, *payload)`` rows, in order,
     onto its scalar state and returns ``(scalars, output rows)``;
     None scalars drop the user from the group. ``scalars`` names the
     per-user state fields as (name, type) pairs, ``payload`` the
-    (column, type) each held row carries besides its time and id, if
-    any. ``deadline(scalars)``, if given, is an event time (session-
-    local ns) past which the user is folded even with no rows ready:
-    like a held row, it is due once ``deadline < cutoff``. A row is
-    READY once the watermark passes it, or under ``on_arrival`` at once
-    (nothing is held; deadlines still wait for the watermark)."""
+    (column, type) pairs each row carries besides its time and id
+    (the CEP NFAs carry two; the held rows keep the first in
+    ``buf_val``, the second in ``buf_val2``). ``deadline(scalars)``,
+    if given, is an event time (session-local ns) past which the user
+    is folded even with no rows ready: like a held row, it is due once
+    ``deadline < cutoff``. A row is READY once the watermark passes
+    it, or under ``on_arrival`` at once (nothing is held; deadlines
+    still wait for the watermark)."""
 
     fold: Callable
     scalars: tuple
     output: str
     mode: str
-    payload: tuple | None
+    payload: tuple
     deadline: Callable | None = None
     on_arrival: bool = False
 
@@ -233,7 +235,7 @@ class _Recurrence(NamedTuple):
     @property
     def arrival(self) -> tuple:
         """The columns drained with each arrival's ``ts``."""
-        return ("user_id", "event_id") + (self.payload[:1] if self.payload else ())
+        return ("user_id", "event_id") + tuple(c for c, _ in self.payload)
 
     @property
     def state(self) -> str:
@@ -241,7 +243,9 @@ class _Recurrence(NamedTuple):
         hold scalars, one array per scalar, then the group's held rows
         tagged with their user."""
         scalars = "".join(f"{n} array<{t}>, " for n, t in self.scalars)
-        payload = f", buf_val array<{self.payload[1]}>" if self.payload else ""
+        payload = "".join(
+            f", buf_val{i + 1 if i else ''} array<{t}>" for i, (_, t) in enumerate(self.payload)
+        )
         return (
             f"uid array<long>, {scalars}buf_uid array<long>, "
             f"buf_ts array<long>, buf_eid array<long>{payload}"
@@ -365,7 +369,7 @@ _RUNNING_AGG = _Recurrence(
     (("cnt", "long"), ("total", "double")),
     "user_id long, event_cnt long, total_value double",
     "update",
-    ("value", "double"),
+    (("value", "double"),),
     on_arrival=True,
 )
 
@@ -423,7 +427,7 @@ _SESSIONIZE = _Recurrence(
     (("start_us", "long"), ("last_us", "long"), ("cnt", "long"), ("total", "double")),
     "user_id long, session_start timestamp, cnt long, total_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
     _session_deadline,
     on_arrival=True,
 )
@@ -475,7 +479,7 @@ _INACTIVITY = _Recurrence(
     (("last_us", "long"), ("cnt", "long")),
     "user_id long, last_seen timestamp, events_before_idle long",
     "append",
-    None,
+    (),
     _idle_deadline,
     on_arrival=True,
 )
@@ -513,7 +517,7 @@ _COUNT_WINDOW = _Recurrence(
     (("chunk_idx", "long"), ("buf_cnt", "long"), ("buf_sum", "double")),
     "user_id long, chunk long, cnt long, total_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
     on_arrival=True,
 )
 
@@ -536,7 +540,7 @@ _GLOBAL_COUNT_TRIGGER = _Recurrence(
     (("cnt", "long"), ("total", "double")),
     "user_id long, fire_at long, total_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
     on_arrival=True,
 )
 
@@ -596,7 +600,7 @@ _COUNT_WINDOW_EVICTOR = _Recurrence(
     (("chunk_idx", "long"), ("buf_cnt", "long"), ("ring", "array<double>")),
     "user_id long, chunk long, cnt_kept long, total_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
     on_arrival=True,
 )
 
@@ -645,7 +649,7 @@ _MARKOV = _Recurrence(
     (("prev", "string"),),
     "user_id long, prev_type string, next_type string, cnt long",
     "append",
-    ("event_type", "string"),
+    (("event_type", "string"),),
 )
 
 
@@ -711,7 +715,7 @@ _BURST = _Recurrence(
     (("secs", "array<long>"), ("cnts", "array<long>"), ("max_burst", "long")),
     "user_id long, max_burst_24h long",
     "update",
-    None,
+    (),
 )
 
 
@@ -757,7 +761,7 @@ _EWMA = _Recurrence(
     (("ewma", "double"), ("n", "long")),
     "user_id long, n_events long, ewma_value double",
     "update",
-    ("value", "double"),
+    (("value", "double"),),
 )
 
 
@@ -814,7 +818,7 @@ _AUTOCORR = _Recurrence(
     ),
     "user_id long, n_pairs long, lag1_autocorr double",
     "update",
-    ("value", "double"),
+    (("value", "double"),),
 )
 
 
@@ -855,7 +859,7 @@ _DELTA_TRIGGER = _Recurrence(
     "user_id long, fire_seq long, n_events long, total_value double, "
     "trigger_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
 )
 
 
@@ -904,7 +908,7 @@ _CUSUM = _Recurrence(
     "user_id long, alarm_seq long, n_events long, cusum_stat double, "
     "trigger_value double",
     "append",
-    ("value", "double"),
+    (("value", "double"),),
 )
 
 
@@ -980,7 +984,7 @@ _SESSION_FUNNEL = _Recurrence(
     (("start", "long"), ("last", "long"), ("fv", "long"), ("fc", "long"), ("fp", "long")),
     "user_id long, session_start timestamp, reached_stage int",
     "append",
-    ("event_type", "string"),
+    (("event_type", "string"),),
     _funnel_deadline,
 )
 

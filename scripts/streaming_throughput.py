@@ -11,8 +11,11 @@ actually stresses is KEY count, not row rate):
    ``stateful_burst_detector`` and ``stateful_session_funnel`` (rows
    released at the watermark through the reorder buffer: sort + held
    rows), ``count_window_stream`` (rows folded on arrival, no
-   watermark) and ``stateful_sessionize`` (rows folded on arrival,
-   per-user deadlines checked against the watermark) — Arrow transfer
+   watermark), ``stateful_sessionize`` (rows folded on arrival,
+   per-user deadlines checked against the watermark) and
+   ``cep_click_purchase`` (the compiled CEP NFA, folded on arrival
+   like the sessionizer, its open partial matches encoded per user)
+   — Arrow transfer
    into applyInPandasWithState, the operator's fold, key-group state
    round-trip — K in {1000, 10000, 100000}. This prices what the
    Python state path costs relative to probe 1, and what a key decade
@@ -64,6 +67,7 @@ PY_OPS = {
     "funnel": ("Python funnel", "stateful_session_funnel", "append", 600_000),
     "count_window": ("Python count window", "count_window_stream", "append", 600_000),
     "sessionize": ("Python sessionize", "stateful_sessionize", "append", 600_000),
+    "cep": ("Python CEP", "cep_click_purchase", "append", 600_000),
 }
 
 
@@ -248,8 +252,8 @@ def main() -> None:
         "first row). Markov, burst and funnel batches carry 10 minutes\n"
         "of event time under their fixed 30-minute delay, so each one\n"
         "holds about three batches of rows; count window (no\n"
-        "watermark) and sessionize fold each batch's rows on arrival\n"
-        "and hold none:\n\n"
+        "watermark), sessionize and the CEP NFA (`cep_click_purchase`)\n"
+        "fold each batch's rows on arrival and hold none:\n\n"
         "| probe | keys | median rows/s | median latency | ratio |\n"
         "|---|---|---|---|---|\n"
         f"{decades}\n"

@@ -425,6 +425,33 @@ def test_collect_sites_are_audited_bounded():
     )
 
 
+def test_one_keyed_state_call_site():
+    """Source-level audit: every keyed-state operator in the package —
+    the thirteen of streaming/stateful.py and the compiled CEP NFAs of
+    streaming/cep.py — runs through ONE ``applyInPandasWithState``
+    call, the key-group driver's (``stateful._by_key_group``). A second
+    call site would bring back a second keyed-state mechanism: per-user
+    state rows with their own GroupState, timer and late-row handling."""
+    import ast
+
+    sites = []
+
+    def scan(node, rel, stack):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "applyInPandasWithState"
+            ):
+                sites.append((rel, ".".join(stack)))
+            is_def = isinstance(child, (ast.FunctionDef, ast.ClassDef))
+            scan(child, rel, stack + [child.name] if is_def else stack)
+
+    for rel, _stem, tree in _package_asts():
+        scan(tree, rel, [])
+    assert sites == [("streaming/stateful.py", "_by_key_group")], sites
+
+
 @pytest.mark.parametrize("name", PLAN_NAMES)
 def test_no_scale_killer_in_plan(spark, name):
     plan = _plan(spark, name)

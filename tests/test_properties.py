@@ -782,33 +782,27 @@ def _oneplus_sim(evs, steps, rep, window_s):
     return sorted(out)
 
 
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState double for driving the
-    NFA processor outside Spark (no timeout path)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self._v = None
-
-    def setTimeoutTimestamp(self, _ms):
-        pass
-
-    @property
-    def hasTimedOut(self):
-        return False
+def _fold_nfa(proc, uid, parts):
+    """Fold one user's micro-batch frames through a ``_make_processor``
+    NFA outside Spark, as the key-group driver folds on arrival: each
+    non-empty frame's rows sorted by (ts, event_id), then folded onto
+    the partials the previous fold returned. Yields one output frame
+    per fold."""
+    scalars = None
+    for part in parts:
+        if part.empty:
+            continue
+        ready = sorted(
+            zip(
+                part["ts"].astype("int64").tolist(),
+                part["event_id"].tolist(),
+                part["event_type"].tolist(),
+                part["value"].tolist(),
+            ),
+            key=lambda r: r[:2],
+        )
+        scalars, out = proc.fold(uid, scalars, ready, None)
+        yield pd.DataFrame(out, columns=proc.columns)
 
 
 @given(
@@ -825,8 +819,8 @@ class _FakeGroupState:
 )
 @SETTINGS
 def test_cep_oneplus_nfa_matches_simulation_any_chunking(events, cuts):
-    """Kleene oneOrMore (reluctant): the NFA processor, driven directly
-    through a GroupState double over ARBITRARY time-ordered micro-batch
+    """Kleene oneOrMore (reluctant): the NFA fold, driven directly
+    (``_fold_nfa``) over ARBITRARY time-ordered micro-batch
     splits, must produce exactly the matches of an independent
     per-anchor simulation — and therefore the same matches for every
     chunking (batch-split invariance is what makes the streaming
@@ -863,21 +857,16 @@ def test_cep_oneplus_nfa_matches_simulation_any_chunking(events, cuts):
     proc = _make_processor(steps, window_s * 1_000_000, rep=rep)
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
-                        r.n_rep,
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
+                    r.n_rep,
                 )
+                for r in out.itertuples()
+            )
     assert sorted(got) == want
 
 
@@ -932,11 +921,7 @@ def test_cep_oneplus_guard_tier_composes(events):
     )
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        part = rows[rows["user_id"] == uid]
-        if part.empty:
-            continue
-        for out in proc((uid,), iter([part]), state):
+        for out in _fold_nfa(proc, uid, [rows[rows["user_id"] == uid]]):
             got.extend(
                 (
                     r.user_id,
@@ -1027,25 +1012,20 @@ def test_cep_optional_nfa_matches_simulation(events, cuts):
     proc = _make_processor(steps, window_s * 1_000_000, optionals=optionals)
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(
-                            None
-                            if pd.isna(getattr(r, f"ts{j + 1}"))
-                            else int(getattr(r, f"ts{j + 1}").timestamp())
-                            for j in range(3)
-                        ),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(
+                        None
+                        if pd.isna(getattr(r, f"ts{j + 1}"))
+                        else int(getattr(r, f"ts{j + 1}").timestamp())
+                        for j in range(3)
+                    ),
                 )
+                for r in out.itertuples()
+            )
     got.sort(key=lambda r: tuple(-1 if x is None else x for x in r[2:]) + r[:2])
     assert got == want
 
@@ -1256,26 +1236,21 @@ def test_cep_kleene_and_optional_compose_in_nfa(events, cuts):
     proc = _make_processor(steps, window_s * 1_000_000, rep=rep, optionals=optionals)
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(
-                            None
-                            if pd.isna(getattr(r, f"ts{j + 1}"))
-                            else int(getattr(r, f"ts{j + 1}").timestamp())
-                            for j in range(4)
-                        ),
-                        r.n_rep,
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(
+                        None
+                        if pd.isna(getattr(r, f"ts{j + 1}"))
+                        else int(getattr(r, f"ts{j + 1}").timestamp())
+                        for j in range(4)
+                    ),
+                    r.n_rep,
                 )
+                for r in out.itertuples()
+            )
     got.sort(key=lambda r: tuple(-1 if x is None else x for x in r[2:]) + r[:2])
     assert got == want
 
@@ -1326,9 +1301,7 @@ def test_cep_optional_guard_tier_composes(events):
     )
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        part = rows[rows["user_id"] == uid]
-        for out in proc((uid,), iter([part]), state):
+        for out in _fold_nfa(proc, uid, [rows[rows["user_id"] == uid]]):
             got.extend(
                 (
                     r.user_id,
@@ -1353,8 +1326,8 @@ def test_cep_optional_guard_tier_composes(events):
 
 
 def _drive_nfa_chunked(proc, evs, cuts, k, extra_cols=()):
-    """Drive a _make_processor closure through ARBITRARY time-ordered
-    micro-batch splits via the GroupState double; returns sorted match
+    """Drive a _make_processor fold through ARBITRARY time-ordered
+    micro-batch splits via ``_fold_nfa``; returns sorted match
     tuples (uid, aid, ts..., *extra_cols). Value-less events — the
     values-aware twin ``_drive_nfa_chunked_v`` (defined later in this
     module) is the single implementation."""
@@ -2001,20 +1974,15 @@ def test_cep_strict_guard_tier_composes(spark, events, cuts):
     proc = _make_processor(steps, window_s * 1_000_000, mins=mins, strict=strict)
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
                 )
+                for r in out.itertuples()
+            )
     assert sorted(got) == want
 
     # batch chain
@@ -2063,9 +2031,8 @@ def test_cep_timesormore_not_bypassed_by_optional_skip():
                 "value": [0.0] * len(evs),
             }
         )
-        state = _FakeGroupState()
         out = []
-        for batch in proc((1,), iter([rows]), state):
+        for batch in _fold_nfa(proc, 1, [rows]):
             out.extend(batch.itertuples())
         return out
 
@@ -2578,21 +2545,16 @@ def _run_rel_guard_all_targets(spark, events, cuts, rel, emit_vals):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got_n = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got_n.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
-                        *(getattr(r, f"v{j + 1}") for j in emit_vals),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got_n.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
+                    *(getattr(r, f"v{j + 1}") for j in emit_vals),
                 )
+                for r in out.itertuples()
+            )
     assert sorted(got_n) == want
 
     # batch join chain
@@ -2854,20 +2816,15 @@ def _run_any_match_all_targets(spark, events, cuts, anyset, rel=None, nn=None):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got_n = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got_n.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got_n.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
                 )
+                for r in out.itertuples()
+            )
     assert sorted(got_n) == want
 
     pat = CepPattern(
@@ -3691,6 +3648,117 @@ def test_inactivity_alerts_every_idle_spell_under_any_cut(steps, cuts, delay, gr
     assert not group_state
 
 
+@given(
+    events=st.lists(
+        st.tuples(
+            st.integers(0, 3),  # user
+            st.integers(0, 8),  # event time in half-minutes: windows end on them
+            st.sampled_from([0, 1, 2]),  # ms past that half-minute
+            st.sampled_from(["a", "b", "c"]),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    cuts=st.lists(st.integers(0, 29), max_size=8),
+    delay=st.sampled_from([0, 1, 30_000]),
+    groups=st.integers(1, 4),
+)
+# user 0's deadline (0 + 60 s) sits exactly at the watermark, and stays
+# open; a 1 ms advance, with no row for its group, times it out in a
+# timeout-only call
+@example(
+    events=[(0, 0, 0, "a"), (1, 2, 1, "c"), (1, 2, 2, "c")],
+    cuts=[2],
+    delay=1,
+    groups=2,
+)
+# at a watermark exactly at user 0's deadline, a data call for another
+# user of its group leaves it open, so a row at the watermark still
+# extends it
+@example(
+    events=[(0, 0, 0, "a"), (1, 2, 1, "c"), (1, 2, 1, "c"), (0, 2, 0, "b")],
+    cuts=[2, 3],
+    delay=1,
+    groups=1,
+)
+@settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_cep_timeout_fold_matches_reference_under_timer_rules(events, cuts, delay, groups):
+    """The CEP NFA with the timeout side-output, run by
+    ``_key_group_fold`` under Spark's call rules (a data call per group
+    with arrivals, then, after each watermark advance, a timeout call
+    per other group whose timer is below the watermark, and a last
+    watermark past every deadline): its matched and ``matched=false``
+    rows equal the independent reference model over the rows that were
+    not late, for any cut into micro-batches and 1-4 key groups. Each
+    user's events are in time order; users interleave, so the
+    watermark can pass another user's later rows, which drop."""
+    from hello_flink_spark.streaming import stateful
+    from hello_flink_spark.streaming.cep import _make_processor
+
+    steps, window_ms, base_ms = ("a", "b", "a"), 60_000, 1_700_000_000_000
+    op = _make_processor(steps, window_ms * 1000, emit_timeouts=True)
+    times: dict = {}
+    for u, half, off, _ in events:
+        times.setdefault(u, []).append(half * 30_000 + off)
+    times = {u: iter(sorted(ts)) for u, ts in times.items()}
+    rows = [(next(times[u]), u, i, et) for i, (u, _, _, et) in enumerate(events)]
+
+    group_state, timers, got, live = {}, {}, [], []
+
+    def call(g, rs, wm):
+        st_ = _TimerGroupState(group_state.get(g), wm, not rs)
+        frames = [
+            pd.DataFrame(
+                {
+                    "ts": pd.to_datetime([(base_ms + r[0]) * 1_000_000 for r in rs]),
+                    "user_id": [r[1] for r in rs],
+                    "event_id": [r[2] for r in rs],
+                    "event_type": [r[3] for r in rs],
+                    "value": [0.0] * len(rs),
+                }
+            )
+        ] if rs else []
+        for out in stateful._key_group_fold("UTC", op, (g,), iter(frames), st_):
+            got.extend(
+                tuple(
+                    None if pd.isna(x) else x.value // 1_000_000 - base_ms
+                    if isinstance(x, pd.Timestamp) else x
+                    for x in r
+                )
+                for r in zip(*(out[c].tolist() for c in out.columns))
+            )
+        if st_.exists:
+            group_state[g], timers[g] = st_.value, st_.timer
+        else:
+            group_state.pop(g, None)
+
+    def run(batch, wm):
+        live.extend(r for r in batch if not wm or base_ms + r[0] >= wm)
+        by_group: dict = {}
+        for r in batch:
+            by_group.setdefault(r[1] % groups, []).append(r)
+        for g, rs in by_group.items():
+            call(g, rs, wm)
+        for g in [g for g in group_state if g not in by_group]:
+            if timers[g] is not None and timers[g] < wm:
+                call(g, [], wm)
+
+    bounds = sorted({c for c in cuts if c < len(rows)} | {0, len(rows)})
+    wm = seen = 0
+    for a, b in zip(bounds, bounds[1:]):
+        run(rows[a:b], wm)
+        seen = max([seen] + [base_ms + r[0] for r in rows[a:b]])
+        if seen - delay > wm:
+            wm = seen - delay
+            run([], wm)
+    run([], seen + window_ms + 1)
+    want = _cep_reference_timeouts(
+        [(u, i, t, et) for t, u, i, et in live], steps, window_ms
+    )
+    assert sorted(got, key=lambda t: tuple((x is None, x) for x in t)) == want
+    assert not group_state, "a partial outlived a watermark past every deadline"
+
+
 # ---------------------------------------------------------------------------
 # [F] Pattern#where(cond).or(cond) (or_types): a step admits a SET of
 # event types; every compiled target must treat membership identically
@@ -3767,20 +3835,15 @@ def _run_or_types_all_targets(spark, events, cuts, or_types, mins=None):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got_n = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got_n.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got_n.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(3)),
                 )
+                for r in out.itertuples()
+            )
     assert sorted(got_n) == want
 
     pat = CepPattern(
@@ -4355,8 +4418,7 @@ def test_cep_until_value_guard_is_behavioral():
                 "value": [e[3] for e in evs],
             }
         )
-        state = _FakeGroupState()
-        out = pd.concat(list(proc((1,), iter([rows]), state)), ignore_index=True)
+        out = pd.concat(list(_fold_nfa(proc, 1, [rows])), ignore_index=True)
         return [
             (r.user_id, r.anchor_id, r.n_rep) for r in out.itertuples()
         ]
@@ -4399,8 +4461,7 @@ def test_cep_until_frozen_below_quota_times_out():
             "value": [0.0] * len(evs),
         }
     )
-    state = _FakeGroupState()
-    out = pd.concat(list(proc((1,), iter([rows]), state)), ignore_index=True)
+    out = pd.concat(list(_fold_nfa(proc, 1, [rows])), ignore_index=True)
     timeouts = out[~out["matched"]]
     assert len(timeouts) == 1
     row = timeouts.iloc[0]
@@ -4487,21 +4548,16 @@ def _drive_nfa_chunked_v(proc, evs, cuts, k, extra_cols=()):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got = []
     for uid in sorted(rows["user_id"].unique()):
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                got.extend(
-                    (
-                        r.user_id,
-                        r.anchor_id,
-                        *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(k)),
-                        *(getattr(r, c) for c in extra_cols),
-                    )
-                    for r in out.itertuples()
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            got.extend(
+                (
+                    r.user_id,
+                    r.anchor_id,
+                    *(int(getattr(r, f"ts{j + 1}").timestamp()) for j in range(k)),
+                    *(getattr(r, c) for c in extra_cols),
                 )
+                for r in out.itertuples()
+            )
     return sorted(got)
 
 
@@ -5150,25 +5206,20 @@ def _drive_nfa_rows_t(proc, evs5, cuts, k, flush_ts):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got_m, got_t = [], []
     for uid in users:
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                for r in out.itertuples():
-                    tup = (
-                        r.user_id,
-                        r.anchor_id,
-                        *(
-                            None
-                            if pd.isna(getattr(r, f"ts{j + 1}"))
-                            else int(getattr(r, f"ts{j + 1}").timestamp())
-                            for j in range(k)
-                        ),
-                        r.n_rep,
-                    )
-                    (got_m if r.matched else got_t).append(tup)
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            for r in out.itertuples():
+                tup = (
+                    r.user_id,
+                    r.anchor_id,
+                    *(
+                        None
+                        if pd.isna(getattr(r, f"ts{j + 1}"))
+                        else int(getattr(r, f"ts{j + 1}").timestamp())
+                        for j in range(k)
+                    ),
+                    r.n_rep,
+                )
+                (got_m if r.matched else got_t).append(tup)
     skey = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
     return sorted(got_m), sorted(got_t, key=skey)
 
@@ -6328,24 +6379,19 @@ def _drive_nfa_rows_t_plain(proc, evs5, cuts, k, flush_ts):
     chunks = [rows.iloc[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     got_m, got_t = [], []
     for uid in users:
-        state = _FakeGroupState()
-        for chunk in chunks:
-            part = chunk[chunk["user_id"] == uid]
-            if part.empty:
-                continue
-            for out in proc((uid,), iter([part]), state):
-                for r in out.itertuples():
-                    tup = (
-                        r.user_id,
-                        r.anchor_id,
-                        *(
-                            None
-                            if pd.isna(getattr(r, f"ts{i + 1}"))
-                            else int(getattr(r, f"ts{i + 1}").timestamp())
-                            for i in range(k)
-                        ),
-                    )
-                    (got_m if r.matched else got_t).append(tup)
+        for out in _fold_nfa(proc, uid, [c[c["user_id"] == uid] for c in chunks]):
+            for r in out.itertuples():
+                tup = (
+                    r.user_id,
+                    r.anchor_id,
+                    *(
+                        None
+                        if pd.isna(getattr(r, f"ts{i + 1}"))
+                        else int(getattr(r, f"ts{i + 1}").timestamp())
+                        for i in range(k)
+                    ),
+                )
+                (got_m if r.matched else got_t).append(tup)
     skey = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
     return sorted(got_m), sorted(got_t, key=skey)
 
