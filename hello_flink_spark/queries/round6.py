@@ -1930,75 +1930,40 @@ KMEANS_ITERS = 3
 POWER_ITERS = 6
 
 
-def _sq_l2(a, b):
-    """Squared L2 distance between two array columns (JVM lambdas)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def kmeans_detail(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ):
-    """Lloyd's k-means over the embeddings table; returns
-    ``(assignments_df, inertia_history, final_centroids)`` so the
-    invariant tests can check monotone convergence and the
-    nearest-centroid property directly.
+    """Lloyd's k-means over the embeddings table: ``round7.lloyd_train``
+    with one subspace (the whole vector) and ``k`` codes, seeded by
+    vec_ids 0..k-1. Returns ``(assignments_df (vec_id, cluster, dist2)
+    of the last iteration, inertia per iteration, centroids [(cluster,
+    vector)])``; the centroids are the means of that last assignment,
+    a cluster it left empty keeping its previous centroid."""
+    from hello_flink_spark.queries.round7 import lloyd_train
 
-    Deterministic: seeds are the k lowest vec_ids; each iteration
-    assigns via min(struct(dist, cluster)) (id-stable tie-break) and
-    recomputes centroids with a (cluster, dim) hash-aggregate. The
-    only driver-side data is k×dim floats per iteration (bounded by
-    constants) plus the 1-row inertia — the corpus never leaves the
-    executors."""
     emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
-    seeds = emb.orderBy("vec_id").limit(k).collect()  # bounded: k rows
-    cents = [(i, list(r.vec)) for i, r in enumerate(seeds)]
-    history: list[float] = []
-    best = None
-    for _ in range(iters):
-        cent_df = spark.createDataFrame(cents, "cluster INT, centroid ARRAY<DOUBLE>")
-        assigned = emb.crossJoin(F.broadcast(cent_df)).withColumn(
-            "dist2", _sq_l2(F.col("vec"), F.col("centroid"))
-        )
-        best = (
-            assigned.groupBy("vec_id")
-            .agg(F.min(F.struct("dist2", "cluster")).alias("m"))
-            .select("vec_id", F.col("m.cluster").alias("cluster"), F.col("m.dist2").alias("dist2"))
-        )
-        history.append(best.agg(F.sum("dist2")).collect()[0][0])  # 1-row scalar
-        newc = (
-            best.join(emb, "vec_id")
-            .select("cluster", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()  # bounded: k x dim rows
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in newc:
-            by_cluster.setdefault(r.cluster, {})[r.pos] = r.m
-        cents = [
-            (c, [dims[i] for i in sorted(dims)]) for c, dims in sorted(by_cluster.items())
-        ]
-    return best, history, cents
+    books, history, assigned = lloyd_train(emb, 1, k, iters)
+    best = assigned.select(
+        "vec_id", F.col("code").alias("cluster"), F.col("err2").alias("dist2")
+    )
+    return best, history, [(c, books[(0, c)]) for c in range(k)]
 
 
 @register("embeddings_kmeans", oracle=None)
 def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means clustering of the embedding corpus (k=8, 3
-    iterations, deterministic lowest-id seeding) — the diversity-
-    sampling / corpus-stratification primitive of a training-data
-    pipeline. Each iteration: broadcast k×dim centroids (constant
-    size), assign by squared-L2 argmin with JVM array lambdas, then
-    ONE (cluster, dim) hash-aggregate recomputes centroids — the
-    classic scalable Lloyd step (per-partition partial sums, k×dim
-    reduce). Iterative fixed-point ⇒ not single-statement SQL: rows-
-    only at the gate, with monotone-inertia + nearest-centroid
-    invariants in tests/test_llm.py."""
+    iterations, seeded by vec_ids 0..7) — the diversity-sampling /
+    corpus-stratification primitive of a training-data pipeline. It
+    runs on the vector tier's one Lloyd trainer (``round7.lloyd_train``,
+    shared with product quantization): each iteration assigns every
+    vector to its nearest centroid map-only against the k×dim
+    centroids folded into one literal, then ONE (cluster) aggregate
+    returns the new means and the iteration's inertia — k rows on the
+    driver per iteration. Iterative fixed-point ⇒ not single-statement
+    SQL: rows-only at the gate, with monotone-inertia, nearest-centroid
+    and numpy-replay tests in tests/test_llm.py."""
     best, _, _ = kmeans_detail(spark, sf_dir)
     return best.select("vec_id", "cluster", F.round("dist2", 4).alias("dist2"))
 

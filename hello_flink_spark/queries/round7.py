@@ -439,12 +439,12 @@ PQ_ITERS = 4      # Lloyd iterations
 
 def pq_train(spark: SparkSession, sf_dir: str, iters: int = PQ_ITERS):
     """Product-quantization trainer (the IVF-PQ building block every
-    billion-vector ANN index uses) over the embeddings table — see
-    ``pq_train_frame`` for the machinery; this entry point keeps the
-    original deterministic contract (seeds = vec_id < PQ_K).
+    billion-vector ANN index uses) over the embeddings table: PQ_SUBS
+    subspaces of PQ_K codes, seeded by vec_ids 0..PQ_K-1 — see
+    ``pq_train_frame``.
 
     Returns (codebooks dict[(sub, code) -> list[float]], assigned
-    DataFrame (vec_id, sub, code, err2)).
+    DataFrame (vec_id, sub, code, err2, sv)).
     """
     from hello_flink_spark.queries.llm import _as_double
 
@@ -463,155 +463,209 @@ def _dlit(x: float) -> str:
     return repr(x) + "D"
 
 
+def _book_shape(books: dict) -> tuple[int, int, int]:
+    """(subspaces, codes per subspace, dims per subspace) of a codebook."""
+    return (
+        1 + max(s for s, _ in books),
+        1 + max(c for _, c in books),
+        len(books[(0, 0)]),
+    )
+
+
 def pq_codebook_sql(books: dict) -> str:
-    """The trainer codebook as one SQL array<array<array<double>>>
-    literal, indexed ``[sub][code]`` (0-based subscripts). PQ_SUBS x
-    PQ_K x PQ_SUBDIM = 1024 doubles — constant-size by construction,
-    folded to a single Literal by ConstantFolding, so it is the
-    shuffle-free replacement for the former per-iteration broadcast
-    join (round-17; measured join-only 0.64 s vs literal 0.13 s per
-    assignment pass at sf0.1, results bit-identical)."""
+    """A codebook as one SQL array<array<array<double>>> literal,
+    indexed ``[sub][code]`` (0-based subscripts), sized by the books
+    themselves (PQ: 8 x 16 x 8 = 1,024 doubles; k-means: 1 x 8 x 64).
+    ConstantFolding makes it a single Literal, so every row reads the
+    codebook with no join, broadcast or shuffle (measured against the
+    broadcast join it replaced: 0.13 s vs 0.64 s per assignment pass
+    at sf0.1, results bit-identical)."""
+    subs, k, _ = _book_shape(books)
     return (
         "array("
         + ",".join(
             "array("
             + ",".join(
                 "array(" + ",".join(_dlit(v) for v in books[(s, c)]) + ")"
-                for c in range(PQ_K)
+                for c in range(k)
             )
             + ")"
-            for s in range(PQ_SUBS)
+            for s in range(subs)
         )
         + ")"
     )
 
 
-def pq_codes_col(books: dict, vec_col: str = "vec"):
-    """``array<int>`` PQ code word for a FULL vector as one map-only
-    expression against the folded codebook literal — the round-17
-    replacement (guide §2.4) for the groupBy(vec_id) pivot of the
-    exploded per-subspace assignment plus the data-scale join that
-    re-attached it to the bucket table: the codes are a pure function
-    of (vec, codebook), so each row computes its own 8-code array
-    in the projection that already carries the vector. Exact replay of
-    ``pq_train_frame.assign``'s math and tie-break — same slice, same
-    zip_with/aggregate fold (IEEE order identical), same
-    struct-array_min (lowest code wins on equal err2)."""
-    cvs = pq_codebook_sql(books)
-    return F.expr(
-        f"transform(sequence(0, {PQ_SUBS - 1}), s -> "
-        f" array_min(transform(sequence(0, {PQ_K - 1}),"
-        f"  c -> struct("
-        f"   aggregate(zip_with(slice({vec_col}, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM}),"
-        f"             {cvs}[s][c], (a, b) -> (a - b) * (a - b)),"
-        f"             0D, (q, x) -> q + x) AS err2,"
-        f"   c AS code))).code)"
+def _sq_l2_sql(a: str, b: str) -> str:
+    """Squared L2 distance of two equal-length array<double> SQL
+    expressions, summed left to right from 0. The one fold of the
+    vector tier: assignment, ``pq_codes_col`` and the ADC lookup tables
+    all use it, so one (vector, code) pair gives one IEEE result
+    everywhere."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, (acc, d) -> acc + d)"
+
+
+def _nearest_sql(sv: str, cvs: str, sub: str, k: int) -> str:
+    """``struct(err2, code)`` of the code of codebook ``cvs[sub]``
+    nearest to subvector ``sv``: the struct minimum keeps the LOWEST
+    code on equal err2."""
+    return (
+        f"array_min(transform(sequence(0, {k - 1}), c -> struct("
+        f"{_sq_l2_sql(sv, f'{cvs}[{sub}][c]')} AS err2, c AS code)))"
     )
+
+
+def vq_assign(frame: DataFrame, books: dict) -> DataFrame:
+    """(vec_id, sub, code, err2, sv): each subvector of ``frame``
+    (vec_id, sub, sv) assigned to its nearest code, map-only."""
+    _, k, _ = _book_shape(books)
+    best = F.expr(_nearest_sql("sv", pq_codebook_sql(books), "sub", k))
+    return frame.select("vec_id", "sub", "sv", best.alias("m")).select(
+        "vec_id", "sub", F.col("m.code").alias("code"), F.col("m.err2").alias("err2"), "sv"
+    )
+
+
+def pq_codes_col(books: dict, vec_col: str = "vec"):
+    """``array<int>`` code word of a FULL vector, one code per
+    subspace, as one map-only expression: the same slice and nearest-
+    code expression as ``vq_assign``, so a vector's codes equal its
+    assigned codes, tie-break included."""
+    subs, k, subdim = _book_shape(books)
+    sv = f"slice({vec_col}, s * {subdim} + 1, {subdim})"
+    return F.expr(
+        f"transform(sequence(0, {subs - 1}), s -> "
+        f"{_nearest_sql(sv, pq_codebook_sql(books), 's', k)}.code)"
+    )
+
+
+def lloyd_train(vecs: DataFrame, subs: int, k: int, iters: int, seed_min: int = 0):
+    """Lloyd's algorithm run independently in each of ``subs``
+    subspaces of a (vec_id, vec array<double>) frame: each vector
+    splits into ``subs`` equal slices of ``size(vec) div subs`` dims,
+    and each subspace learns ``k`` codes. k-means is one subspace of
+    the whole vector; product quantization (``pq_train_frame``) is
+    PQ_SUBS subspaces.
+
+    - Seeds: code c of every subspace starts at the vector with
+      vec_id ``seed_min + c`` (on every fixture vec_ids run 0..N-1, so
+      with ``seed_min`` 0 these are the k lowest ids). A missing seed
+      id raises ValueError.
+    - Assignment: ``vq_assign`` against the codebook as one folded
+      literal; the lowest code wins on equal distance.
+    - Update: one keyed aggregate per iteration over (sub, code)
+      gives each code's mean and its summed err2; a code that no
+      vector chose keeps its previous centroid.
+
+    The exploded subvectors are checkpointed lazily, so the seed
+    collect fills the checkpoint in its own job; after that each
+    iteration is one aggregate collect of subs x k rows. Driver state
+    is the codebook, never the corpus.
+
+    Returns (books dict[(sub, code) -> list[float]], inertia per
+    iteration (total err2 of that iteration's assignment), the last
+    iteration's assignment); ``iters`` is at least 1.
+    """
+    from hello_flink_spark.operators.scale import spread_small_scan
+
+    # the spread feeds every iteration's assignment scan to all cores
+    # (a one-split embeddings scan would serialize it: 4.5 -> 3.7 s
+    # for the PQ trainer at sf0.1)
+    sub = spread_small_scan(vecs).select(
+        "vec_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {subs - 1}), s -> struct("
+                f"s AS sub, slice(vec, s * (size(vec) div {subs}) + 1, size(vec) div {subs}) AS sv))"
+            )
+        ).alias("x"),
+    ).select("vec_id", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv"))
+    sub = sub.localCheckpoint(eager=False)
+    seeds = sub.filter(
+        (F.col("vec_id") >= seed_min) & (F.col("vec_id") < seed_min + k)
+    ).collect()
+    books = {(r.sub, int(r.vec_id) - seed_min): list(r.sv) for r in seeds}
+    if len(books) != subs * k:
+        raise ValueError(f"Lloyd seeds need vec_ids {seed_min}..{seed_min + k - 1}")
+    subdim = len(books[(0, 0)])
+
+    history: list[float] = []
+    for _ in range(iters):
+        assigned = vq_assign(sub, books)
+        agg = assigned.groupBy("sub", "code").agg(
+            F.sum("err2").alias("err2"),
+            *[F.avg(F.col("sv")[d]).alias(f"c{d}") for d in range(subdim)],
+        ).collect()
+        # a fixed summation order keeps the inertia reproducible
+        agg.sort(key=lambda r: (r.sub, r.code))
+        history.append(sum(r.err2 for r in agg))
+        books.update(
+            {(r.sub, r.code): [r[f"c{d}"] for d in range(subdim)] for r in agg}
+        )
+    return books, history, assigned
 
 
 def pq_train_frame(
     spark: SparkSession, vecs, iters: int = PQ_ITERS, seed_min: int = 0
 ):
-    """Product-quantization trainer over an arbitrary (vec_id,
-    vec array<double>) frame: split each vector into PQ_SUBS subspaces
-    and run an independent k-means per subspace — one fused Spark job
-    per iteration for ALL subspaces at once. Factored out of
-    ``pq_train`` (round 9) so the residual IVFADC tier can train on
-    residual vectors instead of raw embeddings.
+    """Product quantization of a (vec_id, vec array<double>) frame:
+    ``lloyd_train`` over PQ_SUBS subspaces with PQ_K codes each, seeded
+    by vec_ids ``seed_min``..``seed_min + PQ_K - 1``. The residual
+    IVFADC tier passes ``seed_min`` PQ_K, because the coarse-centroid
+    vectors' residuals are identically zero (x − x), the degenerate
+    k-means init.
 
-    Distributed shape: the exploded (vec_id, sub, subvec) table
-    shuffles ONCE per iteration into a (sub, code) keyed aggregate;
-    the codebooks (PQ_SUBS x PQ_K x PQ_SUBDIM = 1024 doubles) are the
-    only driver-side state — the bounded-scalar contract of the
-    iterative tier (kmeans / power-iteration / pagerank). Assignment
-    embeds the constant-size codebook as a FOLDED LITERAL in the
-    map-only argmin projection (round-17 optimization, guide §2.4/§3:
-    the previous per-iteration ``createDataFrame`` + broadcast-hash
-    join cost 0.64 s/iteration in broadcast build alone at sf0.1 —
-    measured join-only 0.64 s vs literal argmin 0.13 s, assignments
-    bit-identical — and at any scale a shuffle-free projection is
-    strictly cheaper than a broadcast join). The codebook is on the
-    driver between iterations by construction (Lloyd sync point), so
-    the literal costs nothing extra to build; ConstantFolding collapses
-    it to one Literal at optimization time.
-
-    ``seed_min``: seeds are the PQ_K vectors with vec_id in
-    [seed_min, seed_min + PQ_K) — still a constant-size deterministic
-    set. The default 0 is the historical rule; the residual trainer
-    passes PQ_K, because the coarse-centroid vectors' residuals are
-    IDENTICALLY ZERO (x − x), the degenerate k-means init.
-
-    Returns (codebooks dict[(sub, code) -> list[float]], assigned
-    DataFrame (vec_id, sub, code, err2)).
+    Returns (codebooks dict[(sub, code) -> list[float]], the
+    assignment (vec_id, sub, code, err2, sv) against those final
+    codebooks).
     """
-    from hello_flink_spark.operators.scale import spread_small_scan
+    books, _, assigned = lloyd_train(vecs, PQ_SUBS, PQ_K, iters, seed_min)
+    return books, vq_assign(assigned, books)
 
-    # r12: spread the vector feed before the explode+checkpoint — a
-    # one-split embeddings scan would otherwise serialize EVERY Lloyd
-    # iteration's assignment scan on one core (A/B at sf0.1: trainer
-    # 4.5 -> 3.7 s; no-op on many-split cluster scans).
-    sub = spread_small_scan(vecs).select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {PQ_SUBS - 1}), s -> struct("
-                f"s AS sub, slice(vec, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM}) AS sv))"
-            )
-        ).alias("x"),
-    ).select("vec_id", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv"))
-    # non-eager: the seeds collect right below is the first action and
-    # materializes the checkpoint in the SAME job — one job launch
-    # saved per trainer call vs eager=True, identical caching after it
-    # (round-17, guide §1.2 "fewer passes").
-    sub = sub.localCheckpoint(eager=False)  # reused every iteration
 
-    # deterministic init: PQ_K consecutive vec_ids seed each subspace's
-    # codebook (a constant-size set)
-    seeds = sub.filter(
-        (F.col("vec_id") >= seed_min) & (F.col("vec_id") < seed_min + PQ_K)
-    ).collect()
-    books = {(r.sub, int(r.vec_id) - seed_min): list(r.sv) for r in seeds}
+def adc_top5(queries: DataFrame, cands: DataFrame, books: dict) -> DataFrame:
+    """IVFADC scoring (Jégou, Douze & Schmid, TPAMI 2011): the top 5
+    candidates per query by asymmetric distance.
 
-    def assign(books):
-        # MAP-ONLY assignment: the full codebook rides as one folded
-        # array<array<array<double>>> literal (CVS[sub][code][dim] —
-        # pq_codebook_sql, bit-exact round-trip), and the argmin over
-        # the 16 codes folds inside one array lambda — no 16x row
-        # blow-up, no join, no broadcast, no shuffle (tie-break:
-        # struct-min keeps the LOWEST code on equal err2, matching the
-        # (err2, code) rule the tests replay in numpy)
-        cvs = pq_codebook_sql(books)
-        best = F.expr(
-            f"array_min(transform(sequence(0, {PQ_K - 1}),"
-            f" c -> struct("
-            f"   aggregate(zip_with(sv, {cvs}[sub][c], (a, b) -> (a - b) * (a - b)),"
-            f"             0D, (q, x) -> q + x) AS err2,"
-            f"   c AS code)))"
+    ``queries`` is (query_id, bucket, qv), one row per probed bucket;
+    qv is the query side of the distance: the query itself against raw
+    codes, its residual q − c_bucket against residual codes.
+    ``cands`` is (neighbor_id, bucket, codes). Each (query, bucket)
+    row gets its lookup table in one projection, LUT[s][c] =
+    ||qv_s − book[s][c]||² by the shared fold; the bounded LUT frame
+    (PROBE_ID_MAX queries x IVF_NPROBE buckets) is broadcast onto the
+    candidates by bucket, and a candidate's distance is the sum of its
+    codes' LUT hits, never its vector. Rank is (distance rounded to 6
+    places, neighbor_id), with the query itself excluded."""
+    subs, _, subdim = _book_shape(books)
+    cvs = pq_codebook_sql(books)
+    qs = f"slice(qv, s * {subdim} + 1, {subdim})"
+    luts = queries.select(
+        "query_id",
+        "bucket",
+        F.expr(
+            f"transform(sequence(0, {subs - 1}), s -> "
+            f"transform({cvs}[s], cv -> {_sq_l2_sql(qs, 'cv')}))"
+        ).alias("luts"),
+    )
+    scored = (
+        cands.join(F.broadcast(luts), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                F.expr(
+                    f"aggregate(sequence(0, {subs - 1}), 0D,"
+                    f" (acc, s) -> acc + luts[s][codes[s]])"
+                ),
+                6,
+            ).alias("adc_dist"),
         )
-        return sub.withColumn("m", best).select(
-            "vec_id",
-            "sub",
-            F.col("m.code").alias("code"),
-            F.col("m.err2").alias("err2"),
-            "sv",
-        )
-
-    for _ in range(iters):
-        assigned = assign(books)
-        # new centroid = element-wise mean of assigned subvectors: ONE
-        # keyed hash aggregate per iteration with PQ_SUBDIM static avg
-        # columns (no dim explode) — the collected 128 x 8 scalars are
-        # the codebook, the iterative tier's bounded driver state
-        agg = assigned.groupBy("sub", "code").agg(
-            *[F.avg(F.col("sv")[d]).alias(f"c{d}") for d in range(PQ_SUBDIM)]
-        ).collect()
-        books.update(
-            {
-                (r.sub, r.code): [r[f"c{d}"] for d in range(PQ_SUBDIM)]
-                for r in agg
-            }
-        )  # empty clusters keep their old centroid
-    return books, assign(books)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
+    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= 5
+    )
 
 
 @register("agg_pq_quantize", tags=("iterative", "rows_only"))

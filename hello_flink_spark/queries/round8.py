@@ -86,30 +86,24 @@ def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     for Nearest Neighbor Search", TPAMI 2011): the actual
     billion-scale ANN query shape — coarse IVF buckets bound the scan,
     PQ codes stand in for the vectors inside them, and each query
-    scores candidates through its own ADC lookup table instead of
-    touching raw floats (VERDICT r07 #8: wires agg_pq_quantize's
-    codebook into sim_ann_ivf's probe path).
+    scores candidates through lookup tables instead of touching raw
+    floats (wires agg_pq_quantize's codebook into sim_ann_ivf's probe
+    path).
 
     Plan shape (all bounded-state, no all-pairs):
-    1. ``pq_train`` — per-iteration MAP-ONLY argmin + one keyed agg
-       (unchanged); its codebook (1024 doubles) is the only driver
-       state. Corpus codes are computed MAP-ONLY per bucket-assigned
-       row from the folded codebook literal (``pq_codes_col``,
-       round-17 — formerly a groupBy(vec_id) pivot + data-scale join;
-       8 small ints per vector — the RAM-resident index).
+    1. ``pq_train`` — the vector tier's Lloyd trainer; its codebook
+       (1,024 doubles) is the only driver state. Each bucket-assigned
+       corpus row computes its 8 codes map-only from the folded
+       codebook literal (``pq_codes_col``) — the RAM-resident index.
     2. Coarse quantizer — the shared first-C centroid broadcast
        (``ivf_nearest_buckets``): corpus → 1 bucket, probes → NPROBE
        buckets. Probes are a constant-size set (PROBE_ID_MAX bound).
-    3. ADC lookup tables — per (query, subspace): ||q_s − c_{s,j}||²
-       for all PQ_K codes, computed map-only over the exploded query
-       subvectors against the FOLDED codebook literal (round-17:
-       replaces the former 8-row broadcast-join — pq_codebook_sql),
-       then re-assembled per query (8×16 doubles per query —
-       broadcast-safe with the probes).
-    4. Scoring — probes ⋈ bucket-matched candidate codes; ADC distance
-       is an O(PQ_SUBS) array-lambda fold over LUT hits (never the
-       64-dim vectors), then top-5 per query (rounded-distance +
-       id tiebreak, the sim_knn determinism rule).
+    3. ``adc_top5`` — the IVFADC scorer shared with the residual
+       variant, fed the raw query vector per probed bucket: one LUT
+       per (query, bucket), ||q_s − c_{s,j}||² for all PQ_K codes,
+       broadcast onto the bucket's candidates; ADC distance is an
+       O(PQ_SUBS) fold over LUT hits, then top-5 per query
+       (rounded-distance + id tiebreak, the sim_knn determinism rule).
 
     At 100 TB the bucket join is the only data-scale shuffle; every
     other operand is constant-size and broadcast — but IVF_C = 16 and
@@ -120,7 +114,7 @@ def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable far past 100 TB (1 M x 64 doubles = 512 MB would be
     the extreme; 64k centroids = 32 MB is typical). Resolution note:
     this op ADC-scores RAW-vector PQ codes, so ranking resolution is
-    bounded by the codebook — the full IVFADC variant would encode
+    bounded by the codebook — ``sim_ann_ivf_pq_residual`` encodes
     RESIDUALS (x - coarse centroid), which resolves within-bucket
     structure finer than the subspace codebooks. R-tier, pinned in
     tests/test_llm.py: exact numpy ADC replay; recall@5 >= 0.30 on the
@@ -134,95 +128,23 @@ def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_centroids_and_vecs,
         ivf_nearest_buckets,
     )
-    from hello_flink_spark.queries.round7 import (
-        PQ_SUBDIM,
-        PQ_SUBS,
-        pq_codebook_sql,
-        pq_codes_col,
-        pq_train,
-    )
+    from hello_flink_spark.queries.round7 import adc_top5, pq_codes_col, pq_train
 
     books, _assigned = pq_train(spark, sf_dir)
 
     centroids, vecs = ivf_centroids_and_vecs(spark, sf_dir)
-    assign_b = ivf_nearest_buckets(centroids, vecs, "vec_id", 1)
     probes = ivf_nearest_buckets(
         centroids,
         vecs.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < PROBE_ID_MAX)),
         "vec_id",
         IVF_NPROBE,
-    ).select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"), "bucket")
-
-    # ADC lookup tables: one row per (query, subspace) via the SAME
-    # folded codebook literal the trainer assigns with (round-17: the
-    # former 8-row createDataFrame + broadcast join cost ~0.6 s of
-    # broadcast build per action for a constant-size operand)
-    cvs_sql = pq_codebook_sql(books)
-    qsub = (
-        probes.select("query_id", "q_vec")
-        .dropDuplicates(["query_id"])
-        .select(
-            "query_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {PQ_SUBS - 1}), s -> struct("
-                    f"s AS sub, slice(q_vec, s * {PQ_SUBDIM} + 1, {PQ_SUBDIM}) AS qs))"
-                )
-            ).alias("x"),
-        )
-        .select("query_id", F.col("x.sub").alias("sub"), F.col("x.qs").alias("qs"))
-    )
-    luts = (
-        qsub.select(
-            "query_id",
-            "sub",
-            F.expr(
-                f"transform({cvs_sql}[sub], cv -> aggregate("
-                "zip_with(qs, cv, (a, b) -> (a - b) * (a - b)),"
-                " 0D, (acc, x) -> acc + x))"
-            ).alias("lut"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(sub, lut))), x -> x.lut)"
-            ).alias("luts")
-        )
-    )
-
-    # r17 (guide §2.4): the candidate code table is MAP-ONLY — each
-    # bucket-assigned row computes its own 8-code array from the folded
-    # codebook literal (pq_codes_col, bit-identical argmin replay),
-    # replacing the groupBy(vec_id) pivot of the exploded assignment
-    # plus the data-scale codes⋈buckets join (two shuffles of the
-    # corpus removed; the scoring bucket join below stays the only
-    # data-scale exchange).
-    coded = assign_b.select(
+    ).select(F.col("vec_id").alias("query_id"), "bucket", F.col("vec").alias("qv"))
+    coded = ivf_nearest_buckets(centroids, vecs, "vec_id", 1).select(
         F.col("vec_id").alias("neighbor_id"),
         "bucket",
         pq_codes_col(books, "vec").alias("codes"),
     )
-    cand = (
-        probes.select("query_id", "bucket")
-        .join(F.broadcast(luts), "query_id")
-        .join(coded, "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.expr(
-                f"aggregate(sequence(0, {PQ_SUBS - 1}), 0D,"
-                f" (acc, s) -> acc + luts[s][codes[s]])"
-            ),
-            6,
-        ).alias("adc_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
-        F.col("rk") <= 5
-    )
+    return adc_top5(probes, coded, books)
 
 
 # ---------------------------------------------------------------------------

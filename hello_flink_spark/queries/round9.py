@@ -850,19 +850,19 @@ def sim_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Differences from sim_ann_ivf_pq, each with its scale shape:
     1. Residual build — one broadcast join of the C-row centroid
-       table against the assigned corpus (zip_with subtract, map-only).
+       table against the assigned corpus (zip_with subtract, map-only),
+       checkpointed lazily: the trainer's seed collect fills it, and
+       the candidate codes fold map-only over it (``pq_codes_col``).
     2. PQ training on residuals via ``pq_train_frame(seed_min=PQ_K)``:
        the coarse-centroid vectors' residuals are identically ZERO
        (x − x), the degenerate k-means init, so seeds come from the
        NEXT PQ_K vectors — still a deterministic constant-size set.
-    3. Per-(query, probed-bucket) ADC LUTs — the query's residual
-       differs per probed bucket (r_q = q − c_bucket), so the LUT
-       frame is queries × NPROBE × PQ_SUBS rows (constant-bounded by
-       PROBE_ID_MAX × IVF_NPROBE), computed map-only against the
-       folded codebook literal (round-17; pq_codebook_sql).
-    4. Scoring joins candidates to the (query, bucket) LUTs on the
-       BUCKET key — same single data-scale shuffle as the raw
-       variant; the LUT side is broadcast (constant-size).
+    3. The shared scorer ``adc_top5`` gets the query's residual per
+       probed bucket (r_q = q − c_bucket, one more broadcast of the
+       C-row table), so its per-(query, bucket) LUTs are the residual
+       LUTs (constant-bounded by PROBE_ID_MAX × IVF_NPROBE); scoring
+       joins them to the candidates on the BUCKET key, the same single
+       data-scale shuffle as the raw variant.
     R-tier like sim_ann_ivf_pq: recall floors + structural invariants
     in pytest, no SQL oracle (iterative trainer)."""
     from hello_flink_spark.queries.llm import (
@@ -873,125 +873,37 @@ def sim_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from hello_flink_spark.queries.round7 import (
         PQ_K,
-        PQ_SUBDIM,
-        PQ_SUBS,
-        pq_codebook_sql,
+        adc_top5,
+        pq_codes_col,
         pq_train_frame,
     )
 
-    from hello_flink_spark.queries.round7 import pq_codes_col
-
     centroids, vecs = ivf_centroids_and_vecs(spark, sf_dir)
-    assign_b = ivf_nearest_buckets(centroids, vecs, "vec_id", 1)
-    # 1. residuals: x - q_c(x), one broadcast join vs the C-row table.
-    # Round-18 (guide §2.4/§5): the residual frame is THE shared
-    # intermediate of this query — the trainer consumes it (exploded
-    # per subspace) and the scoring side needs (vec_id, bucket,
-    # residual) for candidate codes — so it materializes ONCE here
-    # (non-eager: the trainer's seed collect is the first action and
-    # fills it in the same job). The r17 shape recomputed the coarse
-    # assignment (embeddings scan + 16-cosine argmin fold) a second
-    # time on the candidate path and attached pivoted codes through a
-    # vec_id-keyed aggregation + data-scale join; with the residual
-    # checkpointed, candidate codes fold MAP-ONLY over it
-    # (pq_codes_col) exactly like the raw sibling — the objection that
-    # made r17 revert this rewrite (the codes branch had to REBUILD
-    # the residual frame) no longer applies. Trainer input is the same
-    # rows in the same scan partitions (its internal round-robin
-    # repartition normalizes order before hashing), so the learned
-    # codebook stays bit-identical.
-    res = (
-        assign_b.join(F.broadcast(centroids), F.col("bucket") == F.col("c_id"))
-        .select(
+
+    def residuals(side: DataFrame) -> DataFrame:
+        return side.join(F.broadcast(centroids), F.col("bucket") == F.col("c_id")).select(
+            "vec_id", "bucket", F.expr("zip_with(vec, c_vec, (a, b) -> a - b)").alias("vec")
+        )
+
+    res = residuals(ivf_nearest_buckets(centroids, vecs, "vec_id", 1)).localCheckpoint(
+        eager=False
+    )
+    books, _assigned = pq_train_frame(spark, res.select("vec_id", "vec"), seed_min=PQ_K)
+
+    probes = residuals(
+        ivf_nearest_buckets(
+            centroids,
+            vecs.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < PROBE_ID_MAX)),
             "vec_id",
-            "bucket",
-            F.expr("zip_with(vec, c_vec, (a, b) -> a - b)").alias("vec"),
+            IVF_NPROBE,
         )
-        .localCheckpoint(eager=False)
+    ).select(F.col("vec_id").alias("query_id"), "bucket", F.col("vec").alias("qv"))
+    coded = res.select(
+        F.col("vec_id").alias("neighbor_id"),
+        "bucket",
+        pq_codes_col(books, "vec").alias("codes"),
     )
-    # 2. PQ on residuals (seed_min=PQ_K: centroid residuals are zero)
-    books, _assigned = pq_train_frame(
-        spark, res.select("vec_id", "vec"), seed_min=PQ_K
-    )
-
-    probes = ivf_nearest_buckets(
-        centroids,
-        vecs.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < PROBE_ID_MAX)),
-        "vec_id",
-        IVF_NPROBE,
-    ).select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"), "bucket")
-
-    # 3. per-(query, bucket) residual LUTs via the folded codebook
-    # literal (round-17: replaces the 8-row createDataFrame +
-    # broadcast join — see pq_codebook_sql)
-    cvs_sql = pq_codebook_sql(books)
-    qsub = (
-        probes.join(F.broadcast(centroids), F.col("bucket") == F.col("c_id"))
-        .select(
-            "query_id",
-            "bucket",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {PQ_SUBS - 1}), s -> struct("
-                    f"s AS sub, slice(zip_with(q_vec, c_vec, (a, b) -> a - b),"
-                    f" s * {PQ_SUBDIM} + 1, {PQ_SUBDIM}) AS qs))"
-                )
-            ).alias("x"),
-        )
-        .select("query_id", "bucket", F.col("x.sub").alias("sub"), F.col("x.qs").alias("qs"))
-    )
-    luts = (
-        qsub.select(
-            "query_id",
-            "bucket",
-            "sub",
-            F.expr(
-                f"transform({cvs_sql}[sub], cv -> aggregate("
-                "zip_with(qs, cv, (a, b) -> (a - b) * (a - b)),"
-                " 0D, (acc, x) -> acc + x))"
-            ).alias("lut"),
-        )
-        .groupBy("query_id", "bucket")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(sub, lut))), x -> x.lut)"
-            ).alias("luts")
-        )
-    )
-
-    # 4. scoring: candidates x their bucket's per-query LUTs. Codes
-    # ride in the same map-only projection of the checkpointed
-    # residual frame that already carries the bucket (round-18) — the
-    # broadcast LUT join is the only join left on the candidate path;
-    # the window below holds the single data-scale exchange.
-    cand = (
-        res.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "bucket",
-            pq_codes_col(books, "vec").alias("codes"),
-        )
-        .join(F.broadcast(luts), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.expr(
-                f"aggregate(sequence(0, {PQ_SUBS - 1}), 0D,"
-                f" (acc, s) -> acc + luts[s][codes[s]])"
-            ),
-            6,
-        ).alias("adc_dist"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
-        F.col("rk") <= 5
-    )
+    return adc_top5(probes, coded, books)
 
 
 # ---------------------------------------------------------------------------

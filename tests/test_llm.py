@@ -295,6 +295,40 @@ def test_kmeans_inertia_monotone_and_nearest(spark, sf_dir):
             assert np.allclose(v, final_means[c], atol=1e-8)
 
 
+def test_kmeans_matches_numpy_replay(spark, sf_dir):
+    """kmeans_detail is Lloyd's algorithm exactly: a numpy replay of
+    KMEANS_ITERS steps from the same seeds (vec_ids 0..k-1), the same
+    tie-break (lowest cluster on equal dist2) and the same empty-cluster
+    rule (keep the previous centroid) gives the same last assignment,
+    the same centroids and the same inertia history to 1e-6 relative."""
+    import numpy as np
+
+    from hello_flink_spark.queries.round6 import KMEANS_ITERS, KMEANS_K, kmeans_detail
+
+    best, history, cents = kmeans_detail(spark, sf_dir)
+
+    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").toPandas()
+    X = np.array(emb["embedding"].tolist(), dtype=np.float64)
+    vec_ids = emb["vec_id"].to_numpy()
+    C = X[vec_ids < KMEANS_K].copy()
+    ref_history = []
+    for _ in range(KMEANS_ITERS):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        codes = d2.argmin(axis=1)  # ties -> lowest cluster
+        ref_history.append(d2.min(axis=1).sum())
+        for c in range(KMEANS_K):
+            if (codes == c).any():
+                C[c] = X[codes == c].mean(axis=0)
+
+    got = {r.vec_id: r.cluster for r in best.collect()}
+    assert got == dict(zip(vec_ids.tolist(), codes.tolist()))
+    assert len(history) == KMEANS_ITERS
+    for h, ref in zip(history, ref_history):
+        assert abs(h - ref) <= 1e-6 * max(1.0, ref), (history, ref_history)
+    assert [c for c, _ in cents] == list(range(KMEANS_K))
+    assert np.allclose(np.array([v for _, v in cents]), C, rtol=0, atol=1e-9)
+
+
 def test_power_iteration_invariants(spark, sf_dir):
     """Power-iteration invariants: returned loadings are unit-norm,
     the Rayleigh quotient is non-decreasing over iterations, and the

@@ -231,7 +231,6 @@ BROADCAST_HINT_OK = {
     ("llm", "probes"): "probe set capped by PROBE_ID_MAX constant",
     ("llm", "queries"): "query set capped by PROBE_ID_MAX constant",
     ("llm", "recall"): "per-query recall rows — bounded by query cap",
-    ("llm", "centroids"): "IVF centroid table — C=16 constant",
     ("llm", "cents"): "1-row collapsed IVF codebook — the same C=16 constant "
     "centroid table folded into one array row (ivf_nearest_buckets r17)",
     ("llm", "n_total"): "1-row corpus-count scalar",
@@ -254,31 +253,23 @@ BROADCAST_HINT_OK = {
     ("round6", "quota"): "1-row MIN lang-quota scalar (pipeline_training_corpus_v3)",
     ("round6", "bounds"): "1-row [min,max] hour scalar (events_hourly_gap_fill)",
     ("round6", "pctl"): "1-row [p1,p99] percentile scalar (events_value_winsorize)",
-    ("round6", "cent_df"): "k x dim centroid table — KMEANS_K constant (kmeans_detail)",
     ("jobs", "dim"): "event_type dim — bounded by type cardinality",
     ("jobs", "rules"): "broadcast-rules table — operator contract: small",
     ("joins", "dim"): "broadcast_join() helper — API contract: caller passes a bounded dim",
     ("round7", "probes"): "probe set capped by PROBE_ID_MAX constant (sim_range_search)",
-    ("round7", "cb"): "PQ codebook — PQ_SUBS x PQ_K = 128 rows by construction",
-    ("round8", "cb"): "PQ codebook frame — PQ_SUBS = 8 rows by construction (sim_ann_ivf_pq)",
+    ("round7", "luts"): "per-(query, probed-bucket) ADC lookup tables — bounded by "
+    "PROBE_ID_MAX x IVF_NPROBE x 8x16 doubles (adc_top5: sim_ann_ivf_pq and "
+    "sim_ann_ivf_pq_residual)",
     ("round8", "sz"): "1-row Bloom sizing scalar (dedup_bloom_prefilter)",
     ("round8", "tot"): "1-row bin-total scalar (events_value_psi)",
-    ("round8", "luts"): "per-query ADC lookup tables — bounded by the PROBE_ID_MAX "
-    "query cap x 8x16 doubles each (sim_ann_ivf_pq)",
     ("round9", "centroids"): "IVF coarse-centroid table — IVF_C = 16 rows by "
-    "construction (sim_ann_ivf_pq_residual: residual build + query-residual LUTs)",
-    ("round9", "cb"): "PQ codebook frame — PQ_SUBS = 8 rows by construction "
-    "(sim_ann_ivf_pq_residual)",
-    ("round9", "luts"): "per-(query, probed-bucket) residual ADC LUTs — bounded by "
-    "PROBE_ID_MAX x IVF_NPROBE x 8x16 doubles (sim_ann_ivf_pq_residual)",
+    "construction (sim_ann_ivf_pq_residual: corpus and query residuals)",
     ("round9", "marr"): "1-row merge-table array — BPE_APPLY_K = 12 elements "
     "by construction (text_bpe_apply)",
     ("round9", "nmin"): "1-row MIN lang-count scalar (data_mixture_temperature)",
     ("round9", "rates"): "per-language keep-rate table — bounded by lang "
     "cardinality (data_mixture_temperature)",
     ("round9", "tot"): "1-row kept-total scalar (data_mixture_temperature)",
-    ("round9", "mrow"): "1-row (ma, mb) merge-pair scalar per trainer "
-    "iteration (text_bpe_train_merges)",
     ("round10", "weights"): "linear-model weight table — QC_BUCKETS = 256 rows "
     "by construction (text_quality_classifier)",
     ("round10", "nmax"): "1-row MAX lang-count scalar (data_mixture_epochs)",
@@ -310,14 +301,16 @@ _PACKAGE_ASTS = None
 
 def test_broadcast_hints_are_bounded():
     """Source-level audit: every F.broadcast(...) call site in the
-    package must appear in BROADCAST_HINT_OK with a stated bound.
+    package must appear in BROADCAST_HINT_OK with a stated bound, and
+    every key there must name a site that still exists (a stale key
+    would pre-approve a new site that reuses its name).
     Guards the corpus-dependent-broadcast class (VERDICT r05 #1:
     pipeline_training_corpus_v2 / docs_near_dup_rate_by_source /
     text_tfidf_sql / text_keyword_extract all force-broadcast sets
     that grow with the corpus) from ever recurring."""
     import ast
 
-    violations = []
+    violations, used = [], set()
     for rel, stem, tree in _package_asts():
         for node in ast.walk(tree):
             if (
@@ -329,6 +322,7 @@ def test_broadcast_hints_are_bounded():
             ):
                 arg_src = ast.unparse(node.args[0]) if node.args else "<?>"
                 key = (stem, arg_src)
+                used.add(key)
                 if key not in BROADCAST_HINT_OK:
                     violations.append(f"{rel}:{node.lineno} F.broadcast({arg_src})")
     assert not violations, (
@@ -337,6 +331,8 @@ def test_broadcast_hints_are_bounded():
         "add to BROADCAST_HINT_OK, or drop the hint and let AQE decide:\n"
         + "\n".join(violations)
     )
+    stale = sorted(set(BROADCAST_HINT_OK) - used)
+    assert not stale, f"BROADCAST_HINT_OK keys no F.broadcast site uses: {stale}"
 
 
 # Driver-side materialization (.collect / .toPandas / .toLocalIterator)
@@ -351,16 +347,13 @@ COLLECT_SITES_OK = {
     # oracle gate comparator: materializes the sf0.01 verification
     # frames — harness path, bounded by the gate's own scale factor.
     ("oracle.py", "compare", "toPandas"): 1,
-    # kmeans trainer: k seed rows, 1-row inertia scalar per iteration,
-    # k x dim centroid rows.
-    ("queries/round6.py", "kmeans_detail", "collect"): 3,
     # power-iteration: dim-row vector, twice (init + per-iteration).
     ("queries/round6.py", "power_iteration_detail", "collect"): 2,
     # pagerank convergence check: 1-row L1-residual scalar per iteration.
     ("queries/round6b.py", "pagerank_detail", "collect"): 1,
-    # PQ trainer: k x dim codebook rows per subspace (constant), twice
-    # (init + refined).
-    ("queries/round7.py", "pq_train_frame", "collect"): 2,
+    # Lloyd trainer (k-means and PQ): the subs x k seed rows, then one
+    # subs x k row aggregate per iteration (codes' means and err2 sums).
+    ("queries/round7.py", "lloyd_train", "collect"): 2,
     # connected components: the entry edge set's LIMIT-bounded probe,
     # at most HOT_BROADCAST_MAX + 1 rows (the anti_join_bounded protocol).
     ("operators/graph.py", "connected_components", "collect"): 1,
@@ -479,7 +472,9 @@ def test_no_scale_killer_in_plan(spark, name):
 # the first four read 24 (dedup_cluster), 3 (flagship_shipping_priority,
 # one schema inference per table), 1 and 6; before the near-dup driver
 # finishes (shingle overlap, min-rep dedup) dedup_cluster read 12 and
-# the other five 5, 6, 5, 5 and 6.
+# the other five 5, 6, 5, 5 and 6. The vector tier's four read 28
+# (embeddings_kmeans), 10, 10 and 13 before k-means moved onto the
+# shared Lloyd trainer: one seed job, then one aggregate per iteration.
 # ---------------------------------------------------------------------------
 
 BUILD_JOB_CEILING = {
@@ -491,6 +486,10 @@ BUILD_JOB_CEILING = {
     "dedup_containment": 1,
     "multimodal_audio_dedup_fingerprint": 3,
     "multimodal_video_dedup_framehash": 4,
+    "embeddings_kmeans": 8,
+    "agg_pq_quantize": 10,
+    "sim_ann_ivf_pq": 10,
+    "sim_ann_ivf_pq_residual": 13,
 }
 
 

@@ -1175,6 +1175,60 @@ def test_held_rows_survive_restart(spark, sf_dir, tmp_path, op):
         assert len(keys) == len(set(keys)), "a row emitted twice across the restart"
 
 
+# append-mode on-arrival key-group operators whose per-user state stays
+# open between emissions: (operator, per-user key unique among its rows,
+# SQL over the state store row that is true when some user's state is
+# open at the cut — ``cut_us`` is the cut in epoch microseconds)
+OPEN_STATE_OPS = {
+    "count_window": (
+        stateful.count_window_stream,
+        ("user_id", "chunk"),
+        "exists(value.groupState.buf_cnt, n -> n > 0)",
+    ),
+    "global_count_trigger": (
+        stateful.global_count_trigger_stream,
+        ("user_id", "fire_at"),
+        f"exists(value.groupState.cnt, n -> n % {stateful.GLOBAL_TRIGGER_EVERY} <> 0)",
+    ),
+    "inactivity": (
+        lambda s: stateful.inactivity_alerts(s, WM),
+        ("user_id", "last_seen"),
+        f"exists(value.groupState.last_us, t -> t + {stateful.INACTIVITY_US} > {{cut_us}})",
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(OPEN_STATE_OPS))
+def test_open_state_survives_restart(spark, sf_dir, tmp_path, op):
+    """An on-arrival operator's open per-user state survives a restart:
+    stopped at the middle of the stream with state open (a partial
+    count window, a count between triggers, an idle deadline after the
+    cut — read back from the checkpoint's state store), then restarted
+    on the same checkpoint, its emissions over both sessions equal, as
+    a multiset, one uninterrupted session over the same two
+    micro-batches, and no row is emitted twice."""
+    from collections import Counter
+
+    fn, key, open_sql = OPEN_STATE_OPS[op]
+    events = load_table(spark, sf_dir, "events")
+    lo, hi = events.agg(F.min("ts"), F.max("ts")).head()
+    cut = lo + (hi - lo) / 2
+    cut_us = spark.range(1).select(F.unix_micros(F.lit(cut))).head()[0]
+    is_open = []
+
+    def read_open(ckpt):
+        state = spark.read.format("statestore").load(ckpt)
+        is_open.append(state.selectExpr(f"bool_or({open_sql.format(cut_us=cut_us)})").head()[0])
+
+    got = _run_across_restart(spark, tmp_path / "restart", fn, events, cut, between=read_open)
+    want = _run_across_restart(spark, tmp_path / "whole", fn, events, cut, restart=False)
+    assert is_open == [True], "no user's state was open at the cut"
+    assert want, "the uninterrupted run emitted nothing"
+    assert Counter(got) == Counter(want)
+    keys = [tuple(r[c] for c in key) for r in got]
+    assert len(keys) == len(set(keys)), "a row emitted twice across the restart"
+
+
 def test_count_window_evictor_recovers_across_restart(spark, sf_dir, tmp_path):
     """count_window_evictor_stream's key-group state (each user's
     count and ring of kept values) survives a restart: over two
